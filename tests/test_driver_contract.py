@@ -28,26 +28,34 @@ def test_queries_and_oracles_are_pure_builders():
     )
 
 
-def test_deployment_zip_is_fresh():
-    """The spark-submit artifact must contain every current package
-    module WITH current content — a stale zip silently deploys old code
-    (regenerate with `python tools/make_pyfiles.py`).  CRC comparison
-    catches edited-but-not-repackaged modules, not just missing ones."""
+def test_deployment_zip_is_fresh(tmp_path):
+    """The spark-submit artifact built by `tools/make_pyfiles.py` must
+    contain every current package module WITH current content — a
+    packager that skips or mangles a module silently deploys old code.
+    The zip is built fresh here, so the test needs no untracked build
+    output.  CRC comparison catches altered modules, not just missing
+    ones."""
     import os
     import pathlib
+    import subprocess
+    import sys
     import zipfile
     import zlib
 
     repo = pathlib.Path(__file__).resolve().parent.parent
-    with zipfile.ZipFile(repo / "wceb_spark.zip") as zf:
+    out = tmp_path / "w.zip"
+    subprocess.run(
+        [sys.executable, str(repo / "tools" / "make_pyfiles.py"), str(out)],
+        check=True, capture_output=True,
+    )
+    with zipfile.ZipFile(out) as zf:
         crcs = {info.filename: info.CRC for info in zf.infolist()}
     pkg = repo / "web_content_extraction_benchmark_spark"
     for path in pkg.rglob("*.py"):
         rel = os.path.relpath(path, repo)
-        assert rel in crcs, f"stale wceb_spark.zip: missing {rel}"
+        assert rel in crcs, f"deployment zip misses {rel}"
         assert zlib.crc32(path.read_bytes()) == crcs[rel], (
-            f"stale wceb_spark.zip: outdated {rel} "
-            "(run python tools/make_pyfiles.py)"
+            f"deployment zip holds a different {rel}"
         )
 
 

@@ -130,3 +130,12 @@ def test_fuzz_pdf_arm_roundtrip_and_corruption():
             pass
         except RecursionError:
             pytest.fail(f"recursion blowup at case {case}")
+    # Trailing whitespace or a trailing comment at end of input must end
+    # the token stream, not backtrack into a phantom token.
+    lex = P._Lexer(b"ET\n")
+    toks = []
+    while (tok := lex.next_token()) is not None:
+        toks.append(tok)
+    assert toks == ["ET"]
+    for content in (b"BT (hi) Tj ET\n% c'", b"BT (hi) Tj ET\n% c ("):
+        assert [r.text for r in P.interpret_text(content)] == ["hi"]

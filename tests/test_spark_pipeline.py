@@ -76,9 +76,29 @@ def test_extraction_deterministic_across_partitionings(spark, sf_dir):
 
 def test_lineage_sidecar_accounts_every_page(spark, pages):
     n_pages = pages.count()
+    models = ["main_content", "plain"]
     answers, lineage = extract_answers(
-        pages, ["main_content", "plain"], snapshot_id=7, with_lineage=True
+        pages, models, snapshot_id=7, with_lineage=True
     )
+    # the lineage mode answers are the plain-mode answers, row for row
+    got = sorted(answers.collect())
+    assert got == sorted(extract_answers(pages, models).collect())
+    # per model, the lineage sums account for exactly these answers
+    expected = {
+        m: (sum(1 for r in got if r.model == m and r.plaintext),
+            sum(1 for r in got if r.model == m and r.error),
+            sum(r.block_count for r in got if r.model == m))
+        for m in models
+    }
+    sums = {
+        r.model: (r.docs_out, r.errors, r.block_count)
+        for r in lineage.groupBy("model").agg(
+            F.sum("docs_out").alias("docs_out"),
+            F.sum("errors").alias("errors"),
+            F.sum("block_count").alias("block_count"),
+        ).collect()
+    }
+    assert sums == expected
     totals = {
         r.model: r.total
         for r in lineage.groupBy("model").agg(

@@ -58,7 +58,7 @@ def main() -> None:
     # lineage row per (partition, model) (kind=1) in the same stream; a
     # single two-row aggregate consumes both, so nothing is ever
     # materialized and the skew profile costs no extra pass.
-    combined = pages.select("url", "html").mapInPandas(
+    combined = pages.select("url", "html").mapInArrow(
         _run_extractors(["main_content"], snapshot_id=0),
         schema=_COMBINED_SCHEMA,
     )

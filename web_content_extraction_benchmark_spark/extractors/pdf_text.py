@@ -93,6 +93,10 @@ _DELIM = frozenset(b"()<>[]{}/%")
 # same byte runs; token branches that re-lex from the token start
 # (literal/hex strings, #-escaped names) use m.start(m.lastindex) — the
 # GROUP start — because m.start() now points at the skipped ws.
+# The trailing ``eof`` alternative stops the prefix from backtracking at
+# end of input: without it, trailing ws or a trailing comment gives back
+# its last byte to ``other`` (or a ``(`` inside the comment to ``lit``)
+# and lexes a phantom token.
 _MASTER_RE = re.compile(
     rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"
     rb"(?:(?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+))"
@@ -101,7 +105,8 @@ _MASTER_RE = re.compile(
     rb"|(?P<kw>[^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"
     rb"|(?P<lit>\()"
     rb"|(?P<hex><)"
-    rb"|(?P<other>.))",
+    rb"|(?P<other>.)"
+    rb"|(?P<eof>\Z))",
     re.DOTALL,
 )
 
@@ -247,6 +252,8 @@ class _Lexer:
         if kind == "hex":
             self.pos = m.start(idx)
             return self._hex_string()
+        if kind == "eof":
+            return None
         # delim ('<<' '>>' '[' ']' '{' '}') or a stray byte
         return m.group(idx).decode("latin-1")
 

@@ -32,7 +32,6 @@ use PROD_NUM_HASHES/PROD_BANDS (128/16 -> r=8, S-curve midpoint
 from __future__ import annotations
 
 import math
-import os
 import warnings
 
 import numpy as np
@@ -717,10 +716,8 @@ def release_local_checkpoint(df: DataFrame) -> None:
 # collect is BOUNDED by this threshold (~16 B/edge -> a few MB), the
 # same bounded-driver-materialization pattern as the IVF codebook and
 # the bloom bitmap.  Web-scale pair sets exceed it and take the
-# distributed path unchanged.  Tunable for clusters via env.
-CC_LOCAL_EDGE_THRESHOLD = int(
-    os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "200000")
-)
+# distributed path unchanged.
+CC_LOCAL_EDGE_THRESHOLD = 200_000
 
 
 def _components_union_find(edge_rows) -> dict:
@@ -756,10 +753,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     member id — the canonical representative.  Ids may be any orderable
     type (long doc ids, url strings, ...).
 
-    Edge sets at or below ``CC_LOCAL_EDGE_THRESHOLD`` (default 200k,
-    env ``SPARK_GRAFT_CC_LOCAL_EDGES``) resolve on the driver with
-    min-label union-find — bit-identical output, none of the per-round
-    distributed overhead (r9).  Larger graphs take the loop below.
+    Edge sets at or below ``CC_LOCAL_EDGE_THRESHOLD`` (200k) resolve
+    on the driver with min-label union-find — bit-identical output,
+    none of the per-round distributed overhead.  Larger graphs
+    take the loop below.
 
     Min-label propagation with POINTER JUMPING: every node starts
     labeled with itself; each round labels flow across edges AND each

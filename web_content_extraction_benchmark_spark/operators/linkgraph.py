@@ -44,8 +44,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -74,9 +72,7 @@ INIT_MICRO = 1_000_000  # rank_0
 # driver (exact same integer arithmetic) instead of paying 2 shuffles +
 # a plan analysis per PageRank round — the bounded-collect pattern of
 # connected_components' union-find fast path (~50 B/edge, a few MB).
-PR_LOCAL_EDGE_THRESHOLD = int(
-    os.environ.get("SPARK_GRAFT_PR_LOCAL_EDGES", "100000")
-)
+PR_LOCAL_EDGE_THRESHOLD = 100_000
 
 
 def _host_of(url: Column) -> Column:

@@ -3,9 +3,10 @@
 Replaces the reference's (model x dataset) spawn-Pool fan-out
 (/root/reference/src/extraction_benchmark/extract.py:139-157) with:
 
-    pages --salted repartition--> mapInPandas(decode once, run all
-    extractors per batch) --> answers (+ per-partition lineage sidecar)
-    --> join truth --> score UDFs --> groupBy aggregations
+    pages --salted repartition--> mapInArrow(decode once, run all
+    extractors per batch; answer rows + per-partition lineage rows)
+    --> answers (+ lineage sidecar) --> join truth --> score UDFs
+    --> groupBy aggregations
 
 Scale notes (100 TB / 1000 executors):
 - one decode per page feeds *all* extractors (the reference re-reads and
@@ -95,94 +96,30 @@ def repartition_salted(pages: DataFrame, num_partitions: int,
 
 
 def _run_extractors(models: list[str], snapshot_id: int):
-    fns = {m: EXTRACTORS[m] for m in models}
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        partition_id = TaskContext.get().partitionId()
-        stats = {
-            m: {"docs_in": 0, "docs_out": 0, "errors": 0, "blocks": 0,
-                "bytes_in": 0, "wall_ns": 0}
-            for m in models
-        }
-        needs_tree = any(m in TREE_EXTRACTORS for m in fns)
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("url", "model", "plaintext", "block_count", "error")}
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                n_bytes = len(blob) if blob is not None else 0
-                html = decode_html(blob)
-                try:
-                    root = parse_html(html) if needs_tree else None
-                except Exception:
-                    root = None
-                for model in fns:
-                    st = stats[model]
-                    st["docs_in"] += 1
-                    st["bytes_in"] += n_bytes
-                    started = time.perf_counter_ns()
-                    blocks = 0
-                    try:
-                        text, blocks = _extract_one(model, html, root)
-                        error = False
-                    except Exception:
-                        text = ""
-                        error = True
-                        st["errors"] += 1
-                    st["wall_ns"] += time.perf_counter_ns() - started
-                    if text:
-                        st["docs_out"] += 1
-                    st["blocks"] += blocks
-                    out["url"].append(url)
-                    out["model"].append(model)
-                    out["plaintext"].append(text)
-                    out["block_count"].append(blocks)
-                    out["error"].append(error)
-            frame = pd.DataFrame(out)
-            frame.insert(0, "kind", 0)
-            for name in ("snapshot_id", "partition_id", "extractor_version",
-                         "docs_in", "docs_out", "errors", "bytes_in",
-                         "wall_ms"):
-                frame[name] = None
-            yield frame
-        # Per-partition lineage sidecar rows (north_rule).
-        lineage = {
-            "kind": [], "url": [], "model": [], "plaintext": [],
-            "block_count": [], "error": [], "snapshot_id": [],
-            "partition_id": [], "extractor_version": [], "docs_in": [],
-            "docs_out": [], "errors": [], "bytes_in": [], "wall_ms": [],
-        }
-        for model, st in stats.items():
-            lineage["kind"].append(1)
-            lineage["url"].append("")
-            lineage["model"].append(model)
-            lineage["plaintext"].append("")
-            lineage["block_count"].append(st["blocks"])
-            lineage["error"].append(False)
-            lineage["snapshot_id"].append(snapshot_id)
-            lineage["partition_id"].append(partition_id)
-            lineage["extractor_version"].append(EXTRACTOR_VERSION)
-            lineage["docs_in"].append(st["docs_in"])
-            lineage["docs_out"].append(st["docs_out"])
-            lineage["errors"].append(st["errors"])
-            lineage["bytes_in"].append(st["bytes_in"])
-            lineage["wall_ms"].append(st["wall_ns"] // 1_000_000)
-        yield pd.DataFrame(lineage)
-
-    return run
-
-
-def _run_extractors_arrow(models: list[str]):
-    """Raw-Arrow extraction kernel (answers only): skips the pandas
-    DataFrame layer entirely — measured ~15% faster and scaling closer to
-    the machine's multiprocessing ceiling than the pandas path."""
-    fns = {m: EXTRACTORS[m] for m in models}
+    """The raw-Arrow extraction kernel behind `extract_answers`: skips the
+    pandas DataFrame layer (measured ~15% faster, and closer to the
+    machine's multiprocessing ceiling, than a pandas kernel).  Emits
+    ``_COMBINED_SCHEMA`` batches: one ``kind=0`` answer row per (page,
+    model), its lineage columns null, then, at the end of the partition,
+    one ``kind=1`` lineage row per model (north_rule)."""
+    names = list(dict.fromkeys(models))
+    for model in names:  # fail at plan-build time, not inside tasks
+        EXTRACTORS[model]
 
     def run(batches):
         import pyarrow as pa
+        from pyspark import TaskContext
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        needs_tree = any(m in TREE_EXTRACTORS for m in fns)
+        schema = to_arrow_schema(_COMBINED_SCHEMA)
+        lineage_types = schema.types[1 + len(ANSWERS_SCHEMA.fields):]
+        partition_id = TaskContext.get().partitionId()
+        needs_tree = any(m in TREE_EXTRACTORS for m in names)
+        docs_in = bytes_in = 0
+        docs_out = [0] * len(names)
+        errors = [0] * len(names)
+        block_sums = [0] * len(names)
+        wall_ns = [0] * len(names)
         for batch in batches:
             urls = batch.column("url").to_pylist()
             blobs = batch.column("html").to_pylist()
@@ -192,12 +129,14 @@ def _run_extractors_arrow(models: list[str]):
             out_blocks: list[int] = []
             out_error: list[bool] = []
             for url, blob in zip(urls, blobs):
+                bytes_in += len(blob) if blob is not None else 0
                 html = decode_html(blob)
                 try:
                     root = parse_html(html) if needs_tree else None
                 except Exception:
                     root = None
-                for model in fns:
+                for i, model in enumerate(names):
+                    started = time.perf_counter_ns()
                     try:
                         text, blocks = _extract_one(model, html, root)
                         error = False
@@ -205,21 +144,50 @@ def _run_extractors_arrow(models: list[str]):
                         text = ""
                         blocks = 0
                         error = True
+                        errors[i] += 1
+                    wall_ns[i] += time.perf_counter_ns() - started
+                    if text:
+                        docs_out[i] += 1
+                    block_sums[i] += blocks
                     out_url.append(url)
                     out_model.append(model)
                     out_text.append(text)
                     out_blocks.append(blocks)
                     out_error.append(error)
+            docs_in += len(urls)
+            n = len(out_url)
             yield pa.RecordBatch.from_arrays(
                 [
+                    pa.repeat(pa.scalar(0, pa.int32()), n),
                     pa.array(out_url, type=pa.string()),
                     pa.array(out_model, type=pa.string()),
                     pa.array(out_text, type=pa.string()),
                     pa.array(out_blocks, type=pa.int32()),
                     pa.array(out_error, type=pa.bool_()),
-                ],
-                names=["url", "model", "plaintext", "block_count", "error"],
+                ]
+                + [pa.nulls(n, t) for t in lineage_types],
+                schema=schema,
             )
+        k = len(names)
+        yield pa.RecordBatch.from_pydict(
+            {
+                "kind": [1] * k,
+                "url": [""] * k,
+                "model": names,
+                "plaintext": [""] * k,
+                "block_count": block_sums,
+                "error": [False] * k,
+                "snapshot_id": [snapshot_id] * k,
+                "partition_id": [partition_id] * k,
+                "extractor_version": [EXTRACTOR_VERSION] * k,
+                "docs_in": [docs_in] * k,
+                "docs_out": docs_out,
+                "errors": errors,
+                "bytes_in": [bytes_in] * k,
+                "wall_ms": [ns // 1_000_000 for ns in wall_ns],
+            },
+            schema=schema,
+        )
 
     return run
 
@@ -232,27 +200,31 @@ def extract_answers(
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """pages -> answers table (url, model, plaintext, block_count, error).
 
-    Decodes each page once and runs every requested extractor on it inside
-    a single Arrow batch pass.  With ``with_lineage=True`` returns
-    ``(answers, lineage)``; both sides are filters over one combined
-    frame, which is PERSISTED here so consuming answers and then lineage
-    runs the expensive extraction kernel ONCE (and the lineage wall-time
-    stats describe the same execution the answers came from).  The cache
-    is released by Spark's context cleaner once both frames are garbage
+    Decodes each page once and runs every requested extractor on it
+    inside one raw-Arrow kernel (`_run_extractors`), which always emits
+    answer rows plus per-partition lineage rows in one stream; both
+    modes run that same kernel and split its output with a filter.
+    Without lineage the answers are the ``kind=0`` rows, nothing is
+    persisted.  With ``with_lineage=True`` returns ``(answers,
+    lineage)``; both sides are filters over the combined frame, which is
+    PERSISTED here so consuming answers and then lineage runs the
+    expensive extraction kernel ONCE (and the lineage wall-time stats
+    describe the same execution the answers came from).  The cache is
+    released by Spark's context cleaner once both frames are garbage
     collected; callers wanting explicit control can ``unpersist`` via
     either frame's lineage.
     """
     models = models or list(EXTRACTORS)
-    if not with_lineage:
-        return pages.select("url", "html").mapInArrow(
-            _run_extractors_arrow(models), schema=ANSWERS_SCHEMA
-        )
-    combined = pages.select("url", "html").mapInPandas(
+    combined = pages.select("url", "html").mapInArrow(
         _run_extractors(models, snapshot_id), schema=_COMBINED_SCHEMA
-    ).persist()
-    answers = combined.filter(F.col("kind") == 0).select(
-        *[f.name for f in ANSWERS_SCHEMA.fields]
     )
+    if with_lineage:
+        combined = combined.persist()
+    answers = combined.filter(F.col("kind") == 0).select(
+        *ANSWERS_SCHEMA.fieldNames()
+    )
+    if not with_lineage:
+        return answers
     lineage = combined.filter(F.col("kind") == 1).select(
         "snapshot_id", "partition_id", "model",
         "extractor_version", "docs_in", "docs_out", "errors",

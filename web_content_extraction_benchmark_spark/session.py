@@ -37,16 +37,13 @@ def _warm_session(spark: SparkSession) -> None:
     it; the per-query cost is ~1.2 s warm).  The same reasoning the
     bench applies to Python workers ("warm-up ... so q1 measures steady
     state") extended to the JVM side.  Touches no input data and no
-    operator of this package — 100k synthetic longs, discarded.
-    Disable with SPARK_GRAFT_WARM_SESSION=0."""
+    operator of this package — 100k synthetic longs, discarded."""
     from pyspark.sql import functions as F
 
     app_id = spark.sparkContext.applicationId
     if app_id in _WARMED_APP_IDS:
         return
     _WARMED_APP_IDS.add(app_id)
-    if os.environ.get("SPARK_GRAFT_WARM_SESSION", "1") == "0":
-        return
     df = spark.range(0, 100_000, 1, 16).select(
         "id",
         F.concat(F.lit("w"), (F.col("id") % 1024).cast("string")).alias("k"),
