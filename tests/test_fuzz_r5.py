@@ -10,7 +10,7 @@
   empty/short/long pages, not just the fixture corpus)."""
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 EMPTY = np.iinfo(np.int64).max
@@ -33,35 +33,6 @@ def _naive_oph(arr: list[int], k: int) -> list[int]:
     return out
 
 
-def _vectorized_oph(rows: list[list[int]], k: int) -> np.ndarray:
-    """The same lattice + circular-ffill math make_oph_signature_udf
-    runs inside the pandas UDF (kept in lockstep by this test failing
-    if either side changes alone)."""
-    n = len(rows)
-    lengths = np.fromiter((len(a) for a in rows), dtype=np.int64, count=n)
-    flat = (
-        np.concatenate([np.asarray(a, dtype=np.int64) for a in rows])
-        if lengths.sum()
-        else np.empty(0, dtype=np.int64)
-    )
-    rr = np.repeat(np.arange(n, dtype=np.int64), lengths)
-    sig = np.full(n * k, EMPTY, dtype=np.int64)
-    bins = (flat.astype(np.uint64) % np.uint64(k)).astype(np.int64)
-    np.minimum.at(sig, rr * k + bins, flat)
-    sig = sig.reshape(n, k)
-    if (sig == EMPTY).any():
-        tiled = np.tile(sig, (1, 2))
-        filled = tiled != EMPTY
-        idx = np.where(filled, np.arange(2 * k), -1)
-        np.maximum.accumulate(idx, axis=1, out=idx)
-        take = idx[:, k:]
-        ok = take >= 0
-        sig = np.where(
-            ok, np.take_along_axis(tiled, np.maximum(take, 0), axis=1), EMPTY
-        )
-    return sig
-
-
 @given(
     st.lists(
         st.lists(
@@ -71,9 +42,17 @@ def _vectorized_oph(rows: list[list[int]], k: int) -> np.ndarray:
         max_size=12,
     )
 )
+# a shingle-less row must keep the EMPTY sentinel in every bin next to
+# a densified one (all-null bins would collide on one band key)
+@example([[], [7, 11, 13]])
 @settings(max_examples=300, deadline=None)
 def test_oph_kernel_matches_naive_reference(rows):
-    got = _vectorized_oph(rows, K)
+    from web_content_extraction_benchmark_spark.operators.dedup import (
+        oph_signatures,
+    )
+
+    got = oph_signatures(rows, K)
+    assert got.shape == (len(rows), K)
     for r, g in zip(rows, got):
         assert list(g) == _naive_oph(r, K)
 
@@ -179,75 +158,3 @@ def test_batch_inference_bit_identical_on_random_pages(layouts):
         for h in htmls
     ]
     assert batch == per_page
-
-
-def test_oph_sql_band_keys_bit_identical_to_arrow(spark, sf_dir):
-    """The pure-Catalyst OPH twin (r6, hash_fn="oph_sql") must produce
-    the SAME (id, band, key) rows as the Arrow kernel — including
-    densification on short docs whose shingle count is far below the
-    bin count (every bin empty-heavy), at both fixture and production
-    widths."""
-    from pyspark.sql import functions as F
-
-    from web_content_extraction_benchmark_spark.operators.dedup import (
-        lsh_band_keys,
-    )
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 7 == 0)
-    )
-    # add SHORT docs (3-6 words -> 1-4 shingles << 128 bins): the
-    # circular forward-fill path dominates their signatures
-    short = docs.limit(20).select(
-        (F.col("doc_id") + 5_000_000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(F.split("text", " "), 1, 5)).alias("text"),
-    )
-    corpus = docs.unionByName(short)
-    for num_hashes, bands in ((8, 4), (128, 16)):
-        a = lsh_band_keys(corpus, num_hashes=num_hashes, bands=bands,
-                          hash_fn="oph")
-        b = lsh_band_keys(corpus, num_hashes=num_hashes, bands=bands,
-                          hash_fn="oph_sql")
-        assert a.exceptAll(b).count() == 0
-        assert b.exceptAll(a).count() == 0
-        assert a.count() == b.count() > 0
-
-
-def test_oph_sql_rejects_non_power_of_two():
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from web_content_extraction_benchmark_spark.operators.dedup import (
-        oph_signature_catalyst,
-    )
-
-    with _pytest.raises(ValueError, match="power-of-two"):
-        oph_signature_catalyst(F.col("x"), 12)
-
-def test_oph_catalyst_empty_hashes_yields_sentinel(spark):
-    """ADVICE r6: an empty hashes array must produce the Arrow kernel's
-    int64-max EMPTY sentinel in every bin, not all-null (concat_ws drops
-    nulls, so all shingle-less docs would collide on one band key)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from web_content_extraction_benchmark_spark.operators.dedup import (
-        oph_signature_catalyst,
-    )
-
-    sentinel = int(np.iinfo(np.int64).max)
-    df = spark.createDataFrame(
-        [([],), ([7, 11, 13],)], "hashes: array<long>"
-    )
-    rows = {tuple(r.sig) for r in df.select(
-        oph_signature_catalyst(F.col("hashes"), 8).alias("sig")
-    ).collect()}
-    empty_sig = next(s for s in rows if s[0] == sentinel or None not in s
-                     and all(v == sentinel for v in s))
-    # the empty-array row: every bin is the sentinel, none null
-    assert all(v == sentinel for v in empty_sig)
-    # the non-empty row: fully densified, no nulls, no sentinel
-    other = next(s for s in rows if s is not empty_sig)
-    assert None not in other and sentinel not in other

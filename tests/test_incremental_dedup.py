@@ -180,6 +180,31 @@ def test_meta_lifecycle_guards(spark, index_path):
         NearDupIndex.open(index_path, fresh_defaults={"hash_fn": "oph"})
 
 
+def test_unknown_hash_fn_raises(spark, index_path):
+    """A misspelled or retired hash_fn must raise, not silently fall
+    through to the md5 band keys — both on the LSH entry point and on
+    an index, including one whose stored meta names the retired value."""
+    import json
+
+    from web_content_extraction_benchmark_spark.operators.dedup import (
+        lsh_band_keys,
+    )
+
+    docs = spark.createDataFrame([(1, "alpha beta gamma delta")],
+                                 "doc_id long, text string")
+    for bad in ("xxhash", "oph_sql"):
+        with pytest.raises(ValueError, match="unknown hash_fn"):
+            lsh_band_keys(docs, hash_fn=bad)
+        with pytest.raises(ValueError, match="unknown hash_fn"):
+            NearDupIndex(index_path, hash_fn=bad)
+    meta = NearDupIndex(index_path, hash_fn="oph")._meta()
+    meta["hash_fn"] = "oph_sql"
+    with open(NearDupIndex.meta_path(index_path), "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="unknown hash_fn 'oph_sql'"):
+        NearDupIndex.open(index_path)
+
+
 # -- round 7: bucketed store layout, writer lock, multi-batch fuzz ------
 
 

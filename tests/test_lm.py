@@ -81,27 +81,30 @@ def test_in_distribution_scores_higher(spark, sf_dir):
     assert real > shuffled + 5_000
 
 
-def test_lm_kernel_equals_join_plan(spark, sf_dir):
-    """r9: the Arrow-kernel lm_score and the pure-JVM broadcast-join
-    twin must return bit-identical rows (incl. the no-bigram and NULL
-    exclusions and the empty-token bigrams of multi-space text)."""
-    from pyspark.sql import functions as F
-
-    from web_content_extraction_benchmark_spark.operators.lm import (
-        lm_score,
-        lm_score_join,
+def test_lm_kernel_equals_duckdb_mirror(spark, sf_dir):
+    """The Arrow-kernel lm_score and the engine-independent DuckDB
+    mirror lm_score_sql must return bit-identical rows (incl. the
+    no-bigram and NULL exclusions and the empty-token bigrams of
+    multi-space text)."""
+    hand = [(1, "the cat sat"), (2, "x"), (3, None), (4, ""), (5, "a  b")]
+    docs = [
+        tuple(r) for r in spark.read.parquet(
+            f"{sf_dir}/documents.parquet"
+        ).select("doc_id", "text").limit(300).collect()
+    ]
+    assert len(docs) == 300
+    con = duckdb.connect()
+    for rows in (hand, docs):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {tuple(r) for r in lm_score(df).collect()}
+        con.execute("CREATE OR REPLACE TABLE d(doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO d VALUES (?,?)", rows)
+        want = set(con.execute(
+            lm_score_sql("SELECT doc_id, text FROM d")).fetchall())
+        assert got == want and got
+    # schema (nullability included — the oracle row hashes it)
+    schema = lm_score(df).schema
+    assert schema.simpleString() == (
+        "struct<id:bigint,lm_score_micro:bigint,lm_bigrams:int>"
     )
-
-    hand = spark.createDataFrame(
-        [(1, "the cat sat"), (2, "x"), (3, None), (4, ""), (5, "a  b")],
-        "doc_id long, text string",
-    )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    ).limit(300)
-    for df in (hand, docs):
-        a = {tuple(r) for r in lm_score(df).collect()}
-        b = {tuple(r) for r in lm_score_join(df).collect()}
-        assert a == b and a
-    # schema parity (nullability included — the oracle row hashes it)
-    assert lm_score(hand).schema == lm_score_join(hand).schema
+    assert [f.nullable for f in schema] == [True, True, False]

@@ -878,77 +878,6 @@ def test_decontamination_matches_duckdb_and_plan(spark, docs):
     assert len(gram_exchanges) <= 1, gram_exchanges
 
 
-def test_bloom_decontamination_equals_exact(spark, docs):
-    """contaminated_ids_bloom (r6): the Bloom path — bit positions
-    JVM-side, numpy bitmap build/probe, exact re-verify on survivors —
-    must return EXACTLY the broadcast-join result at any fpp (false
-    positives are verified away), including a tight bitmap where
-    collisions are common."""
-    from web_content_extraction_benchmark_spark.operators.dedup import (
-        contaminated_ids,
-        contaminated_ids_bloom,
-    )
-
-    corpus = docs.select("doc_id", "text")
-    words = F.split(F.col("text"), " ")
-    bench = corpus.filter(F.col("doc_id") % 25 == 0).select(
-        F.concat_ws(" ", F.slice(words, 3, 9)).alias("text")
-    )
-    want = {r.doc_id for r in contaminated_ids(corpus, bench).collect()}
-    for fpp in (0.01, 0.5):  # 0.5 = deliberately collision-heavy bitmap
-        got = {
-            r.doc_id
-            for r in contaminated_ids_bloom(
-                corpus, bench, fpp=fpp
-            ).collect()
-        }
-        assert got == want, fpp
-    assert want  # the planted leaks make the comparison non-trivial
-
-
-def test_bloom_underestimated_expected_grams_warns_stays_exact(spark, docs):
-    """Verdict r6 #5: expected_grams skips the sizing count — an
-    under-estimate (> 2x off) must WARN (effective fpp silently
-    inflated) while the output stays exact; a sane estimate must not
-    warn."""
-    import warnings as _warnings
-
-    from web_content_extraction_benchmark_spark.operators.dedup import (
-        contaminated_ids,
-        contaminated_ids_bloom,
-    )
-
-    corpus = docs.select("doc_id", "text")
-    words = F.split(F.col("text"), " ")
-    bench = corpus.filter(F.col("doc_id") % 25 == 0).select(
-        F.concat_ws(" ", F.slice(words, 3, 9)).alias("text")
-    )
-    want = {r.doc_id for r in contaminated_ids(corpus, bench).collect()}
-
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        got = {
-            r.doc_id
-            for r in contaminated_ids_bloom(
-                corpus, bench, expected_grams=2  # wildly low
-            ).collect()
-        }
-    assert got == want
-    msgs = [w for w in caught if "expected_grams=2 " in str(w.message)]
-    assert msgs and issubclass(msgs[0].category, RuntimeWarning)
-
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        got = {
-            r.doc_id
-            for r in contaminated_ids_bloom(
-                corpus, bench, expected_grams=10_000_000  # generous
-            ).collect()
-        }
-    assert got == want
-    assert not [w for w in caught if "expected_grams" in str(w.message)]
-
-
 def test_ivf_tune_n_probe_picks_smallest_meeting_target(spark, sf_dir):
     """ivf_tune_n_probe: the measured curve is non-decreasing in
     n_probe, the returned n_probe is the FIRST grid value meeting

@@ -258,23 +258,6 @@ def test_drop_exact_duplicates_keys_only_plan(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_oph_sql_band_keys_pure_catalyst(spark, sf_dir):
-    """The r6 Catalyst OPH twin must stay entirely JVM-side: no Python
-    eval node and no shuffle anywhere in the signature+banding plan."""
-    from web_content_extraction_benchmark_spark.operators.dedup import (
-        lsh_band_keys,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    plan = _plan(
-        lsh_band_keys(docs, num_hashes=128, bands=16, hash_fn="oph_sql")
-    )
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "Exchange" not in plan
-
-
 def test_incremental_candidates_store_side_not_shuffled(
     spark, sf_dir, tmp_path
 ):

@@ -361,18 +361,6 @@ def main() -> None:
             ),
         ),
         (
-            "OPH signatures, pure-Catalyst twin (oph_sql, r6)",
-            "NO Python eval node anywhere — the whole 128-wide "
-            "signature (bin-mask filter/min + circular ffill aggregate) "
-            "and banding stay JVM-side",
-            __import__(
-                "web_content_extraction_benchmark_spark.operators.dedup",
-                fromlist=["lsh_band_keys"],
-            ).lsh_band_keys(
-                docs, num_hashes=128, bands=16, hash_fn="oph_sql"
-            ),
-        ),
-        (
             "incremental near-dup candidates vs a committed store (r6)",
             "the STORED band scan feeds BroadcastHashJoins built from "
             "the NEW batch (its distinct-keys shuffle is the only band "
@@ -387,19 +375,6 @@ def main() -> None:
             "lineage; the committed store still streams through "
             "BroadcastHashJoins with no Exchange of its own",
             _embedding_candidates_plan(spark, emb),
-        ),
-        (
-            "bloom decontamination probe + exact verify (r6)",
-            "ONE ArrowEvalPython probe over the broadcast bitmap on the "
-            "corpus gram stream; the exact verify joins only probe "
-            "SURVIVORS against the benchmark grams",
-            __import__(
-                "web_content_extraction_benchmark_spark.operators.dedup",
-                fromlist=["contaminated_ids_bloom"],
-            ).contaminated_ids_bloom(
-                docs,
-                docs.filter(F.col("doc_id") % 25 == 0).select("text"),
-            ),
         ),
         (
             "WARC container ingest (r7; path-streamed r8)",

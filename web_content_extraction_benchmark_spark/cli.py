@@ -413,6 +413,8 @@ def cmd_linkgraph(args: argparse.Namespace) -> None:
 
 
 def build_parser() -> argparse.ArgumentParser:
+    from .operators.dedup import HASH_FNS
+
     parser = argparse.ArgumentParser(
         prog="wceb-spark",
         description="PySpark web-content-extraction benchmark CLI",
@@ -480,7 +482,7 @@ def build_parser() -> argparse.ArgumentParser:
     # existing index loads its persisted config
     p.add_argument("--threshold", type=float, default=None)
     p.add_argument("--hash-fn", default=None,
-                   choices=["md5", "xxhash64", "oph", "oph_sql"])
+                   choices=HASH_FNS)
     p.add_argument("--num-hashes", type=int, default=None)
     p.add_argument("--bands", type=int, default=None)
     p.add_argument("--signature", default=None,

@@ -1,9 +1,10 @@
 """Deduplication operators for web-scale corpora.
 
 The reference only needs dict-key dedup (R24), but a 100 TB training-data
-pipeline needs the full family.  Everything stays in built-in JVM
-functions — no Python in any hot path (the SimHash kernel is a pure
-Catalyst expression too).
+pipeline needs the full family.  Most of it is built-in JVM functions
+(the SimHash kernel is a pure Catalyst expression too); Python runs in
+exactly two Arrow-batched kernels: the OPH signature lattice
+(``oph_signatures``) and the ``contaminated_ids`` window-key probe.
 
 Design for scale:
 - exact dedup: hash-groupBy on a digest, never on the full text (shuffle
@@ -32,7 +33,6 @@ use PROD_NUM_HASHES/PROD_BANDS (128/16 -> r=8, S-curve midpoint
 from __future__ import annotations
 
 import math
-import warnings
 
 import numpy as np
 import pandas as pd
@@ -45,6 +45,8 @@ DEFAULT_BANDS = 4  # 4 bands x 2 rows — oracle-fixture scale
 PROD_NUM_HASHES = 128
 PROD_BANDS = 16  # 16 bands x 8 rows — production default
 SHINGLE_SIZE = 3
+# LSH signature hash functions (see minhash_lsh_pairs)
+HASH_FNS = ("md5", "xxhash64", "oph")
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text",
@@ -178,135 +180,66 @@ def minhash_signature_fast(base_hashes: Column,
     ]
 
 
-def make_oph_signature_udf(num_hashes: int):
-    """One-permutation-hashing signature (Li/Owen/Zhang-style OPH with
-    rotation densification): each shingle's single 64-bit hash is routed
-    to bin ``hash mod k`` and each bin keeps its minimum — the whole
-    k-wide signature costs O(shingles) per doc instead of the remix
-    path's O(shingles x k).  Empty bins (docs with fewer distinct
-    shingles than bins, or unlucky routing) borrow the nearest filled
-    bin to their left, circularly — a deterministic densification, so
-    equal shingle sets always produce equal signatures and LSH banding
-    stays sound.  Like the xxhash64 remix path, this estimator is
-    engine-specific but semantics-neutral: candidates are verified by
-    EXACT Jaccard, so the estimator only moves recall, never
-    correctness of emitted pairs.
+def oph_signatures(rows, k: int) -> np.ndarray:
+    """One-permutation-hashing signatures (Li/Owen/Zhang-style OPH with
+    rotation densification) for a batch of 64-bit base-hash arrays:
+    each shingle's single hash is routed to bin ``hash mod k`` and each
+    bin keeps its minimum — the whole k-wide signature costs
+    O(shingles) per doc instead of the remix path's O(shingles x k).
+    Empty bins (docs with fewer distinct shingles than bins, or unlucky
+    routing) borrow the nearest filled bin to their left, circularly —
+    a deterministic densification, so equal shingle sets always produce
+    equal signatures and LSH banding stays sound.  Rows with NO hashes
+    keep the int64-max ``EMPTY`` sentinel in every bin.
 
-    Returns an Arrow-batched pandas UDF: array<long> base hashes ->
-    array<long> signature of length ``num_hashes``.  Fully vectorized
-    across the batch (one np.minimum.at over a flattened (rows x bins)
-    lattice + one maximum.accumulate circular forward-fill)."""
-    from pyspark.sql.functions import pandas_udf
-
-    k = num_hashes
+    Fully vectorized across the batch: one np.minimum.at over a
+    flattened (rows x bins) lattice + one maximum.accumulate circular
+    forward-fill.  Returns an int64 array of shape (len(rows), k)."""
+    n = len(rows)
     EMPTY = np.iinfo(np.int64).max
+    lengths = np.fromiter((len(a) for a in rows), dtype=np.int64, count=n)
+    flat = np.concatenate(
+        [np.asarray(a, dtype=np.int64) for a in rows]
+    ) if lengths.sum() else np.empty(0, dtype=np.int64)
+    rr = np.repeat(np.arange(n, dtype=np.int64), lengths)
+    sig = np.full(n * k, EMPTY, dtype=np.int64)
+    # bin routing on the UNSIGNED view (pmod of a negative int64
+    # hash differs between engines; unsigned is unambiguous)
+    bins = (flat.astype(np.uint64) % np.uint64(k)).astype(np.int64)
+    np.minimum.at(sig, rr * k + bins, flat)
+    sig = sig.reshape(n, k)
+    if (sig == EMPTY).any():
+        # circular forward-fill from the left: tile to (n, 2k), carry
+        # the last filled index forward, then read back the second half
+        tiled = np.tile(sig, (1, 2))
+        filled = tiled != EMPTY
+        idx = np.where(filled, np.arange(2 * k), -1)
+        np.maximum.accumulate(idx, axis=1, out=idx)
+        take = idx[:, k:]
+        # rows with NO shingles keep EMPTY (callers filter them)
+        sig = np.where(
+            take >= 0,
+            np.take_along_axis(tiled, np.maximum(take, 0), axis=1),
+            EMPTY,
+        )
+    return sig
+
+
+def make_oph_signature_udf(num_hashes: int):
+    """Arrow-batched pandas UDF over ``oph_signatures``: array<long>
+    base hashes -> array<long> signature of length ``num_hashes``.
+    Like the xxhash64 remix path, this estimator is engine-specific but
+    semantics-neutral: candidates are verified by EXACT Jaccard, so the
+    estimator only moves recall, never correctness of emitted pairs."""
+    from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def oph(base: pd.Series) -> pd.Series:
-        n = len(base)
-        if n == 0:
+        if len(base) == 0:
             return pd.Series([], dtype=object)
-        lengths = np.fromiter((len(a) for a in base), dtype=np.int64,
-                              count=n)
-        flat = np.concatenate(
-            [np.asarray(a, dtype=np.int64) for a in base]
-        ) if lengths.sum() else np.empty(0, dtype=np.int64)
-        rows = np.repeat(np.arange(n, dtype=np.int64), lengths)
-        sig = np.full(n * k, EMPTY, dtype=np.int64)
-        # bin routing on the UNSIGNED view (pmod of a negative int64
-        # hash differs between engines; unsigned is unambiguous)
-        bins = (flat.astype(np.uint64) % np.uint64(k)).astype(np.int64)
-        np.minimum.at(sig, rows * k + bins, flat)
-        sig = sig.reshape(n, k)
-        if (sig == EMPTY).any():
-            # circular forward-fill from the left: tile to (n, 2k),
-            # carry the last filled index forward, then read back the
-            # second half
-            tiled = np.tile(sig, (1, 2))
-            filled = tiled != EMPTY
-            idx = np.where(filled, np.arange(2 * k), -1)
-            np.maximum.accumulate(idx, axis=1, out=idx)
-            take = idx[:, k:]
-            # rows with NO shingles keep EMPTY (callers filter them)
-            ok = take >= 0
-            out = np.where(
-                ok,
-                np.take_along_axis(tiled, np.maximum(take, 0), axis=1),
-                EMPTY,
-            )
-            sig = out
-        return pd.Series(list(sig))
+        return pd.Series(list(oph_signatures(base, num_hashes)))
 
     return oph
-
-
-def oph_signature_catalyst(hashes: Column, num_hashes: int) -> Column:
-    """Pure-Catalyst one-permutation signature — the JVM-side twin of
-    ``make_oph_signature_udf`` (bit-identical output for power-of-two
-    ``num_hashes``, modulo the astronomically unlikely hash ==
-    Long.MAX_VALUE): bin routing is ``hash & (k-1)`` (== unsigned
-    ``mod k`` for power-of-two k, sidestepping the signed-pmod
-    ambiguity), per-bin minimum via one filter+array_min pass per bin,
-    then the same circular-left forward-fill densification (tile to 2k,
-    carry last filled value, read back the second half).
-
-    Cost shape: O(shingles x k) comparisons per doc — MORE ops than the
-    Arrow kernel's O(shingles) lattice, but each op is a codegen'd
-    bitmask/compare instead of a Python-side Arrow batch round-trip.
-    MEASURED (tools/oph_ab.py, 218,750 chain docs, 128/16, local[32],
-    BENCH/oph_ab_r06.jsonl): Arrow "oph" 28.4k docs/s, this path 10.3k,
-    xxhash64 remix 25.3k — the lattice kernel's O(shingles) beats the
-    JVM's O(shingles x k), so "oph" STAYS the corpus-scale default and
-    this path is the no-Python-stage alternative (e.g. clusters where
-    Python workers are unavailable).  Band keys verified bit-identical
-    across both (A/B check row + pytest at 8/4 and 128/16).
-    ``hash_fn="oph_sql"`` in the LSH entry points selects this path."""
-    k = num_hashes
-    if k & (k - 1):
-        raise ValueError(
-            f"oph_sql needs power-of-two num_hashes (got {k}): bin "
-            "routing uses hash & (k-1) to match the kernel's unsigned mod"
-        )
-    bins = F.sequence(F.lit(0), F.lit(k - 1))
-    sig0 = F.transform(
-        bins,
-        lambda i: F.array_min(
-            F.filter(
-                hashes,
-                lambda h: h.bitwiseAND(F.lit(k - 1)) == i.cast("long"),
-            )
-        ),
-    )
-    tiled = F.concat(sig0, sig0)
-    # NB: the aggregate's zero value must NOT reference tiled (e.g. a
-    # slice(tiled, 1, 0)): lambda-bearing subtrees are exempt from
-    # subexpression elimination, so that would re-evaluate the whole
-    # O(shingles x k) lattice per row just to make an empty array
-    # (review finding r6)
-    # an EMPTY hashes array fills no bin, so densification carries only
-    # nulls — coalesce those to the kernel's int64-max EMPTY sentinel so
-    # the bit-identity contract holds even for shingle-less docs (the
-    # LSH callers filter size(sh) > 0 anyway, but the public function
-    # must not turn "no shingles" into all-null band keys that
-    # concat_ws would collapse onto one colliding bucket; ADVICE r6)
-    empty = F.lit(np.iinfo(np.int64).max)
-    ff = F.aggregate(
-        tiled,
-        F.struct(
-            F.array().cast("array<long>").alias("out"),
-            F.lit(None).cast("long").alias("last"),
-        ),
-        lambda acc, x: F.struct(
-            F.concat(
-                acc["out"], F.array(F.coalesce(x, acc["last"]))
-            ).alias("out"),
-            F.coalesce(x, acc["last"]).alias("last"),
-        ),
-        lambda acc: F.transform(
-            F.slice(acc["out"], k + 1, k), lambda v: F.coalesce(v, empty)
-        ),
-    )
-    return ff
 
 
 def lsh_band_keys(
@@ -328,7 +261,14 @@ def lsh_band_keys(
     projection, or CollapseProject inlines num_hashes copies of it.
     Shingle-less docs (shorter than the shingle size) are excluded:
     their signatures would be all-null and collide with each other on
-    every band key (and Jaccard is undefined for empty sets)."""
+    every band key (and Jaccard is undefined for empty sets).
+
+    ``hash_fn`` must be one of ``HASH_FNS``; anything else raises
+    ``ValueError`` before a plan is built."""
+    if hash_fn not in HASH_FNS:
+        raise ValueError(
+            f"unknown hash_fn {hash_fn!r}: expected one of {HASH_FNS}"
+        )
     rows_per_band = num_hashes // bands
     shingled = df.select(
         F.col(id_col).alias("id"),
@@ -341,26 +281,15 @@ def lsh_band_keys(
     # driver-side plan BUILDING at 128 hashes (the SQL parser does the
     # same work JVM-side in ~0.1 s).  Expressions are identical
     # (pytest-pinned old==new band keys; the md5 path stays oracled).
-    if hash_fn in ("oph", "oph_sql"):
+    if hash_fn == "oph":
         # one-permutation hashing: the whole signature in O(shingles)
         # per doc (vs O(shingles x num_hashes) for the remix paths) —
-        # the production width at corpus scale.  "oph" = Arrow kernel;
-        # "oph_sql" = the bit-identical pure-Catalyst twin (A/B'd by
-        # tools/oph_ab.py)
-        hashed = shingled.select(
+        # the production width at corpus scale
+        oph = make_oph_signature_udf(num_hashes)
+        sig_arr = shingled.select(
             "id",
             F.transform("_sh", lambda s: F.xxhash64(s)).alias("_hs"),
-        )
-        if hash_fn == "oph":
-            oph = make_oph_signature_udf(num_hashes)
-            sig_arr = hashed.select("id", oph("_hs").alias("_sig"))
-        else:
-            sig_arr = hashed.select(
-                "id",
-                oph_signature_catalyst(
-                    F.col("_hs"), num_hashes
-                ).alias("_sig"),
-            )
+        ).select("id", oph("_hs").alias("_sig"))
         oph_bands = ", ".join(
             "concat_ws('|', transform("
             f"slice(_sig, {b * rows_per_band + 1}, {rows_per_band}), "
@@ -464,13 +393,11 @@ def minhash_lsh_pairs(
     the candidates actually verified.
 
     ``hash_fn``: "md5" (engine-independent, the oracle fixture),
-    "xxhash64" (1 string hash + num_hashes remixes per shingle),
+    "xxhash64" (1 string hash + num_hashes remixes per shingle), or
     "oph" (one-permutation hashing: the whole signature in O(shingles)
-    per doc — the corpus-scale default; see make_oph_signature_udf), or
-    "oph_sql" (the bit-identical pure-Catalyst OPH twin — no Python
-    stage at all; A/B'd in tools/oph_ab.py).  All variants verify
-    candidates by exact Jaccard, so the choice moves candidate recall
-    only, never the correctness of emitted pairs."""
+    per doc — the corpus-scale default; see oph_signatures).  All
+    variants verify candidates by exact Jaccard, so the choice moves
+    candidate recall only, never the correctness of emitted pairs."""
     candidates = _lsh_candidate_pairs(
         df, text_col, id_col, num_hashes, bands, hash_fn
     )
@@ -715,7 +642,7 @@ def release_local_checkpoint(df: DataFrame) -> None:
 # common case after LSH verification at moderate duplication rates.  The
 # collect is BOUNDED by this threshold (~16 B/edge -> a few MB), the
 # same bounded-driver-materialization pattern as the IVF codebook and
-# the bloom bitmap.  Web-scale pair sets exceed it and take the
+# the decontamination key set.  Web-scale pair sets exceed it and take the
 # distributed path unchanged.
 CC_LOCAL_EDGE_THRESHOLD = 200_000
 
@@ -924,8 +851,8 @@ def contaminated_ids(docs: DataFrame, benchmark: DataFrame,
        POSITIONS only (positions re-attached to the doc's token array
        via an id join that AQE broadcasts at realistic leak rates) and
        verify with the exact gram-string broadcast join.  False
-       positives of the 64-bit keys only cost verify work, exactly
-       like the Bloom path.
+       positives of the 64-bit keys only cost verify work, never
+       correctness.
 
     At realistic contamination rates the verify side is ~0 and the
     whole operator is the hash pass over a SINGLE traversal of docs
@@ -937,8 +864,8 @@ def contaminated_ids(docs: DataFrame, benchmark: DataFrame,
     benchmark's distinct window keys (8 B each) plus the broadcast of
     its gram strings — ~10^5 grams (a large eval suite) is a few MB,
     benched as q14_decontam_100kgrams; it stays practical to ~10^7
-    grams.  Above that, use ``contaminated_ids_bloom`` (r6): m/8 BYTES
-    broadcast, same survivors-verified-exactly shape."""
+    grams (~80 MB of keys on the driver plus the gram-string
+    broadcast), the bound on the benchmark side's size."""
     spark = docs.sparkSession
     # benchmark side: eval slices routinely arrive behind a limit()
     # (collapsed to ONE partition — CLAUDE.md gotcha), which would run
@@ -961,8 +888,7 @@ def contaminated_ids(docs: DataFrame, benchmark: DataFrame,
         ).alias("_h")
     ).distinct()
     # bounded by the documented benchmark-set contract (8 B per
-    # distinct gram; ~10^5 typical, ~80 MB at the 10^7 ceiling) — the
-    # same driver-side footprint the Bloom path's bitmap has
+    # distinct gram; ~10^5 typical, ~80 MB at the 10^7 ceiling)
     keys_arr = np.sort(np.array(
         [r["_h"] for r in bench_keys.collect()], dtype=np.int64
     ))
@@ -1035,152 +961,6 @@ def contaminated_ids(docs: DataFrame, benchmark: DataFrame,
     )
     return (
         cand.join(F.broadcast(bench_grams), "gram")
-        .select("id")
-        .distinct()
-        .select(F.col("id").alias(id_col))
-    )
-
-
-def _bloom_params(n_items: int, fpp: float) -> tuple[int, int]:
-    """Standard Bloom sizing: m bits and h hash functions for n items
-    at the target false-positive rate (m rounded up to a multiple of
-    64 so the bitmap packs into whole int64 words)."""
-    m = math.ceil(-n_items * math.log(fpp) / (math.log(2) ** 2))
-    m = ((m + 63) // 64) * 64
-    h = max(1, round(m / n_items * math.log(2)))
-    return m, h
-
-
-def contaminated_ids_bloom(docs: DataFrame, benchmark: DataFrame,
-                           k: int = SHINGLE_SIZE, text_col: str = "text",
-                           id_col: str = "doc_id", fpp: float = 0.01,
-                           expected_grams: int | None = None) -> DataFrame:
-    """``contaminated_ids`` for benchmark sets too big to broadcast as
-    strings (the documented ~10^7-gram bound of the broadcast join):
-    EXACTLY the same output, via a from-scratch Bloom filter.
-
-    Spark's own ``bloom_filter_agg``/``might_contain`` are internal
-    (unregistered) expressions, so the filter is built from public
-    APIs: bit POSITIONS are computed JVM-side on both sides
-    (``pmod(xxhash64(gram, seed_i), m)`` for h seeds — engine-exact by
-    construction), a vectorized ``mapInPandas`` ORs each benchmark
-    partition into an m-bit numpy bitmap, the driver ORs the partition
-    bitmaps, and probing is one Arrow-batched pandas UDF over the
-    broadcast bitmap.  Probe SURVIVORS (true leaks + ~fpp false
-    positives) are then re-verified with the exact gram equi join, so
-    false positives only cost verify work, never correctness —
-    pytest pins equality with ``contaminated_ids``.
-
-    Scale shape: the broadcast is m/8 BYTES (~120 MB for 10^8 grams at
-    1% fpp — executor-feasible where 10^8 gram strings are not); the
-    per-partition bitmaps are OR-merged in ONE executor task before a
-    single-row collect, so the driver holds O(m/8), never
-    O(partitions x m/8).  The exact verify is a hash join on gram
-    where the survivor side (~leak rate + fpp of the corpus grams) is
-    the small side at realistic leak rates (AQE broadcasts it when it
-    fits); at extreme scale both sides shuffle once — still only
-    survivor grams, never the full corpus gram stream."""
-    # persisted only for this call's EAGER phases (sizing count +
-    # bitmap build); released before returning — the lazy verify join
-    # recomputes the distinct once at materialization, which beats
-    # pinning a 10^7-10^8-row gram set in executor storage for the
-    # session lifetime (review finding r6)
-    bench_grams = benchmark.select(
-        F.explode(shingle_col(F.col(text_col), k)).alias("gram")
-    ).distinct().persist()
-    m, h = _bloom_params(
-        max(1, expected_grams or bench_grams.count()), fpp
-    )
-    n_words = m // 64
-
-    positions = F.array(
-        *[F.pmod(F.xxhash64("gram", F.lit(i)), F.lit(m)) for i in range(h)]
-    )
-
-    def _build(batches):
-        bitmap = np.zeros(n_words, dtype=np.uint64)
-        n = 0
-        for pdf in batches:
-            if len(pdf):
-                n += len(pdf)
-                pos = np.concatenate(
-                    [np.asarray(p, dtype=np.int64) for p in pdf["pos"]]
-                )
-                np.bitwise_or.at(
-                    bitmap, pos // 64,
-                    np.uint64(1) << (pos % 64).astype(np.uint64),
-                )
-        yield pd.DataFrame({"words": [bitmap.tobytes()], "n": [n]})
-
-    def _merge(batches):
-        bitmap = np.zeros(n_words, dtype=np.uint64)
-        n = 0
-        for pdf in batches:
-            n += int(pdf["n"].sum())
-            for words in pdf["words"]:
-                bitmap |= np.frombuffer(words, dtype=np.uint64)
-        yield pd.DataFrame({"words": [bitmap.tobytes()], "n": [n]})
-
-    merged = (
-        bench_grams.select(positions.alias("pos"))
-        .mapInPandas(_build, "words binary, n long")  # 1 bitmap/partition
-        .repartition(1)
-        .mapInPandas(_merge, "words binary, n long")  # one bitmap total
-        .collect()
-    )
-    bitmap = (
-        np.frombuffer(merged[0].words, dtype=np.uint64)
-        if merged else np.zeros(n_words, dtype=np.uint64)
-    )
-    observed_grams = merged[0].n if merged else 0
-    bench_grams.unpersist()
-    if expected_grams is not None and observed_grams > 2 * expected_grams:
-        # the bitmap was sized for expected_grams — a real insert count
-        # past 2x silently inflates the effective fpp (and with it the
-        # survivor set the exact verify join must chew through).  The
-        # insert count falls out of the build pass for free, so the
-        # under-estimate is surfaced rather than absorbed; output stays
-        # exact either way (the verify join filters every false
-        # positive).
-        warnings.warn(
-            f"contaminated_ids_bloom: bitmap sized for "
-            f"expected_grams={expected_grams} but the benchmark set "
-            f"holds {observed_grams} distinct grams (> 2x) — effective "
-            f"fpp exceeds the requested {fpp} and the exact-verify "
-            f"survivor join grows accordingly.  Pass a realistic "
-            f"expected_grams (or omit it to size from an exact count).",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    bc = docs.sparkSession.sparkContext.broadcast(bitmap)
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.BooleanType())
-    def might_contain(pos_col: pd.Series) -> pd.Series:
-        bm = bc.value
-        n = len(pos_col)
-        if n == 0:
-            return pd.Series([], dtype=bool)
-        flat = np.concatenate(
-            [np.asarray(p, dtype=np.int64) for p in pos_col]
-        )
-        hits = (
-            bm[flat // 64] & (np.uint64(1) << (flat % 64).astype(np.uint64))
-        ) != 0
-        return pd.Series(hits.reshape(n, -1).all(axis=1))
-
-    doc_grams = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(shingle_col(F.col(text_col), k)).alias("gram"),
-    )
-    survivors = doc_grams.filter(
-        might_contain(positions)
-    )
-    # exact re-verify: survivors are ~(leak + fpp) of the corpus grams —
-    # broadcast THAT side into the benchmark-gram stream
-    return (
-        survivors.join(bench_grams, "gram")
         .select("id")
         .distinct()
         .select(F.col("id").alias(id_col))

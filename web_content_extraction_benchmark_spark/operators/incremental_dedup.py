@@ -113,6 +113,7 @@ from ..sources.snapshots import (
 from .dedup import (
     DEFAULT_BANDS,
     DEFAULT_NUM_HASHES,
+    HASH_FNS,
     _verify_jaccard,
     connected_components,
     lsh_band_keys,
@@ -159,6 +160,10 @@ class NearDupIndex:
                 "pigeonhole chunks, exact-hamming verify), or "
                 "'embedding' (hyperplane-LSH over a vector column, "
                 "exact-cosine verify)"
+            )
+        if hash_fn not in HASH_FNS:
+            raise ValueError(
+                f"unknown hash_fn {hash_fn!r}: expected one of {HASH_FNS}"
             )
         if signature == "embedding" and emb_dim is None:
             raise ValueError(
