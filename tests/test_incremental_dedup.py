@@ -288,11 +288,17 @@ def test_bucketed_label_commit_carries_untouched_files(spark, index_path):
 
 
 def test_concurrent_writer_raises_and_stale_lock_sweeps(spark, index_path):
-    """ONE writer at a time: a live holder raises ConcurrentWriterError;
-    a lock left by a crashed (dead-pid) writer is swept and the batch
+    """ONE writer at a time: a live same-host holder with a fresh
+    heartbeat raises ConcurrentWriterError; the same lease with an
+    EXPIRED heartbeat is stale even though its pid looks alive (a pid
+    reused after a crash must not lock the index forever); a lease left
+    by a crashed (dead-pid) same-host writer is swept and the batch
     proceeds."""
+    import json
     import os
+    import socket
     import subprocess
+    import time
 
     from web_content_extraction_benchmark_spark.operators.incremental_dedup import (
         ConcurrentWriterError,
@@ -300,17 +306,38 @@ def test_concurrent_writer_raises_and_stale_lock_sweeps(spark, index_path):
 
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
     idx = NearDupIndex(index_path, jaccard_threshold=0.6)
-    # live holder: this very process
-    os.makedirs(idx._lock_dir())
-    with open(os.path.join(idx._lock_dir(), "pid"), "w") as f:
-        f.write(str(os.getpid()))
+
+    def lease(pid: int, heartbeat_at: float) -> dict:
+        return {"token": "other-token", "pid": pid,
+                "host": socket.gethostname(),
+                "heartbeat_at": heartbeat_at, "ttl_sec": idx.LEASE_TTL_SEC}
+
+    def plant(pid: int) -> None:
+        os.makedirs(idx._lock_dir(), exist_ok=True)
+        with open(idx._lease_path(), "w") as f:
+            json.dump(lease(pid, time.time()), f)
+
+    # live holder: this very process, fresh heartbeat
+    plant(os.getpid())
     with pytest.raises(ConcurrentWriterError, match="locked by writer"):
         idx.add_batch(mk([(1, "alpha beta gamma delta epsilon")]))
+    # same host, live pid, heartbeat two TTLs old: stale
+    assert idx._lease_is_stale(
+        lease(os.getpid(), time.time() - 2 * idx.LEASE_TTL_SEC)
+    )
     # stale holder: a process that has already exited
     proc = subprocess.Popen(["true"])
     proc.wait()
+    assert idx._lease_is_stale(lease(proc.pid, time.time()))
+    # a bare pid file (no lease) is not a lock format this index
+    # reads: even a dead pid stays refused, never swept
+    os.remove(idx._lease_path())
     with open(os.path.join(idx._lock_dir(), "pid"), "w") as f:
         f.write(str(proc.pid))
+    with pytest.raises(ConcurrentWriterError, match="<unknown>"):
+        idx.add_batch(mk([(1, "alpha beta gamma delta epsilon")]))
+    os.remove(os.path.join(idx._lock_dir(), "pid"))
+    plant(proc.pid)
     idx.add_batch(mk([(1, "alpha beta gamma delta epsilon")])).unpersist()
     assert idx.committed_docs(spark).count() == 1
     assert not os.path.exists(idx._lock_dir())  # released after commit
@@ -409,28 +436,30 @@ def test_compact_auto_expire_reclaims_superseded_files(spark, index_path):
     assert _labels_set(idx.labels(spark)) == want
 
 
-def test_legacy_flat_index_reopens_without_buckets(spark, index_path):
-    """A pre-r7 index (meta without n_buckets, flat tables) must keep
-    appending under open(); a default-bucketed reopen refuses with the
-    config-mismatch error instead of silently mixing layouts."""
+def test_meta_predating_bucketed_format_refuses(spark, index_path):
+    """A stored meta missing any configuration key (n_buckets, or the
+    signature plugin's keys) was written before the bucketed on-disk
+    format: both constructors refuse it instead of guessing defaults,
+    and restoring the key reopens the index unchanged."""
     import json
-    import os
 
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    idx = NearDupIndex(index_path, jaccard_threshold=0.6, bands=8,
-                       n_buckets=None)
+    idx = NearDupIndex(index_path, jaccard_threshold=0.6, bands=8)
     common = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     idx.add_batch(mk([(1, common + " lambda")])).unpersist()
-    # simulate the pre-r7 meta: no n_buckets key at all
-    meta = json.load(open(NearDupIndex.meta_path(index_path)))
-    del meta["n_buckets"]
-    json.dump(meta, open(NearDupIndex.meta_path(index_path), "w"))
+    full = json.load(open(NearDupIndex.meta_path(index_path)))
+    for key in ("n_buckets", "signature"):
+        meta = {k: v for k, v in full.items() if k != key}
+        json.dump(meta, open(NearDupIndex.meta_path(index_path), "w"))
+        with pytest.raises(ValueError, match="predates"):
+            NearDupIndex(index_path, jaccard_threshold=0.6, bands=8)
+        with pytest.raises(ValueError, match="predates"):
+            NearDupIndex.open(index_path)
+    json.dump(full, open(NearDupIndex.meta_path(index_path), "w"))
     reopened = NearDupIndex.open(index_path)
-    assert reopened.n_buckets is None
+    assert reopened.n_buckets == full["n_buckets"]
     reopened.add_batch(mk([(2, common + " mu")])).unpersist()
     assert _labels_set(reopened.labels(spark)) == {(1, 1), (2, 1)}
-    with pytest.raises(ValueError, match="different\\s+configuration"):
-        NearDupIndex(index_path)  # default n_buckets=64 mismatches
 
 
 def test_multi_batch_fuzz_equals_scratch(spark, sf_dir, index_path):
@@ -494,13 +523,13 @@ def test_compact_preserves_labels_and_version_alignment(
         "docs": 0, "bands": 0, "labels": 0
     }
     assert idx.assert_consistent() == v0 + 2
-    # flat legacy index refuses
-    flat = tempfile.mkdtemp(prefix="wceb_flat_")
+    # the bucketed layout is the only one: no flat option value
+    fresh = tempfile.mkdtemp(prefix="wceb_flat_")
     try:
-        with pytest.raises(ValueError, match="bucketed"):
-            NearDupIndex(flat, n_buckets=None).compact(spark)
+        with pytest.raises(ValueError, match="n_buckets must be"):
+            NearDupIndex(fresh, n_buckets=None)
     finally:
-        shutil.rmtree(flat, ignore_errors=True)
+        shutil.rmtree(fresh, ignore_errors=True)
     corpus.unpersist()
 
 

@@ -114,7 +114,11 @@ def test_bucketed_snapshot_table_append_read_overwrite(spark, tmp_path):
         t.overwrite_buckets(df, {3})
 
 
-def test_bucketed_overwrite_refuses_legacy_flat_manifest(spark, tmp_path):
+def test_bucketed_table_refuses_flat_manifest(spark, tmp_path):
+    """A table whose latest manifest was committed flat (plain
+    SnapshotTable, no bucket map) is refused by every bucketed
+    operation — a pruned read would miss rows and a bucket commit would
+    drop them — and none of them commits anything."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -124,17 +128,24 @@ def test_bucketed_overwrite_refuses_legacy_flat_manifest(spark, tmp_path):
         bucket_of,
     )
 
-    path = str(tmp_path / "legacy")
+    path = str(tmp_path / "flat")
     flat = SnapshotTable(path)
     flat.append(spark.range(10))
     bt = BucketedSnapshotTable(path, n_buckets=4)
-    # pruned read falls back to ALL files (correct, unpruned)
-    assert bt.read_buckets(spark, {0}).count() == 10
-    df = spark.range(3).withColumn(
+    df = spark.range(20).withColumn(
         BucketedSnapshotTable.BUCKET_COL, bucket_of(F.col("id"), 4)
     )
-    with _pytest.raises(ValueError, match="legacy flat manifest"):
-        bt.overwrite_buckets(df, {0, 1, 2, 3})
+    everything = {0, 1, 2, 3}
+    for op in (
+        lambda: bt.read_buckets(spark, everything),
+        lambda: bt.append_bucketed(df),
+        lambda: bt.overwrite_buckets(df, everything),
+        lambda: bt.compact_buckets(spark),
+    ):
+        with _pytest.raises(ValueError, match="flat manifest"):
+            op()
+    assert bt._latest_version() == 1  # nothing committed
+    assert flat.read(spark).count() == 10
 
 
 def test_bucketed_write_lands_one_file_per_bucket_and_compacts(

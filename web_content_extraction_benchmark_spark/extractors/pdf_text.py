@@ -1384,10 +1384,6 @@ def pdf_blocks(payload: bytes) -> list[Block]:
     return pdf_parse(payload)[1]
 
 
-def pdf_page_count(payload: bytes) -> int:
-    return len(PdfDocument.from_bytes(payload).pages())
-
-
 def pdf_plaintext(payload: bytes) -> str:
     """Extracted main text in reading order, single-space normalized —
     the byte-identity surface for the oracle."""

@@ -1,10 +1,16 @@
-"""Arrow-batched pandas UDFs — the only Python/JVM crossing points.
+"""Shared Arrow-batched pandas UDFs: decode, link scans, block spans,
+scoring and the complexity features.
 
-Everything row-wise in this engine funnels through these Series->Series
-vectorized UDFs (never per-row Python UDFs): the reference's per-row
-``model(in_data['html'])`` loop (extract.py:102-119) becomes one Arrow
-batch per ~512 documents.  Per-document errors map to '' exactly as the
-reference harness swallows them (extract.py:106-119).
+These are not the only Python/JVM crossing points — the extraction
+pipeline (``plans/pipeline.py``), the LM scorer (``operators/lm.py``),
+the OPH/dedup kernels (``operators/dedup.py``) and the PDF, media and
+other per-operator kernels run their own ``mapInArrow``/``mapInPandas``
+stages — but every crossing is vectorized (never a per-row Python UDF):
+the reference's per-row ``model(in_data['html'])`` loop
+(extract.py:102-119) becomes one Arrow batch per
+``spark.sql.execution.arrow.maxRecordsPerBatch`` documents.
+Per-document errors map to '' exactly as the reference harness
+swallows them (extract.py:106-119).
 """
 
 from __future__ import annotations
@@ -16,7 +22,6 @@ from pyspark.sql.functions import pandas_udf
 
 from ..dom import NON_TEXT_ELEMENTS, body_or_root, parse_html
 from ..encoding import decode_html
-from ..extractors import get_extractor
 from ..extractors.density import extract_main_content_with_blocks
 from ..functions.scoring import rouge_lsum, token_levenshtein_ratio
 from ..textutils import word_tokens
@@ -150,23 +155,6 @@ def page_links_udf(raw: pd.Series) -> pd.DataFrame:
         cols["hreflang_langs"].append([p[0] for p in hl])
         cols["hreflang_hrefs"].append([p[1] for p in hl])
     return pd.DataFrame(cols)
-
-
-def extraction_udf(model: str):
-    """Series[binary html] -> Series[plaintext] for one extractor."""
-    fn = get_extractor(model)
-
-    @pandas_udf(T.StringType())
-    def _extract(raw: pd.Series) -> pd.Series:
-        out = []
-        for blob in raw:
-            try:
-                out.append(fn(decode_html(blob)) or "")
-            except Exception:
-                out.append("")
-        return pd.Series(out, dtype="object")
-
-    return _extract
 
 
 @pandas_udf(BLOCKS_TYPE)

@@ -105,11 +105,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.snapshots import (
-    BucketedSnapshotTable,
-    SnapshotTable,
-    bucket_of,
-)
+from ..sources.snapshots import BucketedSnapshotTable, bucket_of
 from .dedup import (
     DEFAULT_BANDS,
     DEFAULT_NUM_HASHES,
@@ -144,7 +140,7 @@ class NearDupIndex:
                  hash_fn: str = "md5",
                  text_col: str = "text",
                  id_col: str = "doc_id",
-                 n_buckets: int | None = DEFAULT_INDEX_BUCKETS,
+                 n_buckets: int = DEFAULT_INDEX_BUCKETS,
                  signature: str = "minhash",
                  max_hamming: int = 3,
                  emb_dim: int | None = None,
@@ -195,11 +191,8 @@ class NearDupIndex:
         self.emb_dim = emb_dim
         self.lsh_seed = lsh_seed
         # bucket layout is part of the index (rows land in directories
-        # by this hash): a pre-r7 index has no n_buckets in its meta —
-        # reopen it with n_buckets=None (flat legacy layout; open()
-        # does this automatically) — while a bucketed index refuses a
-        # different bucket count the same way it refuses a different
-        # hash_fn
+        # by this hash): an index refuses a different bucket count the
+        # same way it refuses a different hash_fn
         self.n_buckets = n_buckets
         # the LSH configuration is part of the INDEX, not the call:
         # band keys computed under a different hash_fn/width would
@@ -210,13 +203,17 @@ class NearDupIndex:
         meta = self._meta()
         stored = self._read_meta(path)
         if stored is not None:
-            # pre-r7 metas predate the signature plugin: they were all
-            # written by the MinHash-only index
-            stored.setdefault("signature", "minhash")
-            stored.setdefault("max_hamming", 3)
-            stored.setdefault("emb_dim", None)
-            stored.setdefault("lsh_seed", 42)
-            known = {k: stored.get(k) for k in meta}  # ignore unknown
+            missing = sorted(set(meta) - set(stored))
+            if missing:
+                # every meta this format writes carries all of _meta()'s
+                # keys; one without them came from a flat-layout store
+                raise ValueError(
+                    f"index {path} predates the bucketed on-disk format "
+                    f"(its index_meta.json lacks {missing}) — its tables "
+                    "cannot be read as bucketed stores.  Rebuild the "
+                    "index from its source documents."
+                )
+            known = {k: stored[k] for k in meta}  # ignore unknown keys
             if known != meta:
                 diffs = {
                     key: (stored.get(key), meta[key])
@@ -244,20 +241,10 @@ class NearDupIndex:
                 "miss cross-batch duplicates.  Restore the meta file "
                 "(or rebuild the index)."
             )
-        if self.n_buckets is None:
-            self.docs_table = SnapshotTable(os.path.join(path, "docs"))
-            self.bands_table = SnapshotTable(os.path.join(path, "bands"))
-            self.labels_table = SnapshotTable(os.path.join(path, "labels"))
-        else:
-            self.docs_table = BucketedSnapshotTable(
-                os.path.join(path, "docs"), self.n_buckets
-            )
-            self.bands_table = BucketedSnapshotTable(
-                os.path.join(path, "bands"), self.n_buckets
-            )
-            self.labels_table = BucketedSnapshotTable(
-                os.path.join(path, "labels"), self.n_buckets
-            )
+        self.docs_table, self.bands_table, self.labels_table = (
+            BucketedSnapshotTable(os.path.join(path, name), n_buckets)
+            for name in ("docs", "bands", "labels")
+        )
 
     def _meta(self) -> dict:
         return {
@@ -316,9 +303,6 @@ class NearDupIndex:
         stored = cls._read_meta(path)
         if stored is not None:
             base = {k: stored[k] for k in cls._PARAMS if k in stored}
-            # a pre-r7 index has no n_buckets key: its tables are flat
-            # (legacy layout), which __init__ spells n_buckets=None
-            base.setdefault("n_buckets", None)
             base.update(kwargs)
             kwargs = base
         elif fresh_defaults:
@@ -358,20 +342,9 @@ class NearDupIndex:
         return True
 
     def _read_lease(self) -> dict | None:
-        import socket
-
         try:
             with open(self._lease_path()) as f:
                 return json.load(f)
-        except (FileNotFoundError, ValueError):
-            pass
-        # legacy pre-r8 lock: bare pid file, implicitly this-host
-        try:
-            with open(os.path.join(self._lock_dir(), "pid")) as f:
-                return {"pid": int(f.read().strip()),
-                        "host": socket.gethostname(),
-                        "token": None, "heartbeat_at": None,
-                        "ttl_sec": self.LEASE_TTL_SEC}
         except (FileNotFoundError, ValueError):
             return None
 
@@ -379,12 +352,15 @@ class NearDupIndex:
         import socket
         import time as _t
 
-        if lease.get("host") == socket.gethostname() \
-                and isinstance(lease.get("pid"), int):
-            return not self._pid_alive(lease["pid"])
         hb = lease.get("heartbeat_at")
         ttl = lease.get("ttl_sec") or self.LEASE_TTL_SEC
-        return isinstance(hb, (int, float)) and _t.time() - hb > ttl
+        if isinstance(hb, (int, float)) and _t.time() - hb > ttl:
+            # expired anywhere — even a same-host pid that still looks
+            # alive (reused after a crash); fencing stops a paused holder
+            return True
+        return (lease.get("host") == socket.gethostname()
+                and isinstance(lease.get("pid"), int)
+                and not self._pid_alive(lease["pid"]))
 
     def _write_lease(self) -> None:
         import socket
@@ -433,12 +409,11 @@ class NearDupIndex:
                     _t.sleep(0.2)
                     continue
                 if self._lease_is_stale(lease):
-                    # dead same-host pid or expired heartbeat: sweep
-                    for name in ("lease", "pid"):
-                        try:
-                            os.remove(os.path.join(self._lock_dir(), name))
-                        except OSError:
-                            pass
+                    # expired heartbeat or dead same-host pid: sweep
+                    try:
+                        os.remove(self._lease_path())
+                    except OSError:
+                        pass
                     try:
                         os.rmdir(self._lock_dir())
                     except OSError:
@@ -460,7 +435,7 @@ class NearDupIndex:
         )
 
     def _release_writer_lock(self) -> None:
-        for name in ("lease", "lease.tmp", "pid"):
+        for name in ("lease", "lease.tmp"):
             try:
                 os.remove(os.path.join(self._lock_dir(), name))
             except OSError:
@@ -523,11 +498,6 @@ class NearDupIndex:
         compact + expire(keep_last=2)).  Keeping only the compacted
         snapshot loses no logical recoverability.  Pass ``None`` to
         keep full history (time-travel auditing)."""
-        if self.n_buckets is None:
-            raise ValueError(
-                "compact requires a bucketed index (this one uses the "
-                "legacy flat layout)"
-            )
         self._acquire_writer_lock()
         try:
             tables = {
@@ -804,8 +774,8 @@ class NearDupIndex:
         (sign / candidates+verify / resolve / commit) — phase
         boundaries are then forced with an extra count per phase, so
         leave it None in production (the phases otherwise fuse into
-        Spark's own job boundaries).  On a bucketed index the dict also
-        reports bands_buckets_read / docs_buckets_read /
+        Spark's own job boundaries).  The dict also reports
+        bands_buckets_read / docs_buckets_read /
         labels_buckets_rewritten out of n_buckets."""
         self._acquire_writer_lock()
         try:
@@ -839,21 +809,16 @@ class NearDupIndex:
             t0 = _time.perf_counter()
 
         # -- candidates: new-vs-new ∪ new-vs-stored ---------------------
-        if self.n_buckets is None:
-            stored_bands = self.bands_table.read(spark)
-        else:
-            # bucket-pruned store probe: only the buckets the batch's
-            # own keys hash into are opened (a trickle batch skips the
-            # rest of the store at file level; a corpus-fraction batch
-            # covers every bucket and this degenerates to the full
-            # sequential scan — the regime note in the module docstring)
-            band_buckets = self._bucket_set(new_bands, "key")
-            stored_bands = self.bands_table.read_buckets(
-                spark, band_buckets
-            )
-            if timings is not None:
-                timings["bands_buckets_read"] = len(band_buckets)
-                timings["n_buckets"] = self.n_buckets
+        # bucket-pruned store probe: only the buckets the batch's own
+        # keys hash into are opened (a trickle batch skips the rest of
+        # the store at file level; a corpus-fraction batch covers every
+        # bucket and this degenerates to the full sequential scan — the
+        # regime note in the module docstring)
+        band_buckets = self._bucket_set(new_bands, "key")
+        stored_bands = self.bands_table.read_buckets(spark, band_buckets)
+        if timings is not None:
+            timings["bands_buckets_read"] = len(band_buckets)
+            timings["n_buckets"] = self.n_buckets
         # persisted: the verify stage reads cands TWICE when a store
         # exists (as the pair list AND inside cand_ids for the old-doc
         # semi join) — unpersisted, the store scan would run twice
@@ -861,8 +826,8 @@ class NearDupIndex:
 
         # -- exact verify (signature-specific kernel) -------------------
         sh = self._feature_rows(b)
-        if self.n_buckets is None or self.docs_table._latest_version() == 0:
-            stored_docs = self.docs_table.read(spark)
+        if self.docs_table._latest_version() == 0:
+            stored_docs = None
         else:
             # prune the committed-docs read to the buckets holding a
             # candidate id — the only stored TEXT a batch ever touches
@@ -910,16 +875,12 @@ class NearDupIndex:
         # -- resolve: only components TOUCHED by a new pair ------------
         prior = self.labels_table.read(spark)
         touched = None
-        touched_buckets: set[int] | None = None
         if prior is None:
             write_labels = connected_components(
                 pairs.select("id_a", "id_b")
             )
-            if self.n_buckets is not None:
-                # first batch: every resolved component's bucket is new
-                touched_buckets = self._bucket_set(
-                    write_labels, "component"
-                )
+            # first batch: every resolved component's bucket is new
+            touched_buckets = self._bucket_set(write_labels, "component")
         else:
             prior = prior.persist()
             pair_nodes = (
@@ -946,36 +907,27 @@ class NearDupIndex:
                 )
             )
             resolved = connected_components(edges)
-            if self.n_buckets is None:
-                # legacy flat layout: materialize the FULL label set
-                # (untouched carryover is row-level, not file-level).
-                # NB: a list-key join moves the key column FIRST —
-                # re-select the canonical (id, component) order
-                untouched = prior.join(
+            # rewrite ONLY the buckets that hold a touched component
+            # (rows leave) or a newly resolved one (rows land — a merged
+            # component's min-id can hash to a bucket none of its old
+            # parts lived in); every other bucket's files carry over in
+            # the manifest.  The rewritten buckets must keep their
+            # untouched co-resident components, read back bucket-pruned.
+            # NB: a list-key join moves the key column FIRST — re-select
+            # the canonical (id, component) order
+            touched_buckets = self._bucket_set(
+                touched, "component"
+            ) | self._bucket_set(resolved, "component")
+            prior_tb = self.labels_table.read_buckets(
+                spark, touched_buckets
+            )
+            if prior_tb is None:
+                write_labels = resolved
+            else:
+                keep = prior_tb.join(
                     touched, "component", "left_anti"
                 ).select("id", "component")
-                write_labels = untouched.unionByName(resolved)
-            else:
-                # bucketed layout: rewrite ONLY the buckets that hold a
-                # touched component (rows leave) or a newly resolved
-                # one (rows land — a merged component's min-id can hash
-                # to a bucket none of its old parts lived in); every
-                # other bucket's files carry over in the manifest.  The
-                # rewritten buckets must keep their untouched
-                # co-resident components, read back bucket-pruned.
-                touched_buckets = self._bucket_set(
-                    touched, "component"
-                ) | self._bucket_set(resolved, "component")
-                prior_tb = self.labels_table.read_buckets(
-                    spark, touched_buckets
-                )
-                if prior_tb is None:
-                    write_labels = resolved
-                else:
-                    keep = prior_tb.join(
-                        touched, "component", "left_anti"
-                    ).select("id", "component")
-                    write_labels = keep.unionByName(resolved)
+                write_labels = keep.unionByName(resolved)
         if timings is not None:
             write_labels = write_labels.persist()
             write_labels.count()
@@ -987,31 +939,21 @@ class NearDupIndex:
         # stage) must detect a takeover BEFORE mutating the store
         self._heartbeat()
         self._commit_meta()  # first mutation stamps the config
-        if self.n_buckets is None:
-            self.docs_table.append(b)
-            self.bands_table.append(new_bands)
-            self.labels_table.overwrite(write_labels)
-        else:
-            bcol = BucketedSnapshotTable.BUCKET_COL
-            self.docs_table.append_bucketed(
-                b.withColumn(
-                    bcol, bucket_of(F.col(self.id_col), self.n_buckets)
-                )
-            )
-            self.bands_table.append_bucketed(
-                new_bands.withColumn(
-                    bcol, bucket_of(F.col("key"), self.n_buckets)
-                )
-            )
-            self.labels_table.overwrite_buckets(
-                write_labels.withColumn(
-                    bcol, bucket_of(F.col("component"), self.n_buckets)
-                ),
-                touched_buckets,
-            )
-            if timings is not None:
-                timings["labels_buckets_rewritten"] = len(touched_buckets)
+        bcol = BucketedSnapshotTable.BUCKET_COL
+        self.docs_table.append_bucketed(
+            b.withColumn(bcol, bucket_of(F.col(self.id_col), self.n_buckets))
+        )
+        self.bands_table.append_bucketed(
+            new_bands.withColumn(bcol, bucket_of(F.col("key"), self.n_buckets))
+        )
+        self.labels_table.overwrite_buckets(
+            write_labels.withColumn(
+                bcol, bucket_of(F.col("component"), self.n_buckets)
+            ),
+            touched_buckets,
+        )
         if timings is not None:
+            timings["labels_buckets_rewritten"] = len(touched_buckets)
             timings["commit_sec"] = round(_time.perf_counter() - t0, 2)
             write_labels.unpersist()
         if prior is not None:

@@ -283,12 +283,6 @@ def extract_anchors(pages: DataFrame, html_col: str = "html_str",
     return anchors_from_page_links(page_links(pages, html_col, url_col))
 
 
-def extract_anchors_raw(pages: DataFrame, html_col: str = "html",
-                        url_col: str = "url") -> DataFrame:
-    """``extract_anchors`` off raw bytes via the fused kernel."""
-    return anchors_from_page_links(page_links_raw(pages, html_col, url_col))
-
-
 def page_titles(links: DataFrame) -> DataFrame:
     """(page_links rows) -> (url, title) for pages with a non-empty
     normalized ``<title>`` (first title element wins, as in both regex

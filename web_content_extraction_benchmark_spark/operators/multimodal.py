@@ -310,9 +310,9 @@ def extract_media_features(media: DataFrame) -> DataFrame:
 
     The payload column is isolated to this one stage; batch ROW COUNT is
     governed by the session's Arrow batch size
-    (``spark.sql.execution.arrow.maxRecordsPerBatch`` /
-    ``SPARK_GRAFT_ARROW_BATCH``) — size it to ~256 MB / p99_payload for
-    MB-scale media.  All three kinds decode for real (BMP / PCM16 WAV /
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``, settable through
+    ``get_spark(extra_conf=...)``) — size it to ~256 MB / p99_payload
+    for MB-scale media.  All three kinds decode for real (BMP / PCM16 WAV /
     uncompressed-DIB AVI)."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -17,16 +17,6 @@ from ..functions.udfs import src_word_count_udf, word_count_col
 COMPLEXITY_QUANTILE_LABELS = [0.25, 0.33, 0.5, 0.66, 0.75]
 
 
-def semi_join_whitelist(df: DataFrame, keys: DataFrame, on: str) -> DataFrame:
-    """R2: keep rows whose key exists in the whitelist (extract.py:63-74)."""
-    return df.join(keys.select(on), on, "left_semi")
-
-
-def anti_join_done(df: DataFrame, done: DataFrame, on: str) -> DataFrame:
-    """R3: drop rows already processed (skip_existing, extract.py:93-104)."""
-    return df.join(done.select(on), on, "left_anti")
-
-
 def page_complexity(pages: DataFrame, truth: DataFrame) -> DataFrame:
     """R18: complexity = 1 - clip(truth_tokens / src_tokens, 0, 1)
     (reference complexity.py:52-73).  truth tokens counted JVM-side;
@@ -77,13 +67,6 @@ def filter_complexity_band(scores: DataFrame, complexity: DataFrame,
     return scores.join(banded.select("url"), "url", "left_semi")
 
 
-def binarize_by_threshold(complexity: DataFrame, threshold: float) -> DataFrame:
-    """R20: label = int(complexity >= threshold) (complexity.py:188-194)."""
-    return complexity.withColumn(
-        "label", F.when(F.col("complexity") >= threshold, 1).otherwise(0)
-    )
-
-
 def band_counts(complexity: DataFrame, low: float, high: float) -> DataFrame:
     """R21: pages below/within/above thresholds per dataset
     (complexity.py:360-363) — conditional aggregation."""
@@ -97,27 +80,3 @@ def band_counts(complexity: DataFrame, low: float, high: float) -> DataFrame:
         F.sum(F.when(F.col("complexity") >= high, 1).otherwise(0)).alias("n_high"),
         F.count("*").alias("n_pages"),
     )
-
-
-def rank_models(agg: DataFrame, by: str = "median_dist") -> DataFrame:
-    """R16: models ranked by a score column on the _micro pseudo-dataset."""
-    from pyspark.sql.window import Window
-
-    window = Window.orderBy(F.desc(by), F.asc("model"))
-    return (
-        agg.filter(F.col("dataset") == "_micro")
-        .select("model", by)
-        .withColumn("rank", F.rank().over(window))
-    )
-
-
-def dataset_counts(df: DataFrame, key: str = "dataset") -> DataFrame:
-    """R23: rows per dataset."""
-    return df.groupBy(key).count()
-
-
-def dedupe_pages(df: DataFrame, key: str = "url") -> DataFrame:
-    """R24: reference dict semantics collapse duplicate page ids; in Spark,
-    keep one deterministic row per key (here: arbitrary-but-documented
-    dropDuplicates; the reference is last-write-wins, extract.py:119)."""
-    return df.dropDuplicates([key])

@@ -17,12 +17,11 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # Arrow batch sizing is THE throughput lever for Python-heavy stages:
 # too small (512) and per-batch overhead dominates (measured 2.6x slower
 # than 4096 on ~1.5 kB pages); too big and one batch of MB-scale pages
-# blows executor memory.  Default suits ~1-100 kB documents; tune down
-# via SPARK_GRAFT_ARROW_BATCH for giant-page corpora (batch_rows ~
-# 256 MB / p99_page_bytes).
-ARROW_MAX_RECORDS_PER_BATCH = int(
-    os.environ.get("SPARK_GRAFT_ARROW_BATCH", "4096")
-)
+# blows executor memory.  Default suits ~1-100 kB documents; for
+# giant-page corpora pass get_spark(extra_conf=...) either
+# spark.sql.execution.arrow.maxRecordsPerBatch ~ 256 MB / p99_page_bytes
+# or a byte cap via spark.sql.execution.arrow.maxBytesPerBatch.
+ARROW_MAX_RECORDS_PER_BATCH = 4096
 
 _WARMED_APP_IDS: set[str] = set()
 

@@ -309,16 +309,6 @@ def l3s_original_html(source: str, text: str) -> str:
     )
 
 
-def l3s_original_sql() -> str:
-    """DuckDB expression for the original L3S page string — generated from
-    the same Python template via sentinel substitution (lockstep)."""
-    rendered = l3s_original_html("\x00SRC\x00", "\x00TXT\x00")
-    expr = "'" + rendered.replace("'", "''") + "'"
-    expr = expr.replace("\x00SRC\x00", "' || source || '")
-    expr = expr.replace("\x00TXT\x00", "' || text || '")
-    return expr
-
-
 def synthesize_l3s_tree(sf_dir: str, out_dir: str, mod: int = 7) -> int:
     """Write L3S-GN1-style original/ + annotated/ trees."""
     import os

@@ -295,18 +295,20 @@ class BucketedSnapshotTable(SnapshotTable):
     BUCKET_COL = "_bucket"
 
     def __init__(self, path: str, n_buckets: int):
+        if not isinstance(n_buckets, int) or n_buckets <= 0:
+            raise ValueError(
+                f"n_buckets must be a positive int, got {n_buckets!r}"
+            )
         super().__init__(path)
-        if n_buckets <= 0:
-            raise ValueError(f"n_buckets must be positive, got {n_buckets}")
         self.n_buckets = n_buckets
 
     # -- manifest helpers ----------------------------------------------
     def _bucket_manifest(self) -> tuple[dict[int, list[str]],
                                         dict[int, int]]:
         """(bucket -> files, bucket -> rows) of the latest snapshot.
-        A legacy flat manifest (no bucket map) surfaces as bucket -1 —
-        bucket membership of its files is unknown, so pruned reads fall
-        back to all of them and partial overwrites refuse."""
+        Raises on a flat manifest (one committed by plain
+        ``SnapshotTable``): bucket membership of its files is unknown,
+        so no pruned read or bucket commit can be correct on it."""
         version = self._latest_version()
         if version == 0:
             return {}, {}
@@ -314,8 +316,11 @@ class BucketedSnapshotTable(SnapshotTable):
             manifest = json.load(f)
         raw = manifest.get("buckets")
         if raw is None:
-            return ({-1: manifest["files"]},
-                    {-1: manifest["row_count"]})
+            raise ValueError(
+                f"{self.path} snapshot v{version} is a flat manifest (no "
+                "bucket map) — bucket membership of its files is "
+                "unknown, so bucketed reads and commits refuse it"
+            )
         rows = manifest.get("bucket_rows", {})
         return (
             {int(b): files for b, files in raw.items()},
@@ -403,8 +408,8 @@ class BucketedSnapshotTable(SnapshotTable):
     def append_bucketed(self, df: DataFrame) -> Snapshot:
         """Append rows (df must carry BUCKET_COL); new files join the
         per-bucket file lists of the parent manifest."""
+        files, rows = self._bucket_manifest()  # a flat one refuses first
         new_files, new_rows = self._write_bucketed_files(df)
-        files, rows = self._bucket_manifest()
         merged_files = {b: list(fs) for b, fs in files.items()}
         merged_rows = dict(rows)
         for bucket, fs in new_files.items():
@@ -422,12 +427,6 @@ class BucketedSnapshotTable(SnapshotTable):
         the touched buckets' row count, not the table size (carried
         buckets' row counts come from the parent manifest, no re-scan)."""
         files, rows = self._bucket_manifest()
-        if -1 in files:
-            raise ValueError(
-                "overwrite_buckets on a legacy flat manifest — bucket "
-                "membership of existing files is unknown; rewrite the "
-                "table with append_bucketed/overwrite_buckets(all) first"
-            )
         new_files, new_rows = self._write_bucketed_files(df)
         stray = set(new_files) - set(touched)
         if stray:
@@ -447,27 +446,16 @@ class BucketedSnapshotTable(SnapshotTable):
     # -- read path -----------------------------------------------------
     def read_buckets(self, spark: SparkSession,
                      buckets: set[int]) -> DataFrame | None:
-        """Read only the requested buckets' files (None = empty table).
-        A legacy flat manifest (no bucket map) falls back to all files —
-        correct, just unpruned."""
+        """Read only the requested buckets' files (None = empty table)."""
         bucket_map, _ = self._bucket_manifest()
-        if not bucket_map:
-            return None
-        if -1 in bucket_map:
-            files = bucket_map[-1]
-        else:
-            files = [
-                f for b in sorted(buckets)
-                for f in bucket_map.get(b, [])
-            ]
+        files = [f for b in sorted(buckets) for f in bucket_map.get(b, [])]
         if not files:
             return None
         return spark.read.parquet(*files)
 
     # -- maintenance ---------------------------------------------------
     def bucket_file_counts(self) -> dict[int, int]:
-        """Files per bucket of the latest snapshot (legacy flat
-        manifests surface as ``{-1: n}``)."""
+        """Files per bucket of the latest snapshot."""
         files, _ = self._bucket_manifest()
         return {b: len(fs) for b, fs in files.items()}
 
@@ -492,11 +480,6 @@ class BucketedSnapshotTable(SnapshotTable):
         and every later probe's task/open count — grows with the
         APPEND COUNT rather than the data volume."""
         files, rows = self._bucket_manifest()
-        if -1 in files:
-            raise ValueError(
-                "compact_buckets on a legacy flat manifest — bucket "
-                "membership of existing files is unknown"
-            )
         to_compact = {b for b, fs in files.items()
                       if len(fs) > max_files}
         if not to_compact:
