@@ -1549,18 +1549,9 @@ def _raw_tree(sf_dir: str, kind: str) -> str:
     from web_content_extraction_benchmark_spark.sources import raw_datasets
 
     synth = {
-        "cleaneval": raw_datasets.synthesize_cleaneval_tree,
-        "l3s": raw_datasets.synthesize_l3s_tree,
-        "cleanportaleval": raw_datasets.synthesize_cleanportaleval_tree,
-        "dragnet": raw_datasets.synthesize_dragnet_tree,
-        "cetd": raw_datasets.synthesize_cetd_tree,
-        "readability": raw_datasets.synthesize_readability_tree,
-        "scrapinghub": raw_datasets.synthesize_scrapinghub_tree,
-        "googletrends": raw_datasets.synthesize_googletrends_tree,
-        "pdf": raw_datasets.synthesize_pdf_tree,
         "warc": _synthesize_warc_tree,
         "mixed": _synthesize_mixed_tree,
-    }[kind]
+    }.get(kind) or getattr(raw_datasets, f"synthesize_{kind}_tree")
     tag = os.path.basename(sf_dir.rstrip("/"))
     out = f"/tmp/wceb_raw/{kind}_{tag}"
     marker = os.path.join(out, "_done")
@@ -1608,19 +1599,18 @@ def q_convert_cleaneval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (gzip/BOM rows included) -> <text> unwrap -> truth derivation (URL
     line + clean-markup body text) -> whitelist join."""
     from web_content_extraction_benchmark_spark.sources.raw_datasets import (
-        convert_cleaneval,
+        convert_dataset,
     )
 
-    root = _raw_tree(sf_dir, "cleaneval")
-    return convert_cleaneval(spark, f"{root}/orig", f"{root}/clean")
+    return convert_dataset(spark, "cleaneval", _raw_tree(sf_dir, "cleaneval"))
 
 
 def q_convert_raw_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1 tail: the 7 remaining raw dataset formats in one oracle row
-    (reference dataset_readers.py:171-317) — L3S-GN1 (CSS-annotated
-    truth), CleanPortalEval (CleanEval semantics under input/
-    GoldStandard), Dragnet (verbatim .html.corrected.txt truths, 3-part
-    suffix keys), CETD (per-vertical trees, composite keys), Readability
+    """S1 tail: the 7 other ``FORMATS`` entries, each run through
+    ``convert_dataset``, in one oracle row (reference
+    dataset_readers.py:171-317) — L3S-GN1 (CSS-annotated truth),
+    CleanPortalEval (CleanEval semantics under input/GoldStandard),
+    Dragnet (verbatim .html.corrected.txt truths, 3-part suffix keys), CETD (per-vertical trees, composite keys), Readability
     (per-case dirs, expected.html body text), ScrapingHub (gzipped pages,
     one ground-truth.json, page_id = sha256 of DECOMPRESSED bytes — the
     reference's re-hash quirk, oracled), GoogleTrends2017
@@ -1637,32 +1627,16 @@ def q_convert_raw_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     null_id = F.lit(None).cast("string").alias("page_id")
 
-    def tagged(fmt: str, df: DataFrame, with_id: bool = False) -> DataFrame:
-        cols = [F.lit(fmt).alias("format"), "source", "plaintext"]
-        cols.append(F.col("page_id") if with_id else null_id)
-        return df.select(*cols)
+    def tagged(fmt: str, df: DataFrame) -> DataFrame:
+        page_id = F.col("page_id") if "page_id" in df.columns else null_id
+        return df.select(F.lit(fmt).alias("format"), "source", "plaintext",
+                         page_id)
 
-    l3s = _raw_tree(sf_dir, "l3s")
-    cpe = _raw_tree(sf_dir, "cleanportaleval")
-    dragnet = _raw_tree(sf_dir, "dragnet")
-    cetd = _raw_tree(sf_dir, "cetd")
-    readability = _raw_tree(sf_dir, "readability")
-    sh = _raw_tree(sf_dir, "scrapinghub")
-    gt = _raw_tree(sf_dir, "googletrends")
     parts = [
-        tagged("l3s", rd.convert_l3s(
-            spark, f"{l3s}/original", f"{l3s}/annotated")),
-        tagged("cleanportaleval", rd.convert_cleanportaleval(
-            spark, f"{cpe}/input", f"{cpe}/GoldStandard")),
-        tagged("dragnet", rd.convert_dragnet(
-            spark, f"{dragnet}/HTML", f"{dragnet}/corrected/Corrected")),
-        tagged("cetd", rd.convert_cetd(spark, cetd)),
-        tagged("readability", rd.convert_readability_ds(
-            spark, f"{readability}/test-pages")),
-        tagged("scrapinghub", rd.convert_scrapinghub(spark, sh),
-               with_id=True),
-        tagged("googletrends", rd.convert_googletrends(
-            spark, f"{gt}/raw_html", f"{gt}/prepared_html")),
+        tagged(fmt, rd.convert_dataset(spark, fmt, _raw_tree(sf_dir, fmt)))
+        for fmt in rd.FORMATS
+        if fmt != "cleaneval"  # its own query: convert_cleaneval
+    ] + [
         tagged("pdf", rd.convert_pdf(spark, _raw_tree(sf_dir, "pdf"))),
         # warc: Common-Crawl-style container ingest (r7).  read_warc
         # walks gzip members / dechunks HTTP inside a per-file map, then

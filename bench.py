@@ -424,11 +424,10 @@ def main() -> None:
     # join (the S1 path at sf volume)
     def q10():
         from web_content_extraction_benchmark_spark.sources.raw_datasets import (
-            convert_cleaneval,
+            convert_dataset,
         )
 
-        out = convert_cleaneval(spark, f"{raw_tree}/orig",
-                                f"{raw_tree}/clean")
+        out = convert_dataset(spark, "cleaneval", raw_tree)
         out.agg(
             F.count("*"), F.sum(F.length("html")),
             F.sum(F.length("plaintext")),

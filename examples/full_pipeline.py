@@ -42,7 +42,7 @@ def main() -> None:
         truth_table,
     )
     from web_content_extraction_benchmark_spark.sources.raw_datasets import (
-        convert_cleaneval,
+        convert_dataset,
         synthesize_cleaneval_tree,
     )
     from web_content_extraction_benchmark_spark.sources.reports import (
@@ -60,9 +60,7 @@ def main() -> None:
     #    html, truth) via binaryFile scan + decode + unwrap + whitelist.
     raw_root = os.path.join(out_dir, "raw_cleaneval")
     n_raw = synthesize_cleaneval_tree(sf_dir, raw_root)
-    converted = convert_cleaneval(
-        spark, f"{raw_root}/orig", f"{raw_root}/clean"
-    )
+    converted = convert_dataset(spark, "cleaneval", raw_root)
     print(f"[1] raw ingestion: {converted.count()} / {n_raw} pages converted")
 
     # 2. Pages table (the Iceberg-shaped input contract) + skew-defusing

@@ -37,18 +37,22 @@ def test_cli_extract_score_aggregate_complexity(tmp_path, spark, sf_dir):
 
 
 def test_cli_convert_datasets(tmp_path, spark, sf_dir):
-    from web_content_extraction_benchmark_spark.sources.raw_datasets import (
-        synthesize_cleaneval_tree,
+    """Every FORMATS layout converts through the CLI: one output row per
+    synthesized page, with the format's extra columns."""
+    from web_content_extraction_benchmark_spark.sources import (
+        raw_datasets as rd,
     )
 
-    raw = str(tmp_path / "raw")
-    out = str(tmp_path / "combined")
-    n = synthesize_cleaneval_tree(sf_dir, raw)
-    main(["convert-datasets", "--format", "cleaneval", "-i", raw,
-          "-o", out, "--golden"])
-    df = spark.read.json(out)
-    assert df.count() == n
-    assert {"source", "url", "html", "plaintext"} <= set(df.columns)
+    for fmt, spec in rd.FORMATS.items():
+        raw = str(tmp_path / fmt / "raw")
+        out = str(tmp_path / fmt / "combined")
+        n = getattr(rd, f"synthesize_{fmt}_tree")(sf_dir, raw)
+        main(["convert-datasets", "--format", fmt, "-i", raw,
+              "-o", out, "--golden"])
+        df = spark.read.json(out)
+        assert df.count() == n, fmt
+        assert {"source", "html", "plaintext", *spec.extra} \
+            <= set(df.columns), fmt
 
 
 def test_cli_rejects_unknown_model():

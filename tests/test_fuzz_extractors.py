@@ -5,6 +5,7 @@ error contract is ''-on-failure, never an exception escaping the kernel.
 These properties pin that, plus determinism, parser equivalence on the
 fuzzed inputs, and the short-document safety of the gram operators."""
 
+import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -148,3 +149,50 @@ def test_codec_garbage_never_crashes_undetected(payload):
             dec(payload)
         except ValueError:
             pass
+
+
+# AVI decoder totality: mutated/truncated payloads either decode or
+# raise ValueError — no other exception escapes (the ''-on-failure
+# kernel guard depends on it).
+@given(
+    st.integers(min_value=1, max_value=6),   # width
+    st.integers(min_value=1, max_value=4),   # height
+    st.integers(min_value=1, max_value=3),   # frames
+    st.data(),
+)
+@settings(max_examples=150, deadline=None)
+def test_avi_decoder_total_on_mutations(w, h, nf, data):
+    from web_content_extraction_benchmark_spark.operators.multimodal import (
+        decode_avi,
+        encode_avi,
+    )
+
+    colors = [
+        (
+            (data.draw(st.integers(0, 255)), 1, 2),
+            (3, data.draw(st.integers(0, 255)), 5),
+        )
+        for _ in range(nf)
+    ]
+    payload = bytearray(encode_avi(w, h, colors, 10))
+    # roundtrip must hold on the pristine payload
+    fps, frames = decode_avi(bytes(payload))
+    assert frames.shape == (nf, h, w, 3)
+
+    mode = data.draw(st.integers(0, 2))
+    if mode == 0:  # truncate
+        cut = data.draw(st.integers(0, len(payload)))
+        payload = payload[:cut]
+    elif mode == 1:  # flip one byte
+        pos = data.draw(st.integers(0, len(payload) - 1))
+        payload[pos] = data.draw(st.integers(0, 255))
+    else:  # splice random garbage
+        pos = data.draw(st.integers(0, len(payload)))
+        payload[pos:pos] = bytes(
+            data.draw(st.lists(st.integers(0, 255), max_size=8))
+        )
+    try:
+        fps2, frames2 = decode_avi(bytes(payload))
+        assert frames2.dtype == np.uint8  # decoded -> well-formed output
+    except ValueError:
+        pass  # the only allowed failure mode

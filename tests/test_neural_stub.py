@@ -12,6 +12,8 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from web_content_extraction_benchmark_spark.dom import body_or_root, parse_html
 from web_content_extraction_benchmark_spark.extractors import (
@@ -231,3 +233,65 @@ def test_spark_neural_equals_density_extractor(spark, sf_dir):
         for r in extract_answers(pages, ["main_content"]).collect()
     }
     assert neural == density
+
+
+# Batch-vs-per-page bit identity on RANDOM page sequences: boundary
+# zeroing of neighbor context must hold for every layout of
+# empty/short/long pages, not just the fixture corpus.
+_WORDS = ["join", "hash", "row", "Login", "Buy", "now", "tag", "one",
+          "qz9", "zz17"]
+
+
+@given(
+    st.lists(
+        st.one_of(
+            st.none(),  # a failed-parse page
+            st.lists(
+                st.tuples(
+                    st.sampled_from(["p", "h1", "nav", "li", "footer"]),
+                    st.lists(st.sampled_from(_WORDS), min_size=0,
+                             max_size=6),
+                ),
+                max_size=4,
+            ),
+        ),
+        min_size=1,
+        max_size=8,
+    )
+)
+@settings(max_examples=150, deadline=None)
+def test_batch_inference_bit_identical_on_random_pages(layouts):
+    from web_content_extraction_benchmark_spark.dom import (
+        body_or_root,
+        parse_html,
+    )
+    from web_content_extraction_benchmark_spark.extractors.density import (
+        segment_blocks,
+    )
+    from web_content_extraction_benchmark_spark.extractors.neural import (
+        FROZEN_WEIGHTS,
+        LeafSequenceMLP,
+        classify_page_batch,
+        neural_extract_from_tree,
+    )
+
+    model = LeafSequenceMLP(FROZEN_WEIGHTS)
+    htmls = []
+    for layout in layouts:
+        if layout is None:
+            htmls.append(None)
+            continue
+        body = "".join(
+            f"<{tag}>{' '.join(words)}</{tag}>" for tag, words in layout
+        )
+        htmls.append(f"<html><body>{body}</body></html>")
+    pages_blocks = [
+        segment_blocks(body_or_root(parse_html(h))) if h else None
+        for h in htmls
+    ]
+    batch = classify_page_batch(model, pages_blocks)
+    per_page = [
+        neural_extract_from_tree(parse_html(h), model) if h else ""
+        for h in htmls
+    ]
+    assert batch == per_page

@@ -1,6 +1,9 @@
 """Dedup / similarity / textstats / multimodal operator tests."""
 
+import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from web_content_extraction_benchmark_spark.operators.dedup import (
@@ -950,3 +953,50 @@ def test_band_keys_selectexpr_equals_column_form(spark, docs):
             "id", F.posexplode(F.array(*band_cols)).alias("band", "key")
         ).collect()}
         assert new == old and new
+
+
+# Property fuzz: the OPH signature kernel against a naive per-row
+# reference (routing + min + circular-left densification are the LSH
+# soundness contract).
+EMPTY = np.iinfo(np.int64).max
+K = 16
+
+
+def _naive_oph(arr: list[int], k: int) -> list[int]:
+    sig = [EMPTY] * k
+    for h in arr:
+        b = int(np.uint64(np.int64(h)) % np.uint64(k))
+        sig[b] = min(sig[b], int(h))
+    out = list(sig)
+    for i in range(k):
+        if out[i] == EMPTY:
+            for d in range(1, k + 1):
+                j = (i - d) % k
+                if sig[j] != EMPTY:
+                    out[i] = sig[j]
+                    break
+    return out
+
+
+@given(
+    st.lists(
+        st.lists(
+            st.integers(min_value=-(2**62), max_value=2**62), max_size=40
+        ),
+        min_size=1,
+        max_size=12,
+    )
+)
+# a shingle-less row must keep the EMPTY sentinel in every bin next to
+# a densified one (all-null bins would collide on one band key)
+@example([[], [7, 11, 13]])
+@settings(max_examples=300, deadline=None)
+def test_oph_kernel_matches_naive_reference(rows):
+    from web_content_extraction_benchmark_spark.operators.dedup import (
+        oph_signatures,
+    )
+
+    got = oph_signatures(rows, K)
+    assert got.shape == (len(rows), K)
+    for r, g in zip(rows, got):
+        assert list(g) == _naive_oph(r, K)

@@ -546,3 +546,51 @@ def test_rotated_pages_cluster_in_display_orientation():
     assert P._unrotate_runs([r], 270, (0, 0, 612, 792))[0].x == 772.0
     with pytest.raises(P.PdfError):
         P._unrotate_runs([r], 45, (0, 0, 612, 792))
+
+
+# Seeded fuzz: LZW encode/decode are exact inverses across width growth
+# and table reset; random texts through random doc_id arms round-trip,
+# and single-byte corruptions parse or raise a ValueError-family error.
+def test_fuzz_lzw_roundtrip():
+    rng = random.Random(7)
+    for _ in range(40):
+        n = rng.randrange(0, 30_000)
+        if rng.random() < 0.5:
+            data = bytes(rng.randrange(256) for _ in range(n))
+        else:
+            data = bytes(rng.choice(b"aab cc\n") for _ in range(n))
+        assert P.lzw_decode(W.lzw_encode(data)) == data
+
+
+def test_fuzz_pdf_arm_roundtrip_and_corruption():
+    vocab = ("alpha beta gamma delta epsilon zeta eta theta iota "
+             "kappa 0 1 42 999").split()
+    rng = random.Random(11)
+    for case in range(50):
+        doc_id = rng.randrange(0, 800)
+        text = " ".join(rng.choice(vocab)
+                        for _ in range(rng.randrange(1, 120)))
+        payload = W.encode_pdf(doc_id, text)
+        assert P.pdf_plaintext(payload) == text, (case, doc_id)
+        # single-byte corruption: parse or a ValueError-family error
+        # (PdfError subclasses it; the Spark kernel catches per-row
+        # regardless) — never a hang, recursion blowup, or an
+        # exception from outside that family
+        b = bytearray(payload)
+        pos = rng.randrange(len(b))
+        b[pos] = (b[pos] + 1 + rng.randrange(255)) & 0xFF
+        try:
+            P.pdf_plaintext(bytes(b))
+        except ValueError:
+            pass
+        except RecursionError:
+            pytest.fail(f"recursion blowup at case {case}")
+    # Trailing whitespace or a trailing comment at end of input must end
+    # the token stream, not backtrack into a phantom token.
+    lex = P._Lexer(b"ET\n")
+    toks = []
+    while (tok := lex.next_token()) is not None:
+        toks.append(tok)
+    assert toks == ["ET"]
+    for content in (b"BT (hi) Tj ET\n% c'", b"BT (hi) Tj ET\n% c ("):
+        assert [r.text for r in P.interpret_text(content)] == ["hi"]

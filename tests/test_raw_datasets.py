@@ -7,8 +7,7 @@ import os
 from web_content_extraction_benchmark_spark.sources.raw_datasets import (
     cleaneval_truth,
     cleaneval_unwrap,
-    convert_cleaneval,
-    convert_l3s,
+    convert_dataset,
     l3s_truth,
 )
 
@@ -16,11 +15,7 @@ FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "raw")
 
 
 def test_cleaneval_convert_end_to_end(spark):
-    out = convert_cleaneval(
-        spark,
-        os.path.join(FIXTURES, "cleaneval", "orig"),
-        os.path.join(FIXTURES, "cleaneval", "clean"),
-    )
+    out = convert_dataset(spark, "cleaneval", os.path.join(FIXTURES, "cleaneval"))
     rows = {r.source: r for r in out.collect()}
     # page 5 has no truth file -> whitelist-dropped
     assert set(rows) == {"1", "2", "3", "4"}
@@ -39,11 +34,7 @@ def test_cleaneval_convert_end_to_end(spark):
 
 
 def test_l3s_convert_end_to_end(spark):
-    out = convert_l3s(
-        spark,
-        os.path.join(FIXTURES, "l3s", "original"),
-        os.path.join(FIXTURES, "l3s", "annotated"),
-    )
+    out = convert_dataset(spark, "l3s", os.path.join(FIXTURES, "l3s"))
     rows = {r.source: r for r in out.collect()}
     assert set(rows) == {"a", "b"}
     # block parents prefix a newline; trailing space before it is kept
@@ -75,9 +66,9 @@ def test_l3s_truth_skips_unannotated_and_nonleaf():
 
 
 def test_new_format_converters_match_fixtures(spark, sf_dir, tmp_path):
-    """The 6 remaining raw formats (dragnet/cetd/readability/scrapinghub/
-    googletrends/cleanportaleval): converted plaintext equals the planted
-    truth; scrapinghub page_id is the sha256 of the DECOMPRESSED bytes."""
+    """Dragnet/CETD/Readability/ScrapingHub/GoogleTrends: converted
+    plaintext equals the planted truth; scrapinghub page_id is the sha256
+    of the DECOMPRESSED bytes."""
     import gzip
     import hashlib
     import os
@@ -91,6 +82,7 @@ def test_new_format_converters_match_fixtures(spark, sf_dir, tmp_path):
     root = str(tmp_path)
     n = rd.synthesize_dragnet_tree(sf_dir, f"{root}/dg")
     rd.synthesize_cetd_tree(sf_dir, f"{root}/cetd")
+    rd.synthesize_readability_tree(sf_dir, f"{root}/rb")
     rd.synthesize_scrapinghub_tree(sf_dir, f"{root}/sh")
     rd.synthesize_googletrends_tree(sf_dir, f"{root}/gt")
 
@@ -101,18 +93,21 @@ def test_new_format_converters_match_fixtures(spark, sf_dir, tmp_path):
     }
     assert len(docs) == n
 
-    dg = rd.convert_dragnet(
-        spark, f"{root}/dg/HTML", f"{root}/dg/corrected/Corrected"
-    ).collect()
+    dg = rd.convert_dataset(spark, "dragnet", f"{root}/dg").collect()
     assert len(dg) == n
     assert all(r.plaintext == docs[r.source] for r in dg)
 
-    ct = rd.convert_cetd(spark, f"{root}/cetd").collect()
+    ct = rd.convert_dataset(spark, "cetd", f"{root}/cetd").collect()
     assert len(ct) == n
     assert all(r.plaintext == docs[r.source.split("_", 1)[1]] for r in ct)
     assert all(r.source.split("_", 1)[0] in ("BBC", "wiki") for r in ct)
 
-    sh = rd.convert_scrapinghub(spark, f"{root}/sh").collect()
+    # per-case directories: the key is the case directory's name
+    rb = rd.convert_dataset(spark, "readability", f"{root}/rb").collect()
+    assert len(rb) == n
+    assert all(r.plaintext == docs[r.source] for r in rb)
+
+    sh = rd.convert_dataset(spark, "scrapinghub", f"{root}/sh").collect()
     assert len(sh) == n
     assert all(r.plaintext == docs[r.source] for r in sh)
     one = sh[0]
@@ -121,9 +116,7 @@ def test_new_format_converters_match_fixtures(spark, sf_dir, tmp_path):
     )
     assert one.page_id == hashlib.sha256(data).hexdigest()
 
-    gt = rd.convert_googletrends(
-        spark, f"{root}/gt/raw_html", f"{root}/gt/prepared_html"
-    ).collect()
+    gt = rd.convert_dataset(spark, "googletrends", f"{root}/gt").collect()
     assert len(gt) == n
     assert all(r.plaintext.split("\n", 1)[1] == docs[r.source] for r in gt)
 

@@ -3,6 +3,9 @@ equality (the patterns are pinned to the Java/RE2 common subset),
 idempotence, ordering (card runs before phone), and the JVM-side
 no-shuffle plan contract."""
 
+import random
+import string
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -135,3 +138,59 @@ def test_rules_are_java_re2_common_subset():
     for pattern, _ in PII_RULES:
         for banned in ("(?=", "(?!", "(?<", "\\1", "++", "*+", "?+"):
             assert banned not in pattern, (pattern, banned)
+
+
+# Seeded adversarial fuzz: random digit/colon/dot/@-laden strings must
+# scrub byte-identically in Spark and DuckDB (one batched run per
+# engine) and be idempotent.
+N_CASES = 400
+
+
+def _rng_strings(seed: int, alphabet: str, prefixes: list[str]) -> list[str]:
+    rng = random.Random(seed)
+    out = []
+    for i in range(N_CASES):
+        body = "".join(
+            rng.choice(alphabet) for _ in range(rng.randrange(0, 60))
+        )
+        out.append(rng.choice(prefixes) + body)
+    return out
+
+
+@pytest.fixture(scope="module")
+def duck():
+    return duckdb.connect()
+
+
+def test_redaction_fuzz_cross_engine(spark, duck):
+    from web_content_extraction_benchmark_spark.operators.redaction import (
+        redact_pii,
+        redact_pii_sql,
+    )
+
+    cases = _rng_strings(
+        911,
+        string.digits + "abcdefABCDEF.:-+ @x" + string.ascii_lowercase[:6],
+        ["", "ip ", "+", "::", "fe80:", "4012-", "a@b."],
+    )
+    df = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(cases)], "i long, text string"
+    )
+    once = redact_pii(df)
+    got = {r.i: r.text for r in once.collect()}
+    duck.execute("CREATE OR REPLACE TABLE fuzz_pii(i BIGINT, text VARCHAR)")
+    duck.executemany(
+        "INSERT INTO fuzz_pii VALUES (?,?)", list(enumerate(cases))
+    )
+    want = dict(
+        duck.execute(
+            f"SELECT i, {redact_pii_sql('text')} FROM fuzz_pii"
+        ).fetchall()
+    )
+    diffs = {
+        i: (cases[i], got[i], want[i]) for i in got if got[i] != want[i]
+    }
+    assert not diffs, list(diffs.items())[:3]
+    # idempotence (placeholders never re-match)
+    twice = {r.i: r.text for r in redact_pii(once).collect()}
+    assert twice == got

@@ -225,6 +225,19 @@ def test_empty_and_gzip_edge_rows(spark, pages):
     assert rows and all(r.plaintext == r.gold for r in rows)
 
 
+def test_undefined_meta_charset_falls_back_instead_of_failing(spark):
+    """codecs.lookup("undefined") succeeds but decoding with it raises a
+    bare UnicodeError: such a page must fall through to utf-8/cp1252,
+    not fail the whole Spark task."""
+    from web_content_extraction_benchmark_spark.extractors import EXTRACTORS
+
+    raw = b'<meta charset="undefined"><p>x\xff</p>'
+    assert decode_html(raw) == '<meta charset="undefined"><p>x\xff</p>'
+    page = spark.createDataFrame([("u", raw)], "url string, html binary")
+    rows = extract_answers(page).collect()
+    assert sorted(r.model for r in rows) == sorted(EXTRACTORS)
+
+
 def test_ensemble_partial_answer_coverage(spark, pages):
     """Preloaded answer tables may cover only some pages: with the urls=
     page universe, uncovered pages emit '' instead of vanishing."""

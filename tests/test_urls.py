@@ -3,6 +3,8 @@ equality on messy inputs, rule semantics (case, ports, tracking
 params, sort, fragment), idempotence, passthrough of non-URLs, and the
 JVM-side no-shuffle plan contract."""
 
+import random
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -223,3 +225,76 @@ def test_surt_groups_subdomains_contiguously():
     # all example,a* keys (apex + subdomains) form one contiguous run
     first, n = in_domain.index(True), sum(in_domain)
     assert all(in_domain[first:first + n]) and n == 4
+
+
+# Seeded adversarial fuzz: random strings over a '%'/hex/delimiter-heavy
+# alphabet must normalize byte-identically in Spark and DuckDB (one
+# batched run per engine), and the canonical form must be a fixed point.
+N_CASES = 400
+
+
+def _rng_strings(seed: int, alphabet: str, prefixes: list[str]) -> list[str]:
+    rng = random.Random(seed)
+    out = []
+    for i in range(N_CASES):
+        body = "".join(
+            rng.choice(alphabet) for _ in range(rng.randrange(0, 60))
+        )
+        out.append(rng.choice(prefixes) + body)
+    return out
+
+
+@pytest.fixture(scope="module")
+def duck():
+    return duckdb.connect()
+
+
+def test_url_canonicalization_fuzz_cross_engine(spark, duck):
+    from web_content_extraction_benchmark_spark.operators.urls import (
+        canonical_url_sql,
+        canonicalize_urls,
+    )
+
+    cases = _rng_strings(
+        20260817,
+        "%41%2f%zZ09afAF.:/?#&=@~_- \tß€",
+        ["https://", "HTTP://", "ftp://U:p@", "", "%", "https://h.ex/"],
+    )
+    df = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(cases)], "i long, url string"
+    )
+    # cross-engine leg runs fold_idn=False: canonical_url_sql mirrors
+    # the punycode-free subset by contract (IDNA ToASCII is not
+    # SQL-expressible; the fold is value-oracled via planted hosts in
+    # the page_ids arm) — the r7 fold default silently broke this
+    # comparison until the test pinned the mirrored configuration
+    once = canonicalize_urls(df, fold_idn=False)
+    got = {r.i: r.url for r in once.collect()}
+    duck.execute("CREATE OR REPLACE TABLE fuzz_urls(i BIGINT, url VARCHAR)")
+    duck.executemany(
+        "INSERT INTO fuzz_urls VALUES (?,?)", list(enumerate(cases))
+    )
+    want = dict(
+        duck.execute(
+            f"SELECT i, {canonical_url_sql('url')} FROM fuzz_urls"
+        ).fetchall()
+    )
+    diffs = {
+        i: (cases[i], got[i], want[i])
+        for i in got
+        if got[i] != want[i]
+    }
+    assert not diffs, list(diffs.items())[:3]
+    # idempotence: canonical output is a fixed point
+    twice = {
+        r.i: r.url
+        for r in canonicalize_urls(once, fold_idn=False).collect()
+    }
+    assert twice == got
+    # the fold-on DEFAULT must also be a fixed point on hostile input
+    # (punycoded labels re-fold to themselves; un-encodable labels
+    # pass through) even where no SQL mirror exists
+    folded = canonicalize_urls(df)
+    fold_once = {r.i: r.url for r in folded.collect()}
+    fold_twice = {r.i: r.url for r in canonicalize_urls(folded).collect()}
+    assert fold_twice == fold_once

@@ -5,6 +5,7 @@ synthetic pages table."""
 from datetime import datetime, timezone
 
 import gzip
+import random
 import pytest
 
 from web_content_extraction_benchmark_spark.sources import warc as W
@@ -537,3 +538,79 @@ def test_sink_digest_dedup_writes_revisits(spark, tmp_path):
     manifest2 = W.write_warc(df, out2)
     assert sum(m["n_records"] for m in manifest2) == 4
     assert sum(m["n_revisits"] for m in manifest2) == 0
+
+
+# Seeded fuzz of chunk-fed WARC framing: random record sets under random
+# gzip member groupings, inter-record whitespace, chunked/plain HTTP
+# framing and every chunk size from 1 byte up — the reader must recover
+# the exact (headers, payload) sequence or raise WarcError, never
+# mis-frame silently.
+def _random_records(rng: random.Random) -> list[tuple[str, bytes]]:
+    recs = []
+    for i in range(rng.randrange(1, 8)):
+        body = bytes(rng.randrange(256)
+                     for _ in range(rng.randrange(0, 900)))
+        recs.append((f"https://f{i}.example/{i}",
+                     W.build_http_response(
+                         body, chunked=rng.random() < 0.4)))
+    return recs
+
+
+def _pack(rng: random.Random, raw_records: list[bytes]) -> bytes:
+    """Random container shape: plain vs gzip, member-per-record vs
+    grouped members vs one member, optional inter-record CRLF pad."""
+    pad = b"\r\n" * rng.randrange(0, 3)
+    blob = pad.join(raw_records) + (b"\r\n" if rng.random() < 0.5 else b"")
+    if rng.random() < 0.3:
+        return blob  # plain .warc
+    if rng.random() < 0.5:
+        return b"".join(gzip.compress(r + pad, mtime=0)
+                        for r in raw_records)
+    # random member grouping
+    out = b""
+    i = 0
+    while i < len(raw_records):
+        j = min(len(raw_records), i + rng.randrange(1, 4))
+        out += gzip.compress(pad.join(raw_records[i:j]), mtime=0)
+        i = j
+    return out
+
+
+def test_fuzz_warc_chunk_framing_roundtrip():
+    for seed in range(60):
+        rng = random.Random(seed)
+        recs = _random_records(rng)
+        raws = [
+            W._warc_record(
+                [("WARC-Type", "response"), ("WARC-Target-URI", url),
+                 ("WARC-Payload-Digest", W.payload_digest(
+                     W.parse_http_response(payload)[2]))],
+                payload)
+            for url, payload in recs
+        ]
+        blob = _pack(rng, raws)
+        chunk = rng.choice([1, 3, 17, 256, 1 << 14, 1 << 22])
+        got = list(W.iter_warc_records_chunks(
+            memoryview(blob)[i:i + chunk]
+            for i in range(0, len(blob), chunk)))
+        assert len(got) == len(recs), (seed, chunk)
+        for (url, payload), (h, pl) in zip(recs, got):
+            assert h["warc-target-uri"] == url
+            status, hh, body = W.parse_http_response(pl)
+            assert status == 200
+            assert W._check_digest(h, body) is True, (seed, url)
+
+
+def test_fuzz_warc_truncation_always_raises():
+    """Any strict prefix that cuts a record mid-way must raise
+    WarcError (plain) or WarcError (gzip member/record) — never
+    silently yield a torn record as complete."""
+    rng = random.Random(99)
+    rec = W._warc_record(
+        [("WARC-Type", "response"), ("WARC-Target-URI", "u")],
+        W.build_http_response(b"x" * 500))
+    for blob in (rec, gzip.compress(rec, mtime=0)):
+        for _ in range(40):
+            cut = rng.randrange(10, len(blob) - 1)
+            with pytest.raises(W.WarcError):
+                list(W.iter_warc_records(blob[:cut]))

@@ -16,7 +16,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ivf_crossover import K, N_CELLS, N_QUERIES, synthesize_corpus  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

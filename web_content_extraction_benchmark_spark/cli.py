@@ -19,6 +19,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sources.raw_datasets import FORMATS
+
 ANSWERS_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -39,21 +41,10 @@ SCORES_SCHEMA = T.StructType(
     ]
 )
 
-# format name -> (root-relative input args builder).  Paths follow the
-# layouts the reference readers expect (dataset_readers.py:171-317),
-# which the synthesize_*_tree writers reproduce.
-RAW_FORMATS = (
-    "cleaneval",
-    "cleanportaleval",
-    "l3s",
-    "dragnet",
-    "cetd",
-    "readability",
-    "scrapinghub",
-    "googletrends",
-    "pdf",
-    "warc",
-)
+# every --format name: the FORMATS table (the eight annotated datasets,
+# each layout written down once in sources/raw_datasets.py) plus the two
+# container formats, whose converters have no truth side
+RAW_FORMATS = (*FORMATS, "pdf", "warc")
 
 
 def _spark(args: argparse.Namespace) -> SparkSession:
@@ -138,24 +129,8 @@ def cmd_convert_datasets(args: argparse.Namespace) -> None:
     spark = _spark(args)
     root = args.input
     fmt = args.format
-    if fmt == "cleaneval":
-        df = rd.convert_cleaneval(spark, f"{root}/orig", f"{root}/clean")
-    elif fmt == "cleanportaleval":
-        df = rd.convert_cleanportaleval(
-            spark, f"{root}/input", f"{root}/GoldStandard"
-        )
-    elif fmt == "l3s":
-        df = rd.convert_l3s(spark, f"{root}/original", f"{root}/annotated")
-    elif fmt == "dragnet":
-        df = rd.convert_dragnet(
-            spark, f"{root}/HTML", f"{root}/corrected/Corrected"
-        )
-    elif fmt == "cetd":
-        df = rd.convert_cetd(spark, root)
-    elif fmt == "readability":
-        df = rd.convert_readability_ds(spark, f"{root}/test-pages")
-    elif fmt == "scrapinghub":
-        df = rd.convert_scrapinghub(spark, root)
+    if fmt in FORMATS:
+        df = rd.convert_dataset(spark, fmt, root)
     elif fmt == "pdf":
         df = rd.convert_pdf(spark, root)
     elif fmt == "warc":
@@ -164,8 +139,6 @@ def cmd_convert_datasets(args: argparse.Namespace) -> None:
         # parser, everything else through the HTML kernel); the key
         # falls back to the full url when the crawl's urls don't end in
         # a numeric doc id
-        from pyspark.sql import functions as F
-
         from .plans.pipeline import extract_mixed
         from .sources.warc import read_warc
 
@@ -176,10 +149,6 @@ def cmd_convert_datasets(args: argparse.Namespace) -> None:
         df = extract_mixed(read_warc(spark, root)) \
             .select(F.when(src != "", src).otherwise(F.col("url"))
                     .alias("source"), "url", "kind", "plaintext", "error")
-    else:  # googletrends
-        df = rd.convert_googletrends(
-            spark, f"{root}/raw_html", f"{root}/prepared_html"
-        )
     write_jsonl(df, args.output,
                 sort_by=[c for c in ("source", "url") if c in df.columns],
                 golden=args.golden)

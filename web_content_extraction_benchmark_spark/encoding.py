@@ -86,6 +86,9 @@ def decode_html(raw: bytes | None, fixed_encoding: str | None = None) -> str:
     for enc in candidates:
         try:
             return raw.decode(enc)
-        except (UnicodeDecodeError, LookupError):
+        except (UnicodeError, LookupError):
+            # UnicodeError, not just UnicodeDecodeError: a sniffed name
+            # can resolve to a codec that refuses every input
+            # (codecs.lookup("undefined") succeeds, decoding raises)
             continue
     return raw.decode("utf-8", errors="replace")

@@ -2,8 +2,12 @@
 format-specific unwrap / truth derivation -> whitelist semi-join.
 
 Distributed re-expression of the reference's dataset-reader family
-(/root/reference/src/extraction_benchmark/dataset_readers.py): the two
-representative formats are
+(``src/extraction_benchmark/dataset_readers.py:135-317``).
+The eight annotated formats differ only in data, so each is one
+``FORMATS`` entry — where its pages and truths live under the dataset
+root, how the join key is built, the page transform, the truth-row
+function and the extra output columns — and ``convert_dataset`` runs the
+same plan for all of them.  The two representative truth shapes:
 
 - CleanEval-style (dataset_readers.py:135-168): raw pages wrapped in a
   ``<text id=...>`` element (stripped), truth files carrying a leading
@@ -27,8 +31,13 @@ oracle formulas are trailing-whitespace-free.
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
 import re
-from typing import Iterator
+from dataclasses import dataclass
+from functools import partial
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -36,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..dom import BLOCK_ELEMENTS, body_or_root, parse_html
-from ..encoding import decode_html
+from ..encoding import decode_html, maybe_gunzip
 
 # CleanEval <text ...> wrapper strip (reference dataset_readers.py:146).
 _TEXT_TAG_RE = re.compile(r"(?:^<text [^>]+>\s*|\s*</text>$)", flags=re.MULTILINE)
@@ -98,12 +107,22 @@ def boilernet_truth(content: str) -> str:
     )
 
 
+def readability_truth(content: str) -> str:
+    """Readability test-pages truth: the ``expected.html`` body rendered
+    as text (reference dataset_readers.py:223-236).  Deviation
+    (documented, same as CleanEval): ``.strip()``-ed."""
+    return body_or_root(parse_html(content)).text_content().strip()
+
+
 def read_binary_dir(spark: SparkSession, path: str,
                     glob: str = "*",
                     strip_exts: int = 1,
                     key_pattern: str | None = None) -> DataFrame:
     """binaryFile scan of a raw dataset directory: (source, content, path).
 
+    The listing is recursive (partition inference off), so per-case
+    layouts such as Readability's ``test-pages/{case}/source.html`` list
+    their files and ``k=v`` directory names never add columns.
     ``source`` is the file stem — the reference's per-file key.  Up to
     ``strip_exts`` trailing extensions are stripped CASE-INSENSITIVELY
     (ADVICE r2: 'page.HTML' or compound 'page.html.gz' must still meet
@@ -111,7 +130,12 @@ def read_binary_dir(spark: SparkSession, path: str,
     Formats with multi-part truth suffixes pass a higher count (dragnet:
     '{page}.html.corrected.txt' -> strip_exts=3).  ``key_pattern``
     overrides the derivation entirely (group 1 = key)."""
-    df = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
+    df = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", glob)
+        .option("recursiveFileLookup", True)
+        .load(path)
+    )
     if key_pattern is None:
         key_pattern = rf"([^/]+?)((?i:\.[a-z0-9]+){{0,{strip_exts}}})$"
     return df.select(
@@ -142,14 +166,119 @@ def assert_key_overlap(pages: DataFrame, truths: DataFrame,
         )
 
 
-_CLEANEVAL_PAGE_SCHEMA = T.StructType(
+# ---------------------------------------------------------------------------
+# The format table.  A format is pure data: where its two file sets live,
+# how their join key is built, and which functions turn decoded files into
+# page html and truth rows.
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Side:
+    """One file set (pages or truths) of a raw format under its root."""
+
+    sub: str                         # root-relative directory; may glob
+    glob: str = "*"                  # file-name filter
+    strip_exts: int = 1              # read_binary_dir's stem rule
+    key_pattern: str | None = None   # read_binary_dir override (group 1)
+    key_prefix: str | None = None    # path regex; group 1 + "_" + key
+
+
+TruthRows = Callable[[str, str], Iterable[tuple]]
+
+
+def _keyed(truth: Callable[[str], str]) -> TruthRows:
+    """Truth-row function for one truth file per page, keyed by the file."""
+    return lambda key, content: [(key, None, truth(content))]
+
+
+def _cleaneval_rows(key: str, content: str) -> list[tuple]:
+    return [(key, *cleaneval_truth(content))]
+
+
+def _scrapinghub_rows(_key: str, content: str) -> list[tuple]:
+    """ground-truth.json is one dict {key: {articleBody, url}}
+    (dataset_readers.py:239-248) — a metadata-scale artifact: one file ->
+    one task; at corpus scale you would convert it to JSONL first."""
+    truth = json.loads(content)
+    return [
+        (key, truth[key].get("url"), truth[key].get("articleBody"))
+        for key in sorted(truth)
+    ]
+
+
+@dataclass(frozen=True)
+class RawFormat:
+    """One annotated dataset: ``truth_rows`` maps (key, decoded truth
+    file) to (source, url, plaintext) rows, ``page`` maps a decoded page
+    to its html (``str``: as is), ``extra`` names the output columns
+    beyond source/html/plaintext."""
+
+    pages: Side
+    truths: Side
+    truth_rows: TruthRows
+    page: Callable[[str], str] = str
+    extra: tuple[str, ...] = ()
+
+
+_CLEANEVAL = dict(truth_rows=_cleaneval_rows, page=cleaneval_unwrap,
+                  extra=("url",))
+_PARENT_DIR = r"/([^/]+)/[^/]+$"            # .../{case}/file
+_GRANDPARENT_DIR = r"/([^/]+)/[^/]+/[^/]+$"  # .../{vertical}/sub/file
+
+FORMATS: dict[str, RawFormat] = {
+    # dataset_readers.py:135-168
+    "cleaneval": RawFormat(Side("orig"), Side("clean"), **_CLEANEVAL),
+    # dataset_readers.py:264-298
+    "l3s": RawFormat(Side("original"), Side("annotated"), _keyed(l3s_truth)),
+    # dataset_readers.py:171-179: CleanEval semantics, other directories
+    "cleanportaleval": RawFormat(
+        Side("input"), Side("GoldStandard"), **_CLEANEVAL
+    ),
+    # dataset_readers.py:182-198: verbatim '{page}.html.corrected.txt'
+    # truths (the reference double-splitexts the name, then once more)
+    "dragnet": RawFormat(
+        Side("HTML"), Side("corrected/Corrected", strip_exts=3), _keyed(str)
+    ),
+    # dataset_readers.py:201-220: {vertical}/original|gold trees, keyed
+    # '{vertical}_{stem}'
+    "cetd": RawFormat(
+        Side("*/original", key_prefix=_GRANDPARENT_DIR),
+        Side("*/gold", key_prefix=_GRANDPARENT_DIR),
+        _keyed(str),
+    ),
+    # dataset_readers.py:223-236: one case directory per page, keyed by
+    # the directory name
+    "readability": RawFormat(
+        Side("test-pages", "source.html", key_pattern=_PARENT_DIR),
+        Side("test-pages", "expected.html", key_pattern=_PARENT_DIR),
+        _keyed(readability_truth),
+    ),
+    # dataset_readers.py:239-261: gzipped pages, one ground-truth.json
+    "scrapinghub": RawFormat(
+        Side("html", "*.gz", strip_exts=2),
+        Side("", "ground-truth.json"),
+        _scrapinghub_rows,
+        extra=("url", "page_id"),
+    ),
+    # dataset_readers.py:301-317
+    "googletrends": RawFormat(
+        Side("raw_html"), Side("prepared_html"), _keyed(boilernet_truth)
+    ),
+}
+
+_PAGE_SCHEMA = T.StructType(
     [
         T.StructField("source", T.StringType(), False),
         T.StructField("html", T.StringType(), True),
     ]
 )
 
-_CLEANEVAL_TRUTH_SCHEMA = T.StructType(
+_PAGE_ID_SCHEMA = T.StructType(
+    [*_PAGE_SCHEMA.fields, T.StructField("page_id", T.StringType(), True)]
+)
+
+_TRUTH_SCHEMA = T.StructType(
     [
         T.StructField("source", T.StringType(), False),
         T.StructField("url", T.StringType(), True),
@@ -157,80 +286,92 @@ _CLEANEVAL_TRUTH_SCHEMA = T.StructType(
     ]
 )
 
-
-def _cleaneval_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "source": pdf["source"],
-                "html": [
-                    cleaneval_unwrap(decode_html(raw)) for raw in pdf["content"]
-                ],
-            }
-        )
+_COLUMNS = ("source", "url", "html", "plaintext", "page_id")
 
 
-def _cleaneval_truths(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        urls, texts = [], []
-        for raw in pdf["content"]:
-            url, text = cleaneval_truth(decode_html(raw))
-            urls.append(url)
-            texts.append(text)
-        yield pd.DataFrame(
-            {"source": pdf["source"], "url": urls, "plaintext": texts}
-        )
-
-
-def convert_cleaneval(spark: SparkSession, raw_dir: str,
-                      truth_dir: str) -> DataFrame:
-    """CleanEval conversion plan: (source, url, html, plaintext), one row
-    per page that has a truth file (whitelist semi-join on the truth
-    side, like the reference's truth-driven extract whitelist)."""
-    pages = read_binary_dir(spark, raw_dir).mapInPandas(
-        _cleaneval_pages, schema=_CLEANEVAL_PAGE_SCHEMA
+def _scan(spark: SparkSession, root: str, side: Side) -> DataFrame:
+    df = read_binary_dir(
+        spark, f"{root}/{side.sub}".rstrip("/"), side.glob,
+        side.strip_exts, side.key_pattern,
     )
-    truths = read_binary_dir(spark, truth_dir).mapInPandas(
-        _cleaneval_truths, schema=_CLEANEVAL_TRUTH_SCHEMA
+    if side.key_prefix is None:
+        return df
+    prefix = F.regexp_extract(F.col("path"), side.key_prefix, 1)
+    return df.withColumn("source", F.concat_ws("_", prefix, "source"))
+
+
+def _pages_kernel(fmt: str,
+                  batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    spec = FORMATS[fmt]
+    with_id = "page_id" in spec.extra
+    for pdf in batches:
+        raws = pdf["content"]
+        if with_id:
+            # the reference's hash quirk (dataset_readers.py:245-248): the
+            # id is the sha256 of the DECOMPRESSED bytes, not of the .gz
+            # on disk, so ids stay stable across recompression.  Only
+            # here: decode_html gunzips too, so other formats must not.
+            raws = [maybe_gunzip(bytes(raw)) for raw in raws]
+        out = {
+            "source": pdf["source"],
+            "html": [spec.page(decode_html(raw)) for raw in raws],
+        }
+        if with_id:
+            out["page_id"] = [hashlib.sha256(raw).hexdigest() for raw in raws]
+        yield pd.DataFrame(out)
+
+
+def _truths_kernel(fmt: str,
+                   batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    rows_of = FORMATS[fmt].truth_rows
+    for pdf in batches:
+        rows = [
+            row
+            for key, raw in zip(pdf["source"], pdf["content"])
+            for row in rows_of(key, decode_html(raw))
+        ]
+        yield pd.DataFrame(rows, columns=_TRUTH_SCHEMA.names)
+
+
+def convert_dataset(spark: SparkSession, fmt: str, root: str) -> DataFrame:
+    """Conversion plan for one ``FORMATS`` dataset tree under ``root``:
+    (source, [url,] html, plaintext[, page_id]), one row per page that
+    has a truth (whitelist semi-join on the truth side, like the
+    reference's truth-driven extract whitelist)."""
+    spec = FORMATS[fmt]
+    schema = _PAGE_ID_SCHEMA if "page_id" in spec.extra else _PAGE_SCHEMA
+    pages = _scan(spark, root, spec.pages).mapInPandas(
+        partial(_pages_kernel, fmt), schema=schema
     )
+    truths = _scan(spark, root, spec.truths).mapInPandas(
+        partial(_truths_kernel, fmt), schema=_TRUTH_SCHEMA
+    )
+    keep = ("source", "html", "plaintext", *spec.extra)
     return pages.join(F.broadcast(truths), "source").select(
-        "source", "url", "html", "plaintext"
+        *[c for c in _COLUMNS if c in keep]
     )
 
 
-def _l3s_truths(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "source": pdf["source"],
-                "plaintext": [
-                    l3s_truth(decode_html(raw)) for raw in pdf["content"]
-                ],
-            }
-        )
+def convert_pdf(spark: SparkSession, root_dir: str) -> DataFrame:
+    """PDF corpus directory -> (source, plaintext).
 
+    No reference counterpart (the reference repo ingests HTML formats
+    only); this is the "PDF/layout parse" leg of the pipeline mandate.
+    The whole parse — xref, FlateDecode, content-stream text operators,
+    column/line layout reconstruction — is the from-scratch
+    ``extractors/pdf_text`` kernel run per file inside mapInPandas;
+    the source key is the file stem, as for every other raw format."""
+    from ..extractors.pdf_text import extract_pdf
 
-def convert_l3s(spark: SparkSession, original_dir: str,
-                annotated_dir: str) -> DataFrame:
-    """L3S-GN1 conversion plan: (source, html, plaintext); truth derived
-    from the annotated copy, joined to the original page bytes."""
-    # decode path shared with the other decode-only formats
-    # (_decoded_pages / _PAGE_SCHEMA / _TEXT_TRUTH_SCHEMA, defined below)
-    pages = read_binary_dir(spark, original_dir).mapInPandas(
-        _decoded_pages, schema=_PAGE_SCHEMA
-    )
-    truths = read_binary_dir(spark, annotated_dir).mapInPandas(
-        _l3s_truths, schema=_TEXT_TRUTH_SCHEMA
-    )
-    return pages.join(F.broadcast(truths), "source").select(
-        "source", "html", "plaintext"
-    )
+    pages = read_binary_dir(spark, root_dir, glob="*.pdf")
+    return extract_pdf(pages).select("source", "plaintext")
 
 
 # ---------------------------------------------------------------------------
 # Deterministic raw-format synthesis (fixture generation): builds on-disk
-# CleanEval / L3S trees from the documents parquet so the conversion plans
-# have DuckDB-expressible expected outputs.  Pure pyarrow — no Spark.
+# trees in each format's layout from the documents parquet so the
+# conversion plans have DuckDB-expressible expected outputs.  Pure
+# pyarrow — no Spark.
 # ---------------------------------------------------------------------------
 
 
@@ -247,6 +388,13 @@ def _fixture_docs(sf_dir: str, mod: int = 7):
             yield row["doc_id"], row["source"], row["text"]
 
 
+def _write(path: str, data: bytes) -> None:
+    """Write one fixture file, creating its parent directory."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "wb") as f:
+        f.write(data)
+
+
 def synthesize_cleaneval_tree(sf_dir: str, out_dir: str, mod: int = 7,
                               orig_name: str = "orig",
                               clean_name: str = "clean") -> int:
@@ -256,12 +404,9 @@ def synthesize_cleaneval_tree(sf_dir: str, out_dir: str, mod: int = 7,
     %107 rows.  Returns the number of pages written.  CleanPortalEval
     reuses this with its input/GoldStandard directory names."""
     import gzip
-    import os
 
     from .pages import build_page_html, gold_main_text, url_for
 
-    os.makedirs(os.path.join(out_dir, orig_name), exist_ok=True)
-    os.makedirs(os.path.join(out_dir, clean_name), exist_ok=True)
     n = 0
     for doc_id, source, text in _fixture_docs(sf_dir, mod):
         html = build_page_html(doc_id, source, text)
@@ -271,18 +416,13 @@ def synthesize_cleaneval_tree(sf_dir: str, out_dir: str, mod: int = 7,
         raw = wrapped.encode("utf-8")
         if doc_id % 103 == 0:
             raw = gzip.compress(raw, compresslevel=1, mtime=0)
-        with open(
-            os.path.join(out_dir, orig_name, f"{doc_id}.html"), "wb"
-        ) as f:
-            f.write(raw)
+        _write(os.path.join(out_dir, orig_name, f"{doc_id}.html"), raw)
         truth = (
             f"URL: {url_for(doc_id, source)}\n\n"
             f"<p>{gold_main_text(doc_id, source, text)}</p>\n"
         )
-        with open(
-            os.path.join(out_dir, clean_name, f"{doc_id}.txt"), "wb"
-        ) as f:
-            f.write(truth.encode("utf-8"))
+        _write(os.path.join(out_dir, clean_name, f"{doc_id}.txt"),
+               truth.encode("utf-8"))
         n += 1
     return n
 
@@ -309,278 +449,6 @@ def l3s_original_html(source: str, text: str) -> str:
     )
 
 
-def synthesize_l3s_tree(sf_dir: str, out_dir: str, mod: int = 7) -> int:
-    """Write L3S-GN1-style original/ + annotated/ trees."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    os.makedirs(os.path.join(out_dir, "original"), exist_ok=True)
-    os.makedirs(os.path.join(out_dir, "annotated"), exist_ok=True)
-    docs = pq.read_table(
-        f"{sf_dir}/documents.parquet", columns=["doc_id", "source", "text"]
-    ).to_pylist()
-    n = 0
-    for row in docs:
-        doc_id, source, text = row["doc_id"], row["source"], row["text"]
-        if doc_id % mod != 0 or doc_id % 101 == 0:
-            continue
-        orig = l3s_original_html(source, text)
-        anno = l3s_annotated_html(source, text)
-        with open(
-            os.path.join(out_dir, "original", f"{doc_id}.html"), "wb"
-        ) as f:
-            f.write(orig.encode("utf-8"))
-        with open(
-            os.path.join(out_dir, "annotated", f"{doc_id}.html"), "wb"
-        ) as f:
-            f.write(anno.encode("utf-8"))
-        n += 1
-    return n
-
-
-# ---------------------------------------------------------------------------
-# Remaining raw formats (S1 tail — reference dataset_readers.py:171-317).
-# Same plan for all: binaryFile scan -> decode -> per-format unwrap / truth
-# derivation -> broadcast whitelist join on the per-file key.
-# ---------------------------------------------------------------------------
-
-_PAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType(), False),
-        T.StructField("html", T.StringType(), True),
-    ]
-)
-
-_TEXT_TRUTH_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType(), False),
-        T.StructField("plaintext", T.StringType(), True),
-    ]
-)
-
-
-def _decoded_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Pages that need decode only (gzip/BOM/charset), no unwrap."""
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "source": pdf["source"],
-                "html": [decode_html(raw) for raw in pdf["content"]],
-            }
-        )
-
-
-def _raw_text_truths(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Truth files whose decoded content IS the plaintext verbatim
-    (dragnet / CETD gold .txt files)."""
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "source": pdf["source"],
-                "plaintext": [decode_html(raw) for raw in pdf["content"]],
-            }
-        )
-
-
-def convert_cleanportaleval(spark: SparkSession, input_dir: str,
-                            gold_dir: str) -> DataFrame:
-    """CleanPortalEval (reference dataset_readers.py:171-179): identical
-    reader semantics to CleanEval — <text> wrapper pages under ``input/``,
-    URL-line + clean-markup truths under ``GoldStandard/``."""
-    return convert_cleaneval(spark, input_dir, gold_dir)
-
-
-def convert_dragnet(spark: SparkSession, html_dir: str,
-                    corrected_dir: str) -> DataFrame:
-    """Dragnet (reference dataset_readers.py:182-198): pages under
-    ``HTML/`` decode as-is; truths are VERBATIM corrected-text files named
-    ``{page}.html.corrected.txt`` (hence strip_exts=3 — the reference
-    double-splitexts the truth name, then splitexts once more for the
-    source key)."""
-    pages = read_binary_dir(spark, html_dir).mapInPandas(
-        _decoded_pages, schema=_PAGE_SCHEMA
-    )
-    truths = read_binary_dir(spark, corrected_dir, strip_exts=3).mapInPandas(
-        _raw_text_truths, schema=_TEXT_TRUTH_SCHEMA
-    )
-    return pages.join(F.broadcast(truths), "source").select(
-        "source", "html", "plaintext"
-    )
-
-
-def _cetd_keyed(spark: SparkSession, root_dir: str, sub: str) -> DataFrame:
-    """CETD files live under {root}/{vertical}/{original|gold}/; the
-    per-file key is '{vertical}_{stem}' (reference dataset_readers.py:214)."""
-    df = spark.read.format("binaryFile").load(f"{root_dir}/*/{sub}")
-    vertical = F.regexp_extract(F.col("path"), rf"/([^/]+)/{sub}/[^/]+$", 1)
-    stem = F.regexp_extract(
-        F.col("path"), r"([^/]+?)((?i:\.[a-z0-9]+){0,1})$", 1
-    )
-    return df.select(
-        F.concat_ws("_", vertical, stem).alias("source"), F.col("content")
-    )
-
-
-def convert_cetd(spark: SparkSession, root_dir: str) -> DataFrame:
-    """CETD (reference dataset_readers.py:201-220): per-vertical
-    ``original/*.htm`` pages and verbatim ``gold/*.txt`` truths."""
-    pages = _cetd_keyed(spark, root_dir, "original").mapInPandas(
-        _decoded_pages, schema=_PAGE_SCHEMA
-    )
-    truths = _cetd_keyed(spark, root_dir, "gold").mapInPandas(
-        _raw_text_truths, schema=_TEXT_TRUTH_SCHEMA
-    )
-    return pages.join(F.broadcast(truths), "source").select(
-        "source", "html", "plaintext"
-    )
-
-
-def readability_truth(content: str) -> str:
-    """Readability test-pages truth: the ``expected.html`` body rendered
-    as text (reference dataset_readers.py:223-236).  Deviation
-    (documented, same as CleanEval): ``.strip()``-ed."""
-    return body_or_root(parse_html(content)).text_content().strip()
-
-
-def _readability_truths(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "source": pdf["source"],
-                "plaintext": [
-                    readability_truth(decode_html(raw))
-                    for raw in pdf["content"]
-                ],
-            }
-        )
-
-
-def convert_readability_ds(spark: SparkSession,
-                           test_pages_dir: str) -> DataFrame:
-    """Readability test suite (reference dataset_readers.py:223-236):
-    one case directory per page holding ``source.html`` +
-    ``expected.html``; the case directory name is the key."""
-    case_of = r"/([^/]+)/[^/]+$"
-
-    def keyed(name: str) -> DataFrame:
-        df = spark.read.format("binaryFile").option(
-            "pathGlobFilter", name
-        ).option("recursiveFileLookup", True).load(test_pages_dir)
-        return df.select(
-            F.regexp_extract(F.col("path"), case_of, 1).alias("source"),
-            F.col("content"),
-        )
-
-    pages = keyed("source.html").mapInPandas(
-        _decoded_pages, schema=_PAGE_SCHEMA
-    )
-    truths = keyed("expected.html").mapInPandas(
-        _readability_truths, schema=_TEXT_TRUTH_SCHEMA
-    )
-    return pages.join(F.broadcast(truths), "source").select(
-        "source", "html", "plaintext"
-    )
-
-
-_SCRAPINGHUB_PAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType(), False),
-        T.StructField("html", T.StringType(), True),
-        T.StructField("page_id", T.StringType(), True),
-    ]
-)
-
-_SCRAPINGHUB_TRUTH_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType(), False),
-        T.StructField("url", T.StringType(), True),
-        T.StructField("plaintext", T.StringType(), True),
-    ]
-)
-
-
-def _scrapinghub_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Decode + the reference's hash quirk (dataset_readers.py:245-248):
-    the page id is the sha256 of the DECOMPRESSED bytes, not of the .gz
-    file on disk — recomputed here after gunzip so ids stay stable across
-    recompression."""
-    import hashlib
-
-    from ..encoding import maybe_gunzip
-
-    for pdf in batches:
-        htmls, ids = [], []
-        for raw in pdf["content"]:
-            data = maybe_gunzip(bytes(raw))
-            htmls.append(decode_html(data))
-            ids.append(hashlib.sha256(data).hexdigest())
-        yield pd.DataFrame(
-            {"source": pdf["source"], "html": htmls, "page_id": ids}
-        )
-
-
-def _scrapinghub_truths(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """ground-truth.json is one dict {key: {articleBody, url}}
-    (dataset_readers.py:239-248) — a metadata-scale artifact: one file ->
-    one task; at corpus scale you would convert it to JSONL first."""
-    import json
-
-    for pdf in batches:
-        sources, urls, texts = [], [], []
-        for raw in pdf["content"]:
-            truth = json.loads(decode_html(raw))
-            for key in sorted(truth):
-                sources.append(key)
-                urls.append(truth[key].get("url"))
-                texts.append(truth[key].get("articleBody"))
-        yield pd.DataFrame(
-            {"source": sources, "url": urls, "plaintext": texts}
-        )
-
-
-def convert_scrapinghub(spark: SparkSession, root_dir: str) -> DataFrame:
-    """ScrapingHub article benchmark (reference dataset_readers.py:239-261):
-    gzipped pages under ``html/``, truths in one ``ground-truth.json``."""
-    pages = read_binary_dir(
-        spark, f"{root_dir}/html", glob="*.gz", strip_exts=2
-    ).mapInPandas(_scrapinghub_pages, schema=_SCRAPINGHUB_PAGE_SCHEMA)
-    truths = read_binary_dir(
-        spark, root_dir, glob="ground-truth.json"
-    ).mapInPandas(_scrapinghub_truths, schema=_SCRAPINGHUB_TRUTH_SCHEMA)
-    return pages.join(F.broadcast(truths), "source").select(
-        "source", "url", "html", "plaintext", "page_id"
-    )
-
-
-def _boilernet_truths(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "source": pdf["source"],
-                "plaintext": [
-                    boilernet_truth(decode_html(raw)) for raw in pdf["content"]
-                ],
-            }
-        )
-
-
-def convert_googletrends(spark: SparkSession, raw_dir: str,
-                         prepared_dir: str) -> DataFrame:
-    """GoogleTrends2017 (reference dataset_readers.py:301-317): truth from
-    the prepared copy's ``__boilernet_label="1"`` elements, joined to the
-    raw page bytes."""
-    pages = read_binary_dir(spark, raw_dir).mapInPandas(
-        _decoded_pages, schema=_PAGE_SCHEMA
-    )
-    truths = read_binary_dir(spark, prepared_dir).mapInPandas(
-        _boilernet_truths, schema=_TEXT_TRUTH_SCHEMA
-    )
-    return pages.join(F.broadcast(truths), "source").select(
-        "source", "html", "plaintext"
-    )
-
-
 def googletrends_prepared_html(source: str, text: str) -> str:
     """One GoogleTrends2017-style prepared page: same skeleton as the L3S
     original, with content leaves carrying ``__boilernet_label="1"``."""
@@ -591,6 +459,18 @@ def googletrends_prepared_html(source: str, text: str) -> str:
         '<aside><a href="/promo">promo</a> <a href="/more">more</a></aside>'
         "</body></html>"
     )
+
+
+def synthesize_l3s_tree(sf_dir: str, out_dir: str, mod: int = 7) -> int:
+    """Write L3S-GN1-style original/ + annotated/ trees."""
+    n = 0
+    for doc_id, source, text in _fixture_docs(sf_dir, mod):
+        _write(os.path.join(out_dir, "original", f"{doc_id}.html"),
+               l3s_original_html(source, text).encode("utf-8"))
+        _write(os.path.join(out_dir, "annotated", f"{doc_id}.html"),
+               l3s_annotated_html(source, text).encode("utf-8"))
+        n += 1
+    return n
 
 
 def synthesize_cleanportaleval_tree(sf_dir: str, out_dir: str,
@@ -604,22 +484,15 @@ def synthesize_cleanportaleval_tree(sf_dir: str, out_dir: str,
 def synthesize_dragnet_tree(sf_dir: str, out_dir: str, mod: int = 7) -> int:
     """Dragnet: HTML/{id}.html pages + verbatim
     corrected/Corrected/{id}.html.corrected.txt truths."""
-    import os
-
     from .pages import build_page_html
 
-    html_dir = os.path.join(out_dir, "HTML")
-    corr_dir = os.path.join(out_dir, "corrected", "Corrected")
-    os.makedirs(html_dir, exist_ok=True)
-    os.makedirs(corr_dir, exist_ok=True)
     n = 0
     for doc_id, source, text in _fixture_docs(sf_dir, mod):
-        with open(os.path.join(html_dir, f"{doc_id}.html"), "wb") as f:
-            f.write(build_page_html(doc_id, source, text).encode("utf-8"))
-        with open(
-            os.path.join(corr_dir, f"{doc_id}.html.corrected.txt"), "wb"
-        ) as f:
-            f.write(text.encode("utf-8"))
+        _write(os.path.join(out_dir, "HTML", f"{doc_id}.html"),
+               build_page_html(doc_id, source, text).encode("utf-8"))
+        _write(os.path.join(out_dir, "corrected", "Corrected",
+                            f"{doc_id}.html.corrected.txt"),
+               text.encode("utf-8"))
         n += 1
     return n
 
@@ -630,24 +503,15 @@ CETD_FIXTURE_VERTICALS = ("BBC", "wiki")
 def synthesize_cetd_tree(sf_dir: str, out_dir: str, mod: int = 7) -> int:
     """CETD: two fixture verticals by doc_id parity, original/*.htm pages
     + verbatim gold/*.txt truths."""
-    import os
-
     from .pages import build_page_html
 
-    for v in CETD_FIXTURE_VERTICALS:
-        os.makedirs(os.path.join(out_dir, v, "original"), exist_ok=True)
-        os.makedirs(os.path.join(out_dir, v, "gold"), exist_ok=True)
     n = 0
     for doc_id, source, text in _fixture_docs(sf_dir, mod):
         v = CETD_FIXTURE_VERTICALS[doc_id % 2]
-        with open(
-            os.path.join(out_dir, v, "original", f"{doc_id}.htm"), "wb"
-        ) as f:
-            f.write(build_page_html(doc_id, source, text).encode("utf-8"))
-        with open(
-            os.path.join(out_dir, v, "gold", f"{doc_id}.txt"), "wb"
-        ) as f:
-            f.write(text.encode("utf-8"))
+        _write(os.path.join(out_dir, v, "original", f"{doc_id}.htm"),
+               build_page_html(doc_id, source, text).encode("utf-8"))
+        _write(os.path.join(out_dir, v, "gold", f"{doc_id}.txt"),
+               text.encode("utf-8"))
         n += 1
     return n
 
@@ -656,19 +520,16 @@ def synthesize_readability_tree(sf_dir: str, out_dir: str,
                                 mod: int = 7) -> int:
     """Readability suite: test-pages/{id}/source.html + expected.html
     whose body text is exactly the document text."""
-    import os
-
     from .pages import build_page_html
 
     n = 0
     for doc_id, source, text in _fixture_docs(sf_dir, mod):
         case_dir = os.path.join(out_dir, "test-pages", str(doc_id))
-        os.makedirs(case_dir, exist_ok=True)
-        with open(os.path.join(case_dir, "source.html"), "wb") as f:
-            f.write(build_page_html(doc_id, source, text).encode("utf-8"))
+        _write(os.path.join(case_dir, "source.html"),
+               build_page_html(doc_id, source, text).encode("utf-8"))
         expected = f"<html><body><p>{text}</p></body></html>"
-        with open(os.path.join(case_dir, "expected.html"), "wb") as f:
-            f.write(expected.encode("utf-8"))
+        _write(os.path.join(case_dir, "expected.html"),
+               expected.encode("utf-8"))
         n += 1
     return n
 
@@ -678,26 +539,21 @@ def synthesize_scrapinghub_tree(sf_dir: str, out_dir: str,
     """ScrapingHub: html/{id}.html.gz gzipped pages + one
     ground-truth.json {id: {articleBody, url}}."""
     import gzip
-    import json
-    import os
 
     from .pages import build_page_html, url_for
 
-    html_dir = os.path.join(out_dir, "html")
-    os.makedirs(html_dir, exist_ok=True)
     truth: dict[str, dict] = {}
     n = 0
     for doc_id, source, text in _fixture_docs(sf_dir, mod):
         page = build_page_html(doc_id, source, text).encode("utf-8")
-        with open(os.path.join(html_dir, f"{doc_id}.html.gz"), "wb") as f:
-            f.write(gzip.compress(page, compresslevel=1, mtime=0))
+        _write(os.path.join(out_dir, "html", f"{doc_id}.html.gz"),
+               gzip.compress(page, compresslevel=1, mtime=0))
         truth[str(doc_id)] = {
             "articleBody": text, "url": url_for(doc_id, source)
         }
         n += 1
-    with open(os.path.join(out_dir, "ground-truth.json"), "w",
-              encoding="utf-8") as f:
-        json.dump(truth, f, sort_keys=True)
+    _write(os.path.join(out_dir, "ground-truth.json"),
+           json.dumps(truth, sort_keys=True).encode("utf-8"))
     return n
 
 
@@ -705,37 +561,14 @@ def synthesize_googletrends_tree(sf_dir: str, out_dir: str,
                                  mod: int = 7) -> int:
     """GoogleTrends2017: raw_html/ originals + prepared_html/ annotated
     copies carrying __boilernet_label attributes."""
-    import os
-
-    os.makedirs(os.path.join(out_dir, "raw_html"), exist_ok=True)
-    os.makedirs(os.path.join(out_dir, "prepared_html"), exist_ok=True)
     n = 0
     for doc_id, source, text in _fixture_docs(sf_dir, mod):
-        with open(
-            os.path.join(out_dir, "raw_html", f"{doc_id}.html"), "wb"
-        ) as f:
-            f.write(l3s_original_html(source, text).encode("utf-8"))
-        with open(
-            os.path.join(out_dir, "prepared_html", f"{doc_id}.html"), "wb"
-        ) as f:
-            f.write(googletrends_prepared_html(source, text).encode("utf-8"))
+        _write(os.path.join(out_dir, "raw_html", f"{doc_id}.html"),
+               l3s_original_html(source, text).encode("utf-8"))
+        _write(os.path.join(out_dir, "prepared_html", f"{doc_id}.html"),
+               googletrends_prepared_html(source, text).encode("utf-8"))
         n += 1
     return n
-
-
-def convert_pdf(spark: SparkSession, root_dir: str) -> DataFrame:
-    """PDF corpus directory -> (source, plaintext).
-
-    No reference counterpart (the reference repo ingests HTML formats
-    only); this is the "PDF/layout parse" leg of the pipeline mandate.
-    The whole parse — xref, FlateDecode, content-stream text operators,
-    column/line layout reconstruction — is the from-scratch
-    ``extractors/pdf_text`` kernel run per file inside mapInPandas;
-    the source key is the file stem, as for every other raw format."""
-    from ..extractors.pdf_text import extract_pdf
-
-    pages = read_binary_dir(spark, root_dir, glob="*.pdf")
-    return extract_pdf(pages).select("source", "plaintext")
 
 
 def synthesize_pdf_tree(sf_dir: str, out_dir: str, mod: int = 7) -> int:
@@ -744,14 +577,10 @@ def synthesize_pdf_tree(sf_dir: str, out_dir: str, mod: int = 7) -> int:
     ground truth per file is the documents-table ``text`` verbatim
     (fixture text is single-space normalized; `check_oracles
     ... convert_raw_formats` guards the contract)."""
-    import os
-
     from .pdf_synth import encode_pdf
 
-    os.makedirs(out_dir, exist_ok=True)
     n = 0
     for doc_id, _source, text in _fixture_docs(sf_dir, mod):
-        with open(os.path.join(out_dir, f"{doc_id}.pdf"), "wb") as f:
-            f.write(encode_pdf(doc_id, text))
+        _write(os.path.join(out_dir, f"{doc_id}.pdf"), encode_pdf(doc_id, text))
         n += 1
     return n
