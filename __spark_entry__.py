@@ -1513,17 +1513,6 @@ def _scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=f"{prefix}.pid{os.getpid()}_", dir=root)
 
 
-def _source_fingerprint(sf_dir: str) -> str:
-    """mtime+size fingerprint of the corpus a derived cache was built
-    from — a bare basename key would silently reuse stale trees after
-    the test data is regenerated (or for a same-named dir elsewhere)."""
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(path)
-    return f"{os.path.abspath(path)}|{st.st_mtime_ns}|{st.st_size}"
-
-
 def _synthesize_warc_tree(sf_dir: str, out_dir: str) -> int:
     from web_content_extraction_benchmark_spark.sources.warc import (
         synthesize_warc_tree,
@@ -1540,22 +1529,28 @@ def _synthesize_mixed_tree(sf_dir: str, out_dir: str) -> int:
     return synthesize_mixed_warc_tree(sf_dir, out_dir)
 
 
+RAW_TREE_ROOT = "/tmp/wceb_raw"
+
+
 def _raw_tree(sf_dir: str, kind: str) -> str:
     """Synthesize (once, cached) an on-disk raw-format dataset tree.
-    The cache marker records the SOURCE fingerprint; a changed corpus
-    triggers regeneration instead of silently serving stale files."""
+    The cache marker records ``fixture_fingerprint``; a changed corpus
+    or writer triggers regeneration instead of serving stale files."""
     import os
 
     from web_content_extraction_benchmark_spark.sources import raw_datasets
+    from web_content_extraction_benchmark_spark.sources.pages import (
+        fixture_fingerprint,
+    )
 
     synth = {
         "warc": _synthesize_warc_tree,
         "mixed": _synthesize_mixed_tree,
     }.get(kind) or getattr(raw_datasets, f"synthesize_{kind}_tree")
     tag = os.path.basename(sf_dir.rstrip("/"))
-    out = f"/tmp/wceb_raw/{kind}_{tag}"
+    out = os.path.join(RAW_TREE_ROOT, f"{kind}_{tag}")
     marker = os.path.join(out, "_done")
-    fingerprint = _source_fingerprint(sf_dir)
+    fingerprint = fixture_fingerprint(sf_dir)
     stale = True
     if os.path.exists(marker):
         with open(marker) as f:

@@ -48,29 +48,11 @@ from web_content_extraction_benchmark_spark.plans.pipeline import (  # noqa: E40
 )
 from web_content_extraction_benchmark_spark.session import get_spark  # noqa: E402
 from web_content_extraction_benchmark_spark.sources.pages import (  # noqa: E402
+    fixture_fingerprint,
     synthesize_pages,
 )
 
 CACHE_ROOT = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/wceb_bench")
-
-
-def _source_fingerprint(sf_dir: str) -> str:
-    """mtime+size fingerprint of the source corpus AND the synthesis
-    templates: a stale cache from regenerated (or same-named) test
-    data — or from an edited pages/warc/pdf writer — must rebuild,
-    not silently feed the headline number."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(path)
-    parts = [f"{os.path.abspath(path)}|{st.st_mtime_ns}|{st.st_size}"]
-    pkg = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                       "web_content_extraction_benchmark_spark", "sources")
-    for mod in ("pages.py", "warc.py", "pdf_synth.py"):
-        try:
-            ms = os.stat(os.path.join(pkg, mod))
-            parts.append(f"{mod}|{ms.st_mtime_ns}|{ms.st_size}")
-        except OSError:
-            pass
-    return ";".join(parts)
 
 
 def _pages_parquet(spark, sf_dir: str, replicate: int,
@@ -81,7 +63,7 @@ def _pages_parquet(spark, sf_dir: str, replicate: int,
     tag = f"{os.path.basename(sf_dir.rstrip('/'))}_x{replicate}"
     path = os.path.join(CACHE_ROOT, tag, "pages")
     marker = os.path.join(CACHE_ROOT, tag, "_done")
-    fingerprint = _source_fingerprint(sf_dir)
+    fingerprint = fixture_fingerprint(sf_dir)
     was_cold = True
     if os.path.exists(marker):
         with open(marker) as f:
@@ -104,7 +86,7 @@ def _cleaneval_tree(sf_dir: str) -> tuple[str, bool]:
     tag = os.path.basename(sf_dir.rstrip("/"))
     out = f"/tmp/wceb_raw/cleaneval_{tag}_full"
     marker = os.path.join(out, "_done")
-    fingerprint = _source_fingerprint(sf_dir)
+    fingerprint = fixture_fingerprint(sf_dir)
     was_cold = True
     if os.path.exists(marker):
         with open(marker) as f:
@@ -232,7 +214,7 @@ def main() -> None:
     pages = spark.read.parquet(pages_path)
     n_pages = pages.count()
     tag = f"{os.path.basename(sf_dir.rstrip('/'))}_x{replicate}"
-    corpus_fp = _source_fingerprint(sf_dir)
+    corpus_fp = fixture_fingerprint(sf_dir)
     warc_dir, warc_cold = _warc_corpus(spark, pages, tag, corpus_fp)
     pdf_path, pdf_cold = _pdf_corpus(spark, pages, tag, corpus_fp)
 

@@ -85,3 +85,37 @@ def test_scratch_dir_keepalive_touches_own_dirs():
             shutil.rmtree(second, ignore_errors=True)
     finally:
         shutil.rmtree(first, ignore_errors=True)
+
+
+def test_raw_tree_cache_rebuilds_when_a_writer_changes(
+        sf_dir, tmp_path, monkeypatch):
+    """The fixture trees cached under RAW_TREE_ROOT are keyed by the
+    writer code too: an edited ``synthesize_*_tree`` must regenerate
+    its tree, not serve the files the old writer left."""
+    import os
+
+    import __spark_entry__ as entry
+    from web_content_extraction_benchmark_spark.sources import (
+        pages,
+        raw_datasets,
+    )
+
+    assert {os.path.basename(p) for p in pages.FIXTURE_WRITERS} >= {
+        "pages.py", "raw_datasets.py", "warc.py", "pdf_synth.py"}
+    writer = tmp_path / "writer.py"
+    writer.write_text("VERSION = 1\n")
+    monkeypatch.setattr(pages, "FIXTURE_WRITERS", (str(writer),))
+    monkeypatch.setattr(entry, "RAW_TREE_ROOT", str(tmp_path / "raw"))
+    writes = []
+
+    def synthesize(sf, out):
+        writes.append(out)
+        os.makedirs(out, exist_ok=True)
+
+    monkeypatch.setattr(raw_datasets, "synthesize_l3s_tree", synthesize)
+    out = entry._raw_tree(sf_dir, "l3s")
+    assert entry._raw_tree(sf_dir, "l3s") == out
+    assert writes == [out]
+    writer.write_text("VERSION = 2\n")
+    assert entry._raw_tree(sf_dir, "l3s") == out
+    assert writes == [out, out]

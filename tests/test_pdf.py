@@ -237,19 +237,36 @@ def test_jittered_baselines_never_duplicate_runs():
 # ---------------------------------------------------------------------------
 
 
+def _lzw_cases(seed: int, count: int, size, alphabet: bytes):
+    """Seeded LZW payloads: half uniform random bytes, half drawn from a
+    small alphabet (long repeats grow the table to its reset)."""
+    rng = random.Random(seed)
+    for _ in range(count):
+        n = size(rng)
+        if rng.random() < 0.5:
+            yield bytes(rng.randrange(256) for _ in range(n))
+        else:
+            yield bytes(rng.choice(alphabet) for _ in range(n))
+
+
 def test_lzw_codec_roundtrip_fuzz():
     """Writer LZW encoder and parser decoder are exact inverses across
-    width growth (9->12 bits) and the 12-bit table reset."""
-    rng = random.Random(42)
-    for _ in range(20):
-        n = rng.choice([0, 1, 17, 800, 5000, 60000])
-        if rng.random() < 0.5:
-            data = bytes(rng.randrange(256) for _ in range(n))
-        else:
-            data = bytes(rng.choice(b"abcab ") for _ in range(n))
-        assert P.lzw_decode(W.lzw_encode(data)) == data, n
+    width growth (9->12 bits) and the 12-bit table reset: 20 cases at
+    fixed sizes up to 60 kB (seed 42).  A code beyond the table raises
+    PdfError."""
+    for data in _lzw_cases(42, 20, lambda rng: rng.choice(
+            [0, 1, 17, 800, 5000, 60000]), b"abcab "):
+        assert P.lzw_decode(W.lzw_encode(data)) == data, len(data)
     with pytest.raises(P.PdfError):
         P.lzw_decode(b"\xff\xff\xff\xff")  # code beyond table
+
+
+def test_fuzz_lzw_roundtrip():
+    """The same round trip over 40 cases at uniform sizes below 30 kB
+    (seed 7)."""
+    for data in _lzw_cases(7, 40, lambda rng: rng.randrange(0, 30_000),
+                           b"aab cc\n"):
+        assert P.lzw_decode(W.lzw_encode(data)) == data, len(data)
 
 
 def test_ascii_hex_codec():
@@ -548,20 +565,8 @@ def test_rotated_pages_cluster_in_display_orientation():
         P._unrotate_runs([r], 45, (0, 0, 612, 792))
 
 
-# Seeded fuzz: LZW encode/decode are exact inverses across width growth
-# and table reset; random texts through random doc_id arms round-trip,
-# and single-byte corruptions parse or raise a ValueError-family error.
-def test_fuzz_lzw_roundtrip():
-    rng = random.Random(7)
-    for _ in range(40):
-        n = rng.randrange(0, 30_000)
-        if rng.random() < 0.5:
-            data = bytes(rng.randrange(256) for _ in range(n))
-        else:
-            data = bytes(rng.choice(b"aab cc\n") for _ in range(n))
-        assert P.lzw_decode(W.lzw_encode(data)) == data
-
-
+# Seeded fuzz: random texts through random doc_id arms round-trip, and
+# single-byte corruptions parse or raise a ValueError-family error.
 def test_fuzz_pdf_arm_roundtrip_and_corruption():
     vocab = ("alpha beta gamma delta epsilon zeta eta theta iota "
              "kappa 0 1 42 999").split()

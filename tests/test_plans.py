@@ -258,6 +258,35 @@ def test_drop_exact_duplicates_keys_only_plan(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan
 
 
+def test_expensive_lineage_ignores_a_kernel_below_a_cache(spark):
+    """drop_exact_duplicates checkpoints inputs whose two traversals
+    would each run a Python kernel.  A kernel whose output is already
+    persisted runs once either way, so JVM steps over the cached frame
+    (crawl_corpus's filter+select over a persisted extraction) must not
+    be checkpointed again, while a kernel above the cache still counts."""
+    from web_content_extraction_benchmark_spark.operators.dedup import (
+        _expensive_lineage,
+    )
+
+    def same_rows(batches):
+        yield from batches
+
+    base = spark.range(8).selectExpr("id AS doc_id",
+                                     "CAST(id AS STRING) AS text")
+    kernel = base.mapInArrow(same_rows, base.schema)
+    assert not _expensive_lineage(base)
+    assert _expensive_lineage(kernel.filter("doc_id > 1"))
+    cached = base.mapInArrow(same_rows, base.schema).persist()
+    try:
+        assert not _expensive_lineage(cached)
+        assert not _expensive_lineage(
+            cached.filter("doc_id > 1").select("doc_id", "text"))
+        assert _expensive_lineage(
+            cached.mapInArrow(same_rows, base.schema).filter("doc_id > 1"))
+    finally:
+        cached.unpersist()
+
+
 def test_incremental_candidates_store_side_not_shuffled(
     spark, sf_dir, tmp_path
 ):

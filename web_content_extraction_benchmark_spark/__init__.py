@@ -18,7 +18,13 @@ Layout
 - ``sources``      pages-table synthesis, JSONL IO, snapshot log (resume)
 - ``plans``        end-to-end pipelines (extract -> score -> aggregate), lineage
 - ``streaming``    Structured Streaming surfaces (event rollups)
+- ``_zipcache``    installed on import: Spark's Python workers stop
+                   re-reading ``pyspark.zip``'s directory on every task
 """
+
+from . import _zipcache
+
+_zipcache.install()
 
 __version__ = "0.1.0"
 

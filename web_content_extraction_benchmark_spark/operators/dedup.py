@@ -63,28 +63,24 @@ def exact_duplicates(df: DataFrame, text_col: str = "text",
     )
 
 
-# Logical-plan node names of the engine's Python kernel stages: inputs
-# whose lineage contains one are expensive to traverse twice (the
-# keys-only dedup plan below scans its input once for digests and once
-# for the kept rows — free for a parquet rescan, a full second kernel
-# run for an extraction lineage).
-_PYTHON_STAGE_TOKENS = (
-    "MapInArrow", "MapInPandas", "FlatMapGroupsInPandas",
-    "EvalPython", "PythonUDF",
-)
-
-
 def _expensive_lineage(df: DataFrame) -> bool:
-    """True when the DataFrame's lineage contains a Python kernel stage
-    and the frame itself is not already persisted (a persisted frame's
-    second scan reads cached blocks, not the kernel)."""
+    """True when computing ``df`` runs a Python kernel stage (a Python
+    UDF, ``mapInArrow``/``mapInPandas`` or a grouped pandas function):
+    such inputs are expensive to traverse twice (the keys-only dedup
+    plan below scans its input once for digests and once for the kept
+    rows — free for a parquet rescan, a full second kernel run for an
+    extraction lineage).  The plan is read with cached data substituted:
+    a persisted frame is a leaf there, so a kernel that sits only below
+    a cache does not count, while one above it does."""
     try:
-        if df.storageLevel.useMemory or df.storageLevel.useDisk:
-            return False
-        plan = df._jdf.queryExecution().analyzed().toString()
+        patterns = getattr(
+            df.sparkSession._jvm,
+            "org.apache.spark.sql.catalyst.trees.TreePattern$",
+        ).__getattr__("MODULE$")
+        plan = df._jdf.queryExecution().withCachedData()
+        return bool(plan.containsPattern(patterns.PYTHON_UDF()))
     except Exception:
         return False
-    return any(tok in plan for tok in _PYTHON_STAGE_TOKENS)
 
 
 def drop_exact_duplicates(df: DataFrame, text_col: str = "text",
@@ -114,8 +110,9 @@ def drop_exact_duplicates(df: DataFrame, text_col: str = "text",
     inputs are lazily ``localCheckpoint``-ed first: the kernel runs
     once, its output is stored MEMORY_AND_DISK on executors (the
     pipeline-stage checkpoint a production run pays anyway), and both
-    traversals read the stored rows.  Plain scans and already-persisted
-    inputs keep the zero-copy two-scan plan.  On clusters needing fault
+    traversals read the stored rows.  Plain scans and inputs whose
+    kernel output is already persisted (JVM-only steps over a cached
+    extraction) keep the zero-copy two-scan plan.  On clusters needing fault
     tolerance of this intermediate, swap for ``checkpoint()`` against
     the job's checkpoint dir — the plan shape is identical."""
     if _expensive_lineage(df):

@@ -23,6 +23,12 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # or a byte cap via spark.sql.execution.arrow.maxBytesPerBatch.
 ARROW_MAX_RECORDS_PER_BATCH = 4096
 
+# Python workers import the package through their own sys.path, which
+# the driver's sys.path edits never reach; without this entry they
+# found it only when the JVM's working directory held the package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
 _WARMED_APP_IDS: set[str] = set()
 
 
@@ -87,7 +93,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    for key, value in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf[_WORKER_PYTHONPATH] = os.pathsep.join(
+        p for p in (conf.get(_WORKER_PYTHONPATH), _PACKAGE_ROOT) if p)
+    for key, value in conf.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     _warm_session(spark)

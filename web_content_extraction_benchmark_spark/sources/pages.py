@@ -23,6 +23,8 @@ Edge rows (decode/error paths, FIXTURES.md §1):
 from __future__ import annotations
 
 import gzip
+import hashlib
+import os
 from typing import Iterator
 
 import pandas as pd
@@ -49,6 +51,30 @@ N_HOSTS = 41
 # Every 5th page lands on host0 -> deliberate host skew for the salted
 # repartition path (north_star: defuse host/page-size skew).
 SKEW_HOST_MOD = 5
+
+
+# The modules whose code writes the synthesized fixtures (pages, raw
+# dataset trees, WARC and PDF files): a cache of their output goes stale
+# when any of them changes.
+_SOURCES = os.path.dirname(os.path.abspath(__file__))
+FIXTURE_WRITERS = tuple(
+    os.path.join(_SOURCES, name)
+    for name in ("pages.py", "raw_datasets.py", "warc.py", "pdf_synth.py"))
+
+
+def fixture_fingerprint(sf_dir: str) -> str:
+    """Key for a cache of fixtures synthesized from ``sf_dir``: the
+    corpus file's path, mtime and size plus a hash of the writer code,
+    so regenerated test data or an edited writer rebuilds the cache
+    instead of silently serving stale files."""
+    path = os.path.join(sf_dir, "documents.parquet")
+    st = os.stat(path)
+    writers = hashlib.sha256()
+    for writer in FIXTURE_WRITERS:
+        with open(writer, "rb") as f:
+            writers.update(f.read())
+    return (f"{os.path.abspath(path)}|{st.st_mtime_ns}|{st.st_size}"
+            f"|{writers.hexdigest()}")
 
 
 def host_for(doc_id: int) -> str:
