@@ -21,12 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from web_content_extraction_benchmark_spark.operators.dedup import (
+    SHINGLE_SIZE,
     exact_duplicates,
     minhash_lsh_pairs,
     minhash_signature,
     ngram_jaccard_pairs,
-    shingle_col,
     simhash64_col,
+)
+from web_content_extraction_benchmark_spark.operators.grams import (
+    with_word_kgrams,
 )
 from web_content_extraction_benchmark_spark.operators.substr_dedup import (
     dedup_exact_substrings,
@@ -634,9 +637,10 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-independent MinHash signatures (md5-min per seed)."""
-    docs = _docs(spark, sf_dir)
-    sh = shingle_col(F.col("text"))
-    return docs.select("doc_id", *minhash_signature(sh, 8))
+    docs = with_word_kgrams(
+        _docs(spark, sf_dir), "text", SHINGLE_SIZE, "_sh", distinct=True
+    )
+    return docs.select("doc_id", *minhash_signature(F.col("_sh"), 8))
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -100,9 +100,10 @@ def run_daily_crawl(spark: SparkSession, drop_dir: str, index_dir: str,
         ).persist()
         n_err = rows.filter("is_err").count()
         # the dedup operators' contract is SINGLE-SPACED text
-        # (shingle_col splits on ' '): collapse the extraction's
-        # paragraph/line structure for signing — the structured text
-        # stays in the corpus, only the dedup key is normalized.
+        # (grams.with_word_kgrams, which makes every shingle array,
+        # splits on ' '): collapse the extraction's paragraph/line
+        # structure for signing — the structured text stays in the
+        # corpus, only the dedup key is normalized.
         # kind="binary" rows (images/media: plaintext null, error
         # null) are counted skips, not index input.
         docs = rows.filter(

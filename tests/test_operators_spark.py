@@ -155,8 +155,8 @@ def test_ann_lsh_recall_vs_bruteforce(spark, sf_dir):
 def test_short_and_empty_docs_survive_gram_operators(spark):
     """Docs shorter than the shingle size must yield empty gram sets,
     not a slice(start=0) runtime error (sequence(1, 0) descends)."""
-    from web_content_extraction_benchmark_spark.operators.dedup import (
-        shingle_col,
+    from web_content_extraction_benchmark_spark.operators.grams import (
+        with_word_kgrams,
     )
     from web_content_extraction_benchmark_spark.operators.textstats import (
         winnowing_fingerprints,
@@ -168,8 +168,8 @@ def test_short_and_empty_docs_survive_gram_operators(spark):
     )
     fps = winnowing_fingerprints(edge).collect()
     assert {r.doc_id for r in fps} == {3}
-    sh = edge.select(
-        "doc_id", F.size(shingle_col(F.col("text"))).alias("n")
+    sh = with_word_kgrams(edge, "text", 3, "sh", distinct=True).select(
+        "doc_id", F.size("sh").alias("n")
     ).collect()
     assert {r.doc_id: r.n for r in sh} == {1: 0, 2: 0, 3: 3}
     # the gram-based pair operators run clean over short docs too
@@ -924,7 +924,9 @@ def test_band_keys_selectexpr_equals_column_form(spark, docs):
         lsh_band_keys,
         minhash_signature,
         minhash_signature_fast,
-        shingle_col,
+    )
+    from web_content_extraction_benchmark_spark.operators.grams import (
+        with_word_kgrams,
     )
 
     base = docs.select("doc_id", "text").filter(F.col("doc_id") < 60)
@@ -932,10 +934,10 @@ def test_band_keys_selectexpr_equals_column_form(spark, docs):
         new = {(r.id, r.band, r.key) for r in lsh_band_keys(
             base, id_col="doc_id", num_hashes=num_hashes, bands=bands,
             hash_fn=hash_fn).collect()}
-        shingled = base.select(
-            F.col("doc_id").alias("id"),
-            shingle_col(F.col("text")).alias("_sh"),
-        ).filter(F.size("_sh") > 0)
+        shingled = with_word_kgrams(
+            base, "text", 3, "_sh", distinct=True
+        ).select(F.col("doc_id").alias("id"), "_sh").filter(
+            F.size("_sh") > 0)
         if hash_fn == "xxhash64":
             sig = shingled.select(
                 "id", F.transform("_sh", lambda s: F.xxhash64(s)).alias("_hs")

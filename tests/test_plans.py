@@ -377,3 +377,76 @@ def test_read_warc_scan_prunes_content_column(spark, tmp_path):
     assert "path" in scan_schema
     assert "content" not in scan_schema
     assert "Exchange" not in plan
+
+
+def _lambdas_splitting(plan: str) -> list[str]:
+    """The ``lambdafunction(...)`` bodies of a plan string that contain
+    a ``split(`` — a word split re-run per lambda element."""
+    found = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth = 0
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        if "split(" in plan[start:end]:
+            found.append(plan[start:end + 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return found
+
+
+def test_word_grams_never_split_inside_a_lambda(spark, tmp_path):
+    """Every k-gram/word consumer reads a PROJECTED word array: a split
+    inlined into a transform/filter lambda re-runs at every element
+    (O(words^2) per doc).  The input
+    comes from spark.range, not a local list: ConvertToLocalRelation
+    would fold local rows and hide the lambdas.  contaminated_ids and
+    dedup_exact_substrings build their grams behind a localCheckpoint,
+    so the plans of with_word_kgrams itself cover them."""
+    from web_content_extraction_benchmark_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        ngram_jaccard_pairs,
+    )
+    from web_content_extraction_benchmark_spark.operators.grams import (
+        with_word_kgrams,
+    )
+    from web_content_extraction_benchmark_spark.operators.incremental_dedup import (
+        NearDupIndex,
+    )
+    from web_content_extraction_benchmark_spark.operators.packing import (
+        passage_split,
+    )
+    from web_content_extraction_benchmark_spark.operators.textstats import (
+        repetition_stats,
+        winnowing_fingerprints,
+    )
+
+    docs = spark.range(64).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.lit("a b c"), F.col("id").cast("string"),
+                    F.lit("d e f g")).alias("text"),
+    )
+    plans = {
+        "kgrams": with_word_kgrams(docs, "text", 3, "g"),
+        "kgrams_distinct": with_word_kgrams(
+            docs, "text", 3, "g", distinct=True, nonempty=True),
+        "kgrams_md5": with_word_kgrams(
+            docs, "text", 3, "g", transform=F.md5, words_out="w"),
+        "kgrams_explode": with_word_kgrams(
+            docs, "text", 3, "g", distinct=True, explode=True
+        ).select("g").distinct(),
+        "ngram_jaccard_pairs": ngram_jaccard_pairs(docs),
+        "repetition_stats": repetition_stats(docs),
+        "winnowing_fingerprints": winnowing_fingerprints(docs),
+        "passage_split": passage_split(docs, window=4, stride=2),
+        "neardup_features": NearDupIndex(
+            str(tmp_path / "idx"))._feature_rows(docs),
+    }
+    for hash_fn in ("md5", "xxhash64", "oph"):
+        plans[f"minhash_lsh_pairs[{hash_fn}]"] = minhash_lsh_pairs(
+            docs, hash_fn=hash_fn)
+    for name, df in plans.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction(" in plan, name
+        assert _lambdas_splitting(plan) == [], name

@@ -40,6 +40,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .grams import with_word_kgrams
+
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BANDS = 4  # 4 bands x 2 rows — oracle-fixture scale
 PROD_NUM_HASHES = 128
@@ -128,14 +130,6 @@ def drop_exact_duplicates(df: DataFrame, text_col: str = "text",
         .select(id_col)
     )
     return df.join(losers, [id_col], "left_anti")
-
-
-def shingle_col(text_col: Column, k: int = SHINGLE_SIZE) -> Column:
-    """Distinct word k-gram shingles of a single-spaced text column
-    (short-doc guard lives in the shared ``grams.positional_kgrams``)."""
-    from .grams import positional_kgrams
-
-    return F.array_distinct(positional_kgrams(F.split(text_col, " "), k))
 
 
 def minhash_signature(shingles: Column,
@@ -267,10 +261,9 @@ def lsh_band_keys(
             f"unknown hash_fn {hash_fn!r}: expected one of {HASH_FNS}"
         )
     rows_per_band = num_hashes // bands
-    shingled = df.select(
-        F.col(id_col).alias("id"),
-        shingle_col(F.col(text_col)).alias("_sh"),
-    ).filter(F.size("_sh") > 0)
+    shingled = with_word_kgrams(
+        df, text_col, SHINGLE_SIZE, "_sh", distinct=True, nonempty=True
+    ).select(F.col(id_col).alias("id"), "_sh")
     # NB (r9): the per-seed signature columns are built as SQL STRINGS
     # through one selectExpr, not as num_hashes Column trees — each
     # F.transform/F.array_min/F.xxhash64 chain costs several py4j round
@@ -398,9 +391,9 @@ def minhash_lsh_pairs(
     candidates = _lsh_candidate_pairs(
         df, text_col, id_col, num_hashes, bands, hash_fn
     )
-    shingles = df.select(
-        F.col(id_col).alias("id"), shingle_col(F.col(text_col)).alias("sh")
-    )
+    shingles = with_word_kgrams(
+        df, text_col, SHINGLE_SIZE, "sh", distinct=True
+    ).select(F.col(id_col).alias("id"), "sh")
     return _verify_jaccard(candidates, shingles, jaccard_threshold)
 
 
@@ -423,13 +416,16 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     a plain hash join on the bucket key (never cartesian / nested-loop).
     The size inequality stays as a post-join filter and exact Jaccard is
     verified by re-joining shingles on the surviving candidates only."""
-    shingles = df.select(
-        F.col(id_col).alias("id"), shingle_col(F.col(text_col)).alias("sh")
-    )
-    sized = shingles.select("id", F.size("sh").alias("n")).filter(
-        F.col("n") > 0
-    )
-    bucket = _log_bucket(F.col("n"), threshold)
+    # shingle-less docs are dropped by word count (never by size(sh):
+    # see with_word_kgrams' nonempty)
+    shingles = with_word_kgrams(
+        df, text_col, SHINGLE_SIZE, "sh", distinct=True, nonempty=True
+    ).select(F.col(id_col).alias("id"), "sh")
+    sized = shingles.select("id", F.size("sh").alias("n"))
+    # n >= 1, so the bucket is never NULL; saying so (coalesce) lets the
+    # optimizer fold the join's inferred isnotnull(bucket) away instead
+    # of pushing it to the scan with the gram expression substituted
+    bucket = F.coalesce(_log_bucket(F.col("n"), threshold), F.lit(0))
     a = sized.select(
         F.col("id").alias("id_a"), F.col("n").alias("n_a"),
         bucket.alias("bucket"),
@@ -871,10 +867,11 @@ def contaminated_ids(docs: DataFrame, benchmark: DataFrame,
     # are lazily checkpointed — used twice (window keys + exact
     # verify), computed once.
     bench_grams = (
-        benchmark.repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            F.explode(shingle_col(F.col(text_col), k)).alias("gram")
+        with_word_kgrams(
+            benchmark.repartition(spark.sparkContext.defaultParallelism),
+            text_col, k, "gram", distinct=True, explode=True,
         )
+        .select("gram")
         .distinct()
         .localCheckpoint(eager=False)
     )

@@ -110,12 +110,13 @@ from .dedup import (
     DEFAULT_BANDS,
     DEFAULT_NUM_HASHES,
     HASH_FNS,
+    SHINGLE_SIZE,
     _verify_jaccard,
     connected_components,
     lsh_band_keys,
-    shingle_col,
     simhash64_col,
 )
+from .grams import with_word_kgrams
 
 DEFAULT_INDEX_BUCKETS = 64
 
@@ -655,6 +656,10 @@ class NearDupIndex:
         the store never persists signatures, so every plugin prunes the
         committed-docs read the same way and re-signs only
         candidate-matched stored docs."""
+        if self.signature == "minhash":
+            return with_word_kgrams(
+                src, self.text_col, SHINGLE_SIZE, "sh", distinct=True
+            ).select(F.col(self.id_col).alias("id"), "sh")
         if self.signature == "embedding":
             from .similarity import _as_double, norm
 
@@ -662,8 +667,6 @@ class NearDupIndex:
             feature = F.struct(
                 vec.alias("v"), norm(vec).alias("n")
             )
-        elif self.signature == "minhash":
-            feature = shingle_col(F.col(self.text_col))
         else:
             feature = simhash64_col(F.col(self.text_col))
         return src.select(

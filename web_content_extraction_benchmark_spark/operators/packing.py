@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .grams import with_words
 from .sampling import sample_hash
 
 PACKED_SCHEMA = T.StructType(
@@ -148,16 +149,20 @@ def passage_split(df: DataFrame, window: int, stride: int,
     if stride < 1 or stride > window:
         raise ValueError(
             f"need 1 <= stride <= window, got {stride}/{window}")
-    toks = F.split(F.col(text_col), " ")
-    n = F.size(toks)
+    # the token array is projected first (grams.with_words): the
+    # filter lambda reads its size instead of re-splitting the text
+    # once per candidate start
+    toks = with_words(df, text_col, "_toks").select(
+        F.col(id_col).alias("id"), "_toks"
+    )
+    n = F.size("_toks")
     keep_gap = window - stride
     starts = F.filter(
         F.sequence(F.lit(0), n - 1, F.lit(stride)),
         lambda s: (s == 0) | (s + F.lit(keep_gap) < n),
     )
-    staged = df.select(
-        F.col(id_col).alias("id"), toks.alias("_toks"),
-        F.posexplode(starts).alias("passage_idx", "_start"),
+    staged = toks.select(
+        "id", "_toks", F.posexplode(starts).alias("passage_idx", "_start"),
     )
     passage = F.array_join(
         F.slice(F.col("_toks"), F.col("_start") + 1, window), " "

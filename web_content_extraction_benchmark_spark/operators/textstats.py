@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .grams import with_word_kgrams
+
 STOPWORDS = {
     "en": ["the", "a", "and", "of", "to", "in", "is", "it", "that", "for"],
     "de": ["der", "die", "das", "und", "ist", "ein", "nicht", "mit", "sich", "auf"],
@@ -124,14 +126,15 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
       total bigrams — computed as the longest equal-run of the SORTED
       bigram array via one ``aggregate`` pass (run-length max), which is
       exactly the modal count without building a per-row map."""
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    staged = with_word_kgrams(
+        df, text_col, 2, "_bigrams", words_out="_words", words=_words
+    )
+    words = F.col("_words")
+    bigrams = F.col("_bigrams")
     n = F.size(words)
     dup_word_frac = F.when(
         n > 0, F.round(1.0 - F.size(F.array_distinct(words)) / n, 6)
     ).otherwise(F.lit(0.0))
-    from .grams import positional_kgrams
-
-    bigrams = positional_kgrams(words, 2)
     run_state = F.aggregate(
         F.array_sort(bigrams),
         F.struct(
@@ -154,11 +157,11 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
         F.size(bigrams) > 0,
         F.round(run_state["best"] / F.size(bigrams), 6),
     ).otherwise(F.lit(0.0))
-    return df.select(
+    return staged.select(
         "*",
         dup_word_frac.alias("dup_word_frac"),
         top_bigram_frac.alias("top_bigram_frac"),
-    )
+    ).drop("_words", "_bigrams")
 
 
 def winnowing_fingerprints(
@@ -177,13 +180,15 @@ def winnowing_fingerprints(
     document by doc_id, which at 100 TB is a full-corpus shuffle for a
     value that never needed to leave its row.  The trailing windows
     shorter than ``window`` are kept (slice truncates at the end), same
-    as rowsBetween's partition-end capping."""
-    from .grams import positional_kgrams
+    as rowsBetween's partition-end capping.
 
-    words = F.split(F.col(text_col), " ")
-    # short-doc guard lives in the shared positional_kgrams helper
-    grams = positional_kgrams(words, k, transform=F.md5)
-    two_step = df.select(F.col(id_col).alias("id"), grams.alias("_grams"))
+    Raises ``ValueError`` for ``k < 1`` or ``window < 1`` before any
+    plan is built (window 0 would make every window minimum NULL)."""
+    if window < 1:
+        raise ValueError(f"winnowing window must be >= 1, got {window}")
+    two_step = with_word_kgrams(
+        df, text_col, k, "_grams", transform=F.md5
+    ).select(F.col(id_col).alias("id"), "_grams")
     # NB: sequence(1, 0) DESCENDS in Spark, so the gram-less edge needs an
     # explicit empty array (matches the old explode form: no rows emitted).
     wmins = F.when(
@@ -193,11 +198,12 @@ def winnowing_fingerprints(
             lambda i: F.array_min(F.slice(F.col("_grams"), i, window)),
         ),
     ).otherwise(F.array().cast("array<string>"))
+    # explode the expression, not a projected column: exploding a bare
+    # column makes Spark infer size(col) > 0 and push that filter down
+    # to the scan with the whole gram build substituted into it
     return two_step.select(
-        "id", F.array_distinct(wmins).alias("_fps")
-    ).select(
         F.col("id").alias(id_col),
-        F.explode("_fps").alias("fingerprint"),
+        F.explode(F.array_distinct(wmins)).alias("fingerprint"),
     )
 
 
