@@ -2,8 +2,13 @@
 
 import json
 import os
+import sys
 
 import pandas as pd
+
+# run as a script from any directory: import the checkout's package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__)))))
 
 from web_content_extraction_benchmark_spark.encoding import decode_html
 from web_content_extraction_benchmark_spark.extractors import (

@@ -1,4 +1,8 @@
-from web_content_extraction_benchmark_spark.dom import body_or_root, parse_html
+from web_content_extraction_benchmark_spark.dom import (
+    body_and_ancestors,
+    body_or_root,
+    parse_html,
+)
 
 
 def test_basic_tree_and_text():
@@ -52,6 +56,17 @@ def test_body_or_root_without_body():
     root = parse_html("<p>bare</p>")
     assert body_or_root(root).tag == "#document"
     assert root.text_content() == "bare"
+
+
+def test_body_and_ancestors():
+    root = parse_html("<html><form><body id='a'><p>x</p></body></form>"
+                      "<body id='b'></body></html>")
+    body, ancestors = body_and_ancestors(root)
+    assert body.attr("id") == "a"  # the first body in document order
+    assert [n.tag for n in ancestors] == ["#document", "html", "form"]
+    assert ancestors[0] is root
+    bare = parse_html("<p>bare</p>")
+    assert body_and_ancestors(bare) == (bare, [])
 
 
 def test_rawtext_close_matches_stdlib_cdata_semantics():

@@ -15,7 +15,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from web_content_extraction_benchmark_spark.dom import body_or_root, parse_html
+from web_content_extraction_benchmark_spark.dom import parse_html
 from web_content_extraction_benchmark_spark.extractors import (
     neural_training as nt,
 )
@@ -54,7 +54,7 @@ def test_trained_model_equals_gold_per_block(sf_dir):
     n_blocks = 0
     for row in pq.read_table(f"{sf_dir}/documents.parquet").to_pylist():
         html = build_page_html(row["doc_id"], row["source"], row["text"])
-        blocks = segment_blocks(body_or_root(parse_html(html)))
+        blocks = segment_blocks(parse_html(html))
         if not blocks:
             continue
         feats, owners = model.page_features(blocks)
@@ -116,7 +116,7 @@ def test_model_is_not_a_rule_rederivation():
         + f' <a href="/r">{" ".join(words[6:9])}</a> {words[9]}'
         + "</p></div></body></html>"
     )
-    blocks = segment_blocks(body_or_root(parse_html(html)))
+    blocks = segment_blocks(parse_html(html))
     assert len(blocks) == 1
     assert 0.55 < blocks[0].link_density <= 0.70  # the disagreement band
     assert nt.target_concept(
@@ -139,7 +139,7 @@ def test_template_leaf_margins_are_stable(sf_dir):
     worst = np.inf
     for row in pq.read_table(f"{sf_dir}/documents.parquet").to_pylist():
         html = build_page_html(row["doc_id"], row["source"], row["text"])
-        blocks = segment_blocks(body_or_root(parse_html(html)))
+        blocks = segment_blocks(parse_html(html))
         if not blocks:
             continue
         feats, owners = model.page_features(blocks)
@@ -205,7 +205,7 @@ def test_batch_inference_equals_per_page(sf_dir):
     htmls += ["", "<html><body><p>one</p></body></html>",
               "<html><body><h1>t t</h1></body></html>"]
     pages_blocks = [
-        segment_blocks(body_or_root(parse_html(h))) if h else None
+        segment_blocks(parse_html(h)) if h else None
         for h in htmls
     ]
     batch = classify_page_batch(model, pages_blocks)
@@ -261,10 +261,7 @@ _WORDS = ["join", "hash", "row", "Login", "Buy", "now", "tag", "one",
 )
 @settings(max_examples=150, deadline=None)
 def test_batch_inference_bit_identical_on_random_pages(layouts):
-    from web_content_extraction_benchmark_spark.dom import (
-        body_or_root,
-        parse_html,
-    )
+    from web_content_extraction_benchmark_spark.dom import parse_html
     from web_content_extraction_benchmark_spark.extractors.density import (
         segment_blocks,
     )
@@ -286,7 +283,7 @@ def test_batch_inference_bit_identical_on_random_pages(layouts):
         )
         htmls.append(f"<html><body>{body}</body></html>")
     pages_blocks = [
-        segment_blocks(body_or_root(parse_html(h))) if h else None
+        segment_blocks(parse_html(h)) if h else None
         for h in htmls
     ]
     batch = classify_page_batch(model, pages_blocks)

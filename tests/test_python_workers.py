@@ -6,6 +6,8 @@
 - ``get_spark`` ships the package root to the workers, so a driver
   started from any working directory runs package kernels, and those
   workers carry the zip-cache fix into their later tasks.
+- The extraction kernel freezes a worker's heap (``gc.freeze``) once, on
+  its first task, and leaves the collector enabled.
 """
 
 import importlib
@@ -90,7 +92,7 @@ answers = sorted((r.url, r.plaintext, r.error)
 
 
 def probe(batches):
-    import os, sys, zipimport
+    import gc, os, sys, zipimport
     import pyarrow as pa
     method = zipimport.zipimporter.invalidate_caches
     for _ in batches:
@@ -100,13 +102,23 @@ def probe(batches):
         "lazy": [hasattr(zipimport.zipimporter, "_get_files")],
         "loaded": ["web_content_extraction_benchmark_spark" in sys.modules],
         "cwd": [os.getcwd()],
+        "pid": [os.getpid()],
+        "frozen": [gc.get_freeze_count()],
+        "gc_enabled": [gc.isenabled()],
     }})
 
 
-worker = spark.range(1, numPartitions=1).mapInArrow(
-    probe, "module string, lazy boolean, loaded boolean, cwd string"
-).collect()[0].asDict()
-print("RESULT " + json.dumps({{"answers": answers, "worker": worker}}))
+def probe_workers(n):
+    return [row.asDict() for row in spark.range(n, numPartitions=n).mapInArrow(
+        probe, "module string, lazy boolean, loaded boolean, cwd string, "
+               "pid long, frozen long, gc_enabled boolean").collect()]
+
+
+worker = probe_workers(1)[0]
+extract_answers(pages, ["main_content"]).collect()  # a second job
+later = probe_workers(2)  # two tasks at once: both workers
+print("RESULT " + json.dumps({{"answers": answers, "worker": worker,
+                               "later": later}}))
 spark.stop()
 '''
 
@@ -142,3 +154,18 @@ def test_reused_worker_runs_the_stat_guarded_invalidation(worker_run):
     assert worker["loaded"], "the probe did not run on a reused worker"
     expected = "zipimport" if worker["lazy"] else _zipcache.__name__
     assert worker["module"] == expected
+
+
+def test_extraction_kernel_freezes_the_worker_heap_once(worker_run):
+    """The first extraction task in a worker moves its import heap to the
+    collector's permanent generation and leaves the collector on; a
+    second job's kernel does not freeze again."""
+    _, result = worker_run
+    worker = result["worker"]
+    assert worker["loaded"], "the probe did not run on a reused worker"
+    assert worker["frozen"] > 0
+    assert worker["gc_enabled"]
+    later = {w["pid"]: w for w in result["later"]}
+    assert worker["pid"] in later, "the first probe's worker was not reused"
+    assert later[worker["pid"]]["frozen"] == worker["frozen"]
+    assert all(w["gc_enabled"] for w in later.values())

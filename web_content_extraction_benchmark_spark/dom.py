@@ -10,6 +10,12 @@ the reference's ``extract_bs4`` at extractors.py:18-23).
 The DOM is per-document transient state inside extraction UDFs — it is never
 a dataset-level abstraction (mirrors the reference where the tree lives only
 inside an extractor call, extractors.py:33-38).
+
+The tree is acyclic: a node holds its children but no back-pointer to its
+parent, so a page's tree is freed by reference counting the moment the
+kernel drops it, and CPython's cyclic collector never has to find it.
+Code that needs a node's ancestors carries them down its walk, seeded from
+:func:`body_and_ancestors`.
 """
 
 from __future__ import annotations
@@ -54,14 +60,13 @@ _IMPLICIT_CLOSE = {
 class Node:
     """Element or text node. Text nodes have ``tag is None``."""
 
-    __slots__ = ("tag", "attrs", "children", "parent", "text")
+    __slots__ = ("tag", "attrs", "children", "text")
 
     def __init__(self, tag: Optional[str], attrs: Optional[dict] = None,
                  text: str = ""):
         self.tag = tag
         self.attrs = attrs or {}
         self.children: list[Node] = []
-        self.parent: Optional[Node] = None
         self.text = text
 
     @property
@@ -69,7 +74,6 @@ class Node:
         return self.tag is None
 
     def append(self, child: "Node") -> None:
-        child.parent = self
         self.children.append(child)
 
     def iter(self, skip_tags: frozenset = frozenset()) -> Iterator["Node"]:
@@ -247,10 +251,7 @@ def parse_html_fast(html: str) -> Node:
             if first != "<" or len(token) == 1:
                 # text run (or stray '<')
                 text = unescape(token) if "&" in token else token
-                child = Node(None, text=text)
-                top = open_stack[-1]
-                child.parent = top
-                top.children.append(child)
+                open_stack[-1].children.append(Node(None, text=text))
                 continue
             second = token[1]
             if second in "!?":
@@ -282,9 +283,7 @@ def parse_html_fast(html: str) -> Node:
             if closers:
                 while len(open_stack) > 1 and open_stack[-1].tag in closers:
                     open_stack.pop()
-            top = open_stack[-1]
-            node.parent = top
-            top.children.append(node)
+            open_stack[-1].children.append(node)
             if tag in VOID_ELEMENTS or self_closing:
                 continue
             if tag in _RAWTEXT:
@@ -296,9 +295,8 @@ def parse_html_fast(html: str) -> Node:
                     pos = length
                 else:
                     if m.start() > pos:
-                        text_child = Node(None, text=html[pos:m.start()])
-                        text_child.parent = node
-                        node.children.append(text_child)
+                        node.children.append(
+                            Node(None, text=html[pos:m.start()]))
                     pos = m.end()
                 jumped = True
                 break
@@ -324,6 +322,70 @@ def parse_html(html: str) -> Node:
         return parse_html_stdlib(html)
 
 
+def body_and_ancestors(root: Node) -> tuple[Node, list[Node]]:
+    """The first ``<body>`` element in document order and its ancestors,
+    root first; ``(root, [])`` when the page has no ``<body>``."""
+    path: list[Node] = []
+    stack = [(root, 0)]
+    while stack:
+        node, depth = stack.pop()
+        del path[depth:]
+        if node.tag == "body":
+            return node, path
+        path.append(node)
+        depth += 1
+        stack.extend(
+            (child, depth) for child in reversed(node.children)
+            if child.tag is not None
+        )
+    return root, []
+
+
 def body_or_root(root: Node) -> Node:
     """The ``<body>`` element if present, else the document root."""
-    return root.find("body") or root
+    return body_and_ancestors(root)[0]
+
+
+def iter_elements(body: Node, ancestors: list[Node],
+                  skip_tags: frozenset = frozenset()):
+    """Pre-order over the elements of ``body``'s subtree (the order of
+    :meth:`Node.iter`), each as ``(element, parent, grandparent)``.
+    ``body``'s own parent and grandparent come from ``ancestors`` (root
+    first, as :func:`body_and_ancestors` returns them); ``None`` above the
+    root.  Subtrees rooted at ``skip_tags`` are pruned."""
+    above = [None, None, *ancestors]
+    stack = [(body, above[-1], above[-2])]
+    while stack:
+        item = stack.pop()
+        node, parent, _ = item
+        if node.tag in skip_tags:
+            continue
+        yield item
+        stack.extend(
+            (child, node, parent) for child in reversed(node.children)
+            if child.tag is not None
+        )
+
+
+def walk_paragraphs(sink, node: Node, in_link: bool = False) -> None:
+    """Feed the text below ``node`` to ``sink``, split at block elements.
+
+    Each text node goes to ``sink.parts``, and also to ``sink.link_parts``
+    under an ``<a>``; ``sink.flush()`` runs before and after every block
+    element; script/style/noscript/template subtrees are skipped.  A plain
+    recursive function over the sink object (no self-referencing closure),
+    so a walk leaves nothing for the cyclic collector."""
+    for child in node.children:
+        tag = child.tag
+        if tag is None:
+            sink.parts.append(child.text)
+            if in_link:
+                sink.link_parts.append(child.text)
+        elif tag in NON_TEXT_ELEMENTS:
+            continue
+        elif tag in BLOCK_ELEMENTS:
+            sink.flush()
+            walk_paragraphs(sink, child, in_link)
+            sink.flush()
+        else:
+            walk_paragraphs(sink, child, in_link or tag == "a")

@@ -22,6 +22,7 @@ from ..dom import Node, body_or_root, parse_html
 from ..textutils import squeeze_xpath_style
 
 _PLAIN_SKIP = frozenset({"script", "style", "noscript"})
+_XPATH_SKIP = frozenset({"script", "style"})
 
 # The kill list is configuration data shared with the reference's cleaner
 # setup (extractors.py:113-124).
@@ -58,13 +59,16 @@ def tag_blacklist_from_tree(root: Node) -> str:
 
 
 def xpath_text_from_tree(root: Node) -> str:
-    body = body_or_root(root)
     parts: list[str] = []
     # Text nodes whose parent is an element strictly below body and is not
-    # script/style — the //body[1]//*/text() selection.
-    for node in body.iter(skip_tags=frozenset({"script", "style"})):
-        if node.is_text and node.parent is not None and node.parent is not body:
-            parts.append(node.text)
+    # script/style — the //body[1]//*/text() selection: every text node
+    # under one of body's element children.
+    for child in body_or_root(root).children:
+        if child.tag is not None:
+            parts.extend(
+                node.text for node in child.iter(skip_tags=_XPATH_SKIP)
+                if node.is_text
+            )
     return squeeze_xpath_style(" ".join(parts))
 
 

@@ -14,6 +14,16 @@ rule/density-based main-content heuristics with formatting preserved):
 4. Output kept blocks, whitespace-squeezed, joined with newlines
    (preserve_formatting semantics), plus char-offset block spans per the
    north-star contract ("extracted main text plus block-level spans").
+
+The DOM has no parent pointers, so step 2's ancestor facts are carried
+down the walk instead of looked up: each element's class signal is its own
+class/id decision, else its parent's (reset to 0 at body, html and the
+document root); its hard-negative flag is its parent's OR its own tag; its
+tag path is its parent's plus its own tag.  The walk starts at ``<body>``
+with all three seeded from the body's ancestors.  It is a plain recursive
+function over a ``__slots__`` state object, with no closures, so a page
+leaves no reference cycles behind; a nesting bomb deeper than the
+interpreter's recursion limit still raises ``RecursionError``.
 """
 
 from __future__ import annotations
@@ -21,7 +31,13 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from ..dom import BLOCK_ELEMENTS, NON_TEXT_ELEMENTS, Node, body_or_root, parse_html
+from ..dom import (
+    BLOCK_ELEMENTS,
+    NON_TEXT_ELEMENTS,
+    Node,
+    body_and_ancestors,
+    parse_html,
+)
 from ..textutils import squeeze_ws, ws_tokens
 
 # Blocks under these elements never survive (site chrome / input surfaces).
@@ -45,6 +61,9 @@ POSITIVE_CLASS_RE = re.compile(
 
 MAX_LINK_DENSITY = 0.55
 
+# The class/id signal is inherited down the tree but never crosses these.
+_SIGNAL_RESET = frozenset({"#document", "body", "html"})
+
 
 @dataclass
 class Block:
@@ -65,100 +84,112 @@ class Block:
         return self.link_words / self.words if self.words else 0.0
 
 
-def _class_signal(node: Node) -> int:
-    """Closest class/id decision walking self -> ancestors; 0 if none."""
-    cur: Node | None = node
-    while cur is not None and cur.tag not in (None, "#document", "body", "html"):
-        blob = f"{cur.attr('class')} {cur.attr('id')}".strip()
-        if blob:
-            if NEGATIVE_CLASS_RE.search(blob):
-                return -1
-            if POSITIVE_CLASS_RE.search(blob):
-                return 1
-        cur = cur.parent
+class _Segmenter:
+    """Walk state of :func:`segment_blocks`: the finished blocks, the open
+    block's text, link text and leaves, and the context of the block
+    element that owns the open block."""
+
+    __slots__ = ("blocks", "parts", "link_parts", "leaves",
+                 "tag", "class_signal", "hard_negative")
+
+    def __init__(self, tag: str, class_signal: int, hard_negative: bool):
+        self.blocks: list[Block] = []
+        self.parts: list[str] = []
+        self.link_parts: list[str] = []
+        self.leaves: list[tuple] = []
+        self.tag = tag
+        self.class_signal = class_signal
+        self.hard_negative = hard_negative
+
+    def flush(self) -> None:
+        parts = self.parts
+        if not parts:
+            return
+        raw = "".join(parts)
+        words = len(ws_tokens(raw))
+        if words:
+            self.blocks.append(
+                Block(
+                    tag=self.tag,
+                    raw_text=raw,
+                    words=words,
+                    link_words=len(ws_tokens(" ".join(self.link_parts))),
+                    class_signal=self.class_signal,
+                    hard_negative=self.hard_negative,
+                    leaves=tuple(self.leaves),
+                )
+            )
+        self.parts = []
+        self.link_parts = []
+        self.leaves = []
+
+
+def _class_decision(attrs: dict) -> int:
+    """An element's own class/id decision: -1, +1, or 0 when undecided."""
+    blob = f"{attrs.get('class') or ''} {attrs.get('id') or ''}".strip()
+    if blob:
+        if NEGATIVE_CLASS_RE.search(blob):
+            return -1
+        if POSITIVE_CLASS_RE.search(blob):
+            return 1
     return 0
 
 
-def _has_hard_negative(node: Node) -> bool:
-    cur: Node | None = node
-    while cur is not None:
-        if cur.tag in HARD_NEGATIVE_TAGS:
-            return True
-        cur = cur.parent
-    return False
+def _walk(seg: _Segmenter, node: Node, signal: int, negative: bool,
+          path: tuple, in_link: bool) -> None:
+    """Feed ``node``'s children to ``seg``; ``signal``, ``negative`` and
+    ``path`` are ``node``'s own block context."""
+    for child in node.children:
+        tag = child.tag
+        if tag is None:
+            text = child.text
+            if text:
+                seg.parts.append(text)
+                if in_link:
+                    seg.link_parts.append(text)
+                if not text.isspace():  # == ws_tokens(text), no list
+                    seg.leaves.append((text, path))
+            continue
+        if tag in NON_TEXT_ELEMENTS:
+            continue
+        if tag in _SIGNAL_RESET:
+            child_signal = 0
+        elif child.attrs:
+            child_signal = _class_decision(child.attrs) or signal
+        else:
+            child_signal = signal
+        child_negative = negative or tag in HARD_NEGATIVE_TAGS
+        if tag in BLOCK_ELEMENTS:
+            seg.flush()
+            outer = seg.tag, seg.class_signal, seg.hard_negative
+            seg.tag = tag
+            seg.class_signal = child_signal
+            seg.hard_negative = child_negative
+            _walk(seg, child, child_signal, child_negative, path + (tag,),
+                  in_link)
+            seg.flush()
+            seg.tag, seg.class_signal, seg.hard_negative = outer
+        else:
+            _walk(seg, child, child_signal, child_negative, path + (tag,),
+                  in_link or tag == "a")
 
 
-def _leaf_tag_path(node: Node) -> tuple:
-    """Element tags on the root -> parent chain of a text node whose
-    immediate parent is ``node`` (the BoilerNet ``tag_list`` shape)."""
-    path: list[str] = []
-    cur: Node | None = node
-    while cur is not None:
-        if cur.tag and cur.tag != "#document":
-            path.append(cur.tag)
-        cur = cur.parent
-    return tuple(reversed(path))
-
-
-def segment_blocks(body: Node) -> list[Block]:
-    """Flatten the body subtree into text blocks split at block elements."""
-    blocks: list[Block] = []
-    # Current accumulation: (owner element, [text parts], [link parts])
-    parts: list[str] = []
-    link_parts: list[str] = []
-    leaf_parts: list[tuple] = []
-    owner: Node | None = None
-
-    def flush() -> None:
-        nonlocal parts, link_parts, leaf_parts, owner
-        if owner is not None and parts:
-            raw = "".join(parts)
-            words = len(ws_tokens(raw))
-            if words:
-                link_words = len(ws_tokens(" ".join(link_parts)))
-                blocks.append(
-                    Block(
-                        tag=owner.tag or "body",
-                        raw_text=raw,
-                        words=words,
-                        link_words=link_words,
-                        class_signal=_class_signal(owner),
-                        hard_negative=_has_hard_negative(owner),
-                        leaves=tuple(leaf_parts),
-                    )
-                )
-        parts = []
-        link_parts = []
-        leaf_parts = []
-        owner = None
-
-    def walk(node: Node, block_owner: Node, in_link: bool) -> None:
-        nonlocal owner
-        for child in node.children:
-            if child.is_text:
-                if child.text:
-                    if owner is None:
-                        owner = block_owner
-                    parts.append(child.text)
-                    if in_link:
-                        link_parts.append(child.text)
-                    if ws_tokens(child.text):
-                        leaf_parts.append(
-                            (child.text, _leaf_tag_path(node))
-                        )
-                continue
-            if child.tag in NON_TEXT_ELEMENTS:
-                continue
-            if child.tag in BLOCK_ELEMENTS:
-                flush()
-                walk(child, child, in_link)
-                flush()
-            else:
-                walk(child, block_owner, in_link or child.tag == "a")
-
-    walk(body, body, False)
-    flush()
-    return blocks
+def segment_blocks(root: Node) -> list[Block]:
+    """Flatten the document's ``<body>`` subtree (the whole document when
+    it has none) into text blocks split at block elements."""
+    body, ancestors = body_and_ancestors(root)
+    signal, negative, path = 0, False, ()
+    for node in (*ancestors, body):
+        tag = node.tag
+        signal = 0 if tag in _SIGNAL_RESET else (
+            _class_decision(node.attrs) or signal)
+        negative = negative or tag in HARD_NEGATIVE_TAGS
+        if tag != "#document":
+            path += (tag,)
+    seg = _Segmenter(body.tag, signal, negative)
+    _walk(seg, body, signal, negative, path, False)
+    seg.flush()
+    return seg.blocks
 
 
 def classify(block: Block) -> bool:
@@ -180,9 +211,8 @@ def main_content_with_blocks_from_tree(
     root: Node,
 ) -> tuple[str, list[tuple[int, int, str, str]]]:
     """Main text plus block spans (start, end char offsets, tag, text)."""
-    body = body_or_root(root)
     kept: list[tuple[str, str]] = []
-    for block in segment_blocks(body):
+    for block in segment_blocks(root):
         if classify(block):
             text = squeeze_ws(block.raw_text)
             if text:

@@ -54,7 +54,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from ..dom import body_or_root, parse_html
+from ..dom import parse_html
 from .density import HEADING_TAGS, classify, segment_blocks
 
 # The featurizer is SHARED with the deployment module — byte identity
@@ -148,7 +148,7 @@ def harvest_template_pages(documents: pd.DataFrame) -> list[list[LeafRecord]]:
             continue
         html = build_page_html(doc_id, source, text)
         gold_lines = gold_main_text(doc_id, source, text).split("\n")
-        blocks = segment_blocks(body_or_root(parse_html(html)))
+        blocks = segment_blocks(parse_html(html))
         ptr = 0
         labels: list[int] = []
         for block in blocks:
@@ -264,7 +264,7 @@ def adversarial_pages(documents: pd.DataFrame, n: int = 1200,
         html = "<html><body>{}</body></html>".format(
             "".join(_adv_block(rng, content, k) for k in kinds)
         )
-        blocks = segment_blocks(body_or_root(parse_html(html)))
+        blocks = segment_blocks(parse_html(html))
         labels = []
         keep_page = True
         for b in blocks:

@@ -11,7 +11,14 @@ from __future__ import annotations
 
 import re
 
-from ..dom import BLOCK_ELEMENTS, NON_TEXT_ELEMENTS, Node, body_or_root, parse_html
+from ..dom import (
+    NON_TEXT_ELEMENTS,
+    Node,
+    body_and_ancestors,
+    iter_elements,
+    parse_html,
+    walk_paragraphs,
+)
 from ..textutils import squeeze_ws, ws_tokens
 
 PARAGRAPH_SOURCE_TAGS = frozenset({"p", "pre", "td", "blockquote"})
@@ -57,46 +64,38 @@ def _link_words(node: Node) -> int:
     return total
 
 
+class _Lines:
+    """:func:`walk_paragraphs` sink of :func:`_render`."""
+
+    __slots__ = ("lines", "parts", "link_parts")
+
+    def __init__(self) -> None:
+        self.lines: list[str] = []
+        self.parts: list[str] = []
+        self.link_parts: list[str] = []
+
+    def flush(self) -> None:
+        text = squeeze_ws("".join(self.parts))
+        if text:
+            words = len(ws_tokens(text))
+            link_words = len(ws_tokens(squeeze_ws(" ".join(self.link_parts))))
+            if not words or link_words / words <= MAX_OUTPUT_LINK_DENSITY:
+                self.lines.append(text)
+        self.parts = []
+        self.link_parts = []
+
+
 def _render(node: Node) -> str:
     """Candidate subtree -> text with newline paragraph breaks; link-heavy
     sub-blocks are cleaned out (the 'clean conditionally' stage)."""
-    lines: list[str] = []
-    parts: list[str] = []
-    link_parts: list[str] = []
-
-    def flush() -> None:
-        nonlocal parts, link_parts
-        text = squeeze_ws("".join(parts))
-        if text:
-            words = len(ws_tokens(text))
-            link_words = len(ws_tokens(squeeze_ws(" ".join(link_parts))))
-            if not words or link_words / words <= MAX_OUTPUT_LINK_DENSITY:
-                lines.append(text)
-        parts = []
-        link_parts = []
-
-    def walk(node: Node, in_link: bool) -> None:
-        for child in node.children:
-            if child.is_text:
-                parts.append(child.text)
-                if in_link:
-                    link_parts.append(child.text)
-            elif child.tag in NON_TEXT_ELEMENTS:
-                continue
-            elif child.tag in BLOCK_ELEMENTS:
-                flush()
-                walk(child, in_link)
-                flush()
-            else:
-                walk(child, in_link or child.tag == "a")
-
-    walk(node, False)
-    flush()
-    return "\n".join(lines)
+    sink = _Lines()
+    walk_paragraphs(sink, node)
+    sink.flush()
+    return "\n".join(sink.lines)
 
 
 def readability_from_tree(root: Node) -> str:
-    body = body_or_root(root)
+    body, ancestors = body_and_ancestors(root)
     scores: dict[int, float] = {}
     nodes: dict[int, Node] = {}
 
@@ -107,7 +106,9 @@ def readability_from_tree(root: Node) -> str:
             scores[key] = TAG_PRIOR.get(node.tag or "", 0) + _hint_weight(node)
         scores[key] += amount
 
-    for node in body.iter(skip_tags=NON_TEXT_ELEMENTS):
+    # document pre-order, so score ties break by first appearance
+    for node, parent, grand in iter_elements(body, ancestors,
+                                             NON_TEXT_ELEMENTS):
         if node.tag not in PARAGRAPH_SOURCE_TAGS:
             continue
         text = node.text_content()
@@ -115,11 +116,9 @@ def readability_from_tree(root: Node) -> str:
         if len(words) < 3:
             continue
         score = 1.0 + text.count(",") + min(len(text) // 100, 3)
-        parent = node.parent
-        if parent is not None and parent.tag is not None:
+        if parent is not None:
             bump(parent, score)
-            grand = parent.parent
-            if grand is not None and grand.tag not in (None, "#document"):
+            if grand is not None and grand.tag != "#document":
                 bump(grand, score / 2.0)
 
     if not scores:

@@ -27,7 +27,7 @@ veto is not tracked, and the English stoplist is this module's own
 
 from __future__ import annotations
 
-from ..dom import BLOCK_ELEMENTS, NON_TEXT_ELEMENTS, Node, body_or_root, parse_html
+from ..dom import Node, body_or_root, parse_html, walk_paragraphs
 from ..textutils import squeeze_ws
 
 LENGTH_LOW = 50
@@ -62,36 +62,28 @@ def _paragraphs(body: Node) -> list[tuple[str, int]]:
     anchors each count), so its ratio can differ by a character or two
     per anchor boundary; this module's whole-paragraph squeeze matches
     how the paragraph length itself is computed."""
-    out: list[tuple[str, int]] = []
-    parts: list[str] = []
-    link_parts: list[str] = []
+    sink = _Paragraphs()
+    walk_paragraphs(sink, body)
+    sink.flush()
+    return sink.out
 
-    def flush() -> None:
-        nonlocal parts, link_parts
-        raw = "".join(parts)
+
+class _Paragraphs:
+    """:func:`walk_paragraphs` sink of :func:`_paragraphs`."""
+
+    __slots__ = ("out", "parts", "link_parts")
+
+    def __init__(self) -> None:
+        self.out: list[tuple[str, int]] = []
+        self.parts: list[str] = []
+        self.link_parts: list[str] = []
+
+    def flush(self) -> None:
+        raw = "".join(self.parts)
         if raw.strip():
-            out.append((raw, len(squeeze_ws("".join(link_parts)))))
-        parts = []
-        link_parts = []
-
-    def walk(node: Node, in_link: bool) -> None:
-        for child in node.children:
-            if child.is_text:
-                parts.append(child.text)
-                if in_link:
-                    link_parts.append(child.text)
-            elif child.tag in NON_TEXT_ELEMENTS:
-                continue
-            elif child.tag in BLOCK_ELEMENTS:
-                flush()
-                walk(child, in_link)
-                flush()
-            else:
-                walk(child, in_link or child.tag == "a")
-
-    walk(body, False)
-    flush()
-    return out
+            self.out.append((raw, len(squeeze_ws("".join(self.link_parts)))))
+        self.parts = []
+        self.link_parts = []
 
 
 def _context_free_class(text: str, link_chars: int) -> str:

@@ -44,7 +44,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..dom import BLOCK_ELEMENTS, body_or_root, parse_html
+from ..dom import (
+    BLOCK_ELEMENTS,
+    body_and_ancestors,
+    body_or_root,
+    iter_elements,
+    parse_html,
+)
 from ..encoding import decode_html, maybe_gunzip
 
 # CleanEval <text ...> wrapper strip (reference dataset_readers.py:146).
@@ -77,14 +83,14 @@ def _annotated_truth(content: str, is_content) -> str:
     ``is_content``; block-level parents prefix a newline (reference
     dataset_readers.py:283-298 `_extract_with_css_selector` semantics,
     shared by the L3S-GN1 and GoogleTrends2017 readers)."""
-    body = body_or_root(parse_html(content))
+    body, ancestors = body_and_ancestors(parse_html(content))
     parts: list[str] = []
-    for node in body.iter():
-        if node.is_text or not is_content(node):
+    for node, parent, _ in iter_elements(body, ancestors):
+        if not is_content(node):
             continue
         if len(node.children) != 1 or not node.children[0].is_text:
             continue  # leaf elements only (avoid double-counting parents)
-        if node.parent is not None and node.parent.tag in BLOCK_ELEMENTS:
+        if parent is not None and parent.tag in BLOCK_ELEMENTS:
             parts.append("\n")
         parts.append(node.children[0].text.strip() + " ")
     return "".join(parts).strip()
