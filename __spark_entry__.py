@@ -1668,7 +1668,7 @@ def q_convert_raw_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_neural_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E15: a TRAINED frozen block-classifier MLP (seeded numpy Adam,
     tools/train_neural.py — beats the density rule on the held-out
-    doc_id%7==5 split), broadcast once and materialized once per worker,
+    doc_id%7==5 split), built once per worker from the frozen weights,
     extracts main text inside mapInPandas (the BoilerNet shape,
     reference extractors.py:146-153 + boilernet/net/train.py).  The
     learned model agrees with gold on every template block with >13

@@ -881,6 +881,30 @@ def test_decontamination_matches_duckdb_and_plan(spark, docs):
     assert len(gram_exchanges) <= 1, gram_exchanges
 
 
+def test_decontaminate_retains_no_blocks(spark):
+    """Repeated decontaminate calls leave no persisted or checkpointed
+    block behind in the session's block manager."""
+    from web_content_extraction_benchmark_spark.operators.dedup import (
+        decontaminate,
+    )
+
+    def stored() -> set[int]:
+        return {i.id() for i in
+                spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    corpus = spark.createDataFrame(
+        [(i, f"w{i} x{i % 3} alpha beta gamma delta y{i}") for i in range(40)],
+        "doc_id long, text string",
+    )
+    bench = spark.createDataFrame(
+        [("x1 alpha beta",), ("nothing to see here",)], "text string"
+    )
+    before = stored()
+    for _ in range(3):
+        assert decontaminate(corpus, bench, k=3).count() == 27
+        assert stored() <= before
+
+
 def test_ivf_tune_n_probe_picks_smallest_meeting_target(spark, sf_dir):
     """ivf_tune_n_probe: the measured curve is non-decreasing in
     n_probe, the returned n_probe is the FIRST grid value meeting

@@ -450,3 +450,27 @@ def test_word_grams_never_split_inside_a_lambda(spark, tmp_path):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "lambdafunction(" in plan, name
         assert _lambdas_splitting(plan) == [], name
+
+
+def test_extraction_plans_run_one_arrow_kernel(spark):
+    """Every per-page extraction plan runs the one extraction kernel: a
+    single MapInArrow, and no pandas page loop beside it."""
+    from web_content_extraction_benchmark_spark.plans.pipeline import (
+        ensemble_extract,
+        extract_mixed,
+    )
+
+    # a plain scan: synthesize_pages builds its pages in a kernel of its own
+    pages = spark.createDataFrame(
+        [("u", b"<p>x</p>", "text/html")],
+        "url string, html binary, content_type string",
+    )
+    for df in (
+        extract_answers(pages, ["main_content", "plain"]),
+        extract_mixed(pages),
+        ensemble_extract(pages, ["main_content", "plain", "readability"]),
+    ):
+        tree = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted").split("\n\n")[0]
+        assert tree.count("MapInArrow") == 1, tree
+        assert "MapInPandas" not in tree, tree

@@ -209,6 +209,54 @@ def test_ensemble_fused_equals_join_plan(spark, pages):
         assert fused == joined
 
 
+def test_mixed_edge_rows(spark):
+    """extract_mixed's routing and error rows, pinned: a null body, a
+    %PDF- magic past the sniffed first KB (stays html), junk labeled
+    application/pdf, a nesting bomb, BOM'd text/plain (content types
+    match case-blind) and an image.  extract_answers never routes: the
+    page whose first KB holds %PDF- is still extracted as HTML."""
+    from web_content_extraction_benchmark_spark.plans.pipeline import (
+        MIXED_SCHEMA,
+        extract_mixed,
+    )
+
+    late = b"<html><body><p>" + b"alpha beta gamma " * 100 + b"%PDF-1.4 tail"
+    mislabeled = b"<html><body><p>%PDF-1.7 starts every pdf file</p></body></html>"
+    crawl = spark.createDataFrame(
+        [
+            ("u/null", None, "text/html"),
+            ("u/late-magic", late + b"</p></body></html>", "text/html"),
+            ("u/pdf-junk", b"this is not a pdf at all", "application/pdf"),
+            ("u/bomb", b"<div>" * 200_000, "text/html"),
+            ("u/bom-text", b"\xef\xbb\xbfhello plain world\n",
+             "Text/Plain; charset=utf-8"),
+            ("u/png", b"\x89PNG\r\n\x1a\n" + b"\x00" * 32, "image/png"),
+            ("u/mislabeled", mislabeled, "text/html"),
+        ],
+        "url string, html binary, content_type string",
+    )
+    out = extract_mixed(crawl)
+    assert out.schema == MIXED_SCHEMA
+    assert {r.url: tuple(r)[1:] for r in out.collect()} == {
+        "u/null": ("html", "", None),
+        "u/late-magic": ("html", "alpha beta gamma " * 100 + "%PDF-1.4 tail",
+                         None),
+        "u/pdf-junk": ("pdf", None, "PdfError: missing %PDF header"),
+        "u/bomb": ("html", None,
+                   "RecursionError: maximum recursion depth exceeded"),
+        "u/bom-text": ("text", "hello plain world\n", None),
+        "u/png": ("binary", None, None),
+        "u/mislabeled": ("pdf", None, "PdfError: no /Catalog object found"),
+    }
+    as_html = extract_answers(
+        crawl.filter(F.col("url") == "u/mislabeled"), ["main_content"]
+    ).collect()
+    assert [tuple(r) for r in as_html] == [
+        ("u/mislabeled", "main_content", "%PDF-1.7 starts every pdf file",
+         1, False)
+    ]
+
+
 def test_empty_and_gzip_edge_rows(spark, pages):
     answers = extract_answers(pages, ["main_content"])
     empty = answers.join(

@@ -346,7 +346,8 @@ def test_mixed_crawl_routes_html_and_pdf(spark, tmp_path):
     # no Exchange, no Union re-running the container walk per branch
     assert "Exchange" not in plan and "Union" not in plan
     tree = plan.split("\n\n")[0]  # the operator tree section
-    assert tree.count("MapInPandas") == 2  # ingest + route kernels only
+    assert tree.count("MapInPandas") == 1  # the ingest kernel
+    assert tree.count("MapInArrow") == 1  # the extraction kernel
     rows = {r["url"]: r for r in out.collect()}
     assert len(rows) == 8
     for url, (kind, text) in want.items():

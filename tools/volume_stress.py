@@ -25,8 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from web_content_extraction_benchmark_spark.plans.pipeline import (
-    _COMBINED_SCHEMA,
-    _run_extractors,
+    _extract_combined,
 )
 from web_content_extraction_benchmark_spark.session import get_spark
 from web_content_extraction_benchmark_spark.sources.pages import (
@@ -58,10 +57,7 @@ def main() -> None:
     # lineage row per (partition, model) (kind=1) in the same stream; a
     # single two-row aggregate consumes both, so nothing is ever
     # materialized and the skew profile costs no extra pass.
-    combined = pages.select("url", "html").mapInArrow(
-        _run_extractors(["main_content"], snapshot_id=0),
-        schema=_COMBINED_SCHEMA,
-    )
+    combined = _extract_combined(pages, ["main_content"], 0, F.lit("html"))
     loadavg_at_start = float(open("/proc/loadavg").read().split()[0])
     started = time.perf_counter()
     rows = {
@@ -69,7 +65,7 @@ def main() -> None:
         for r in combined.groupBy("kind").agg(
             F.count("*").alias("rows"),
             F.sum(F.length("plaintext")).alias("chars"),
-            F.sum(F.col("error").cast("long")).alias("errors"),
+            F.count("error").alias("errors"),
             F.max("wall_ms").alias("wall_ms_max"),
             F.expr("median(wall_ms)").alias("wall_ms_median"),
             F.expr("percentile(wall_ms, 0.9)").alias("wall_ms_p90"),

@@ -863,29 +863,30 @@ def contaminated_ids(docs: DataFrame, benchmark: DataFrame,
     # benchmark side: eval slices routinely arrive behind a limit()
     # (collapsed to ONE partition — CLAUDE.md gotcha), which would run
     # the whole gram build serially; the set is small by contract, so a
-    # round-robin repartition is free insurance.  Distinct gram strings
-    # are lazily checkpointed — used twice (window keys + exact
-    # verify), computed once.
-    bench_grams = (
+    # round-robin repartition is free insurance.  The distinct gram
+    # strings and their window keys are collected in ONE job: the keys
+    # feed the probe, the grams the exact verify — nothing computed
+    # twice and nothing persisted past the call (the broadcast holds the
+    # gram strings on the driver anyway).
+    bt = F.split(F.col("gram"), " ")
+    bench = (
         with_word_kgrams(
             benchmark.repartition(spark.sparkContext.defaultParallelism),
             text_col, k, "gram", distinct=True, explode=True,
         )
         .select("gram")
         .distinct()
-        .localCheckpoint(eager=False)
+        .select(
+            "gram",
+            F.xxhash64(*[F.xxhash64(F.get(bt, j)) for j in range(k)])
+            .alias("_h"),
+        )
+        .toPandas()
     )
-    bt = F.split(F.col("gram"), " ")
-    bench_keys = bench_grams.select(
-        F.xxhash64(
-            *[F.xxhash64(F.get(bt, j)) for j in range(k)]
-        ).alias("_h")
-    ).distinct()
     # bounded by the documented benchmark-set contract (8 B per
     # distinct gram; ~10^5 typical, ~80 MB at the 10^7 ceiling)
-    keys_arr = np.sort(np.array(
-        [r["_h"] for r in bench_keys.collect()], dtype=np.int64
-    ))
+    keys_arr = np.unique(bench["_h"].to_numpy(dtype=np.int64))
+    bench_grams = spark.createDataFrame(bench[["gram"]], "gram string")
     bc = spark.sparkContext.broadcast(keys_arr)
 
     from pyspark.sql.functions import pandas_udf

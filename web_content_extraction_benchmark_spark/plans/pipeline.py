@@ -8,6 +8,13 @@ Replaces the reference's (model x dataset) spawn-Pool fan-out
     --> answers (+ lineage sidecar) --> join truth --> score UDFs
     --> groupBy aggregations
 
+One page loop: `_run_extractors` is the only per-page extraction kernel.
+`extract_answers`, `ensemble_extract` (a `Vote` over the answers the
+kernel already holds for a page) and `extract_mixed` (each page routed
+by `content_kind`, the one place routing is decided) are plans over it;
+the only other Python loop here is `ensemble_answers`' vote over
+preloaded answer maps.
+
 Scale notes (100 TB / 1000 executors):
 - one decode per page feeds *all* extractors (the reference re-reads and
   re-decodes per model job);
@@ -23,36 +30,20 @@ from __future__ import annotations
 
 import gc
 import time
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import EXTRACTOR_VERSION
 from ..dom import parse_html
 from ..encoding import decode_html
-from ..extractors import EXTRACTORS, TREE_EXTRACTORS
+from ..extractors import EXTRACTORS, TREE_EXTRACTORS, get_extractor
 from ..extractors.density import main_content_with_blocks_from_tree
 from ..extractors.ensemble import majority_vote, normalize_answer
 from ..functions.udfs import rouge_lsum_udf, token_levenshtein_udf
-
-
-def _extract_one(model: str, html: str, root) -> tuple[str, int]:
-    """(plaintext, block_count) for one model on one page, reusing a
-    pre-parsed tree where the extractor is DOM-based (the page is parsed
-    once per page, not once per model — parse dominates extraction)."""
-    if model == "main_content":
-        src = root if root is not None else parse_html(html)
-        text, spans = main_content_with_blocks_from_tree(src)
-        return text, len(spans)
-    tree_fn = TREE_EXTRACTORS.get(model)
-    if tree_fn is not None and root is not None:
-        text = tree_fn(root) or ""
-    else:
-        text = EXTRACTORS[model](html) or ""
-    return text, (text.count("\n") + 1 if text else 0)
 
 
 def _freeze_worker_heap() -> None:
@@ -92,12 +83,31 @@ LINEAGE_SCHEMA = T.StructType(
     ]
 )
 
-_COMBINED_SCHEMA = T.StructType(
-    [T.StructField("kind", T.IntegerType(), False)]
-    + ANSWERS_SCHEMA.fields
-    + [T.StructField(f.name, f.dataType, True) for f in LINEAGE_SCHEMA.fields
-       if f.name not in {"model", "block_count"}]
-)
+
+# the lineage columns of the kernel's output, null on answer rows
+_LINEAGE_COLUMNS = [
+    T.StructField(f.name, f.dataType, True) for f in LINEAGE_SCHEMA.fields
+    if f.name not in {"model", "block_count"}
+]
+
+
+def _combined_schema(url_nullable: bool) -> T.StructType:
+    """The extraction kernel's output: ``kind`` 0 rows are answers (one
+    per page and model; ``error`` is the failure's
+    ``"<Exception>: <message>"`` and then ``plaintext`` is null), ``kind``
+    1 rows are per-partition lineage, one per model."""
+    return T.StructType(
+        [
+            T.StructField("kind", T.IntegerType(), False),
+            T.StructField("url", T.StringType(), url_nullable),
+            T.StructField("model", T.StringType(), False),
+            T.StructField("content_kind", T.StringType(), False),
+            T.StructField("plaintext", T.StringType(), True),
+            T.StructField("block_count", T.IntegerType(), False),
+            T.StructField("error", T.StringType(), True),
+        ]
+        + _LINEAGE_COLUMNS
+    )
 
 
 def repartition_salted(pages: DataFrame, num_partitions: int,
@@ -109,16 +119,143 @@ def repartition_salted(pages: DataFrame, num_partitions: int,
     )
 
 
-def _run_extractors(models: list[str], snapshot_id: int):
-    """The raw-Arrow extraction kernel behind `extract_answers`: skips the
-    pandas DataFrame layer (measured ~15% faster, and closer to the
-    machine's multiprocessing ceiling, than a pandas kernel).  Emits
-    ``_COMBINED_SCHEMA`` batches: one ``kind=0`` answer row per (page,
-    model), its lineage columns null, then, at the end of the partition,
-    one ``kind=1`` lineage row per model (north_rule)."""
-    names = list(dict.fromkeys(models))
-    for model in names:  # fail at plan-build time, not inside tasks
-        EXTRACTORS[model]
+class Vote(NamedTuple):
+    """An ensemble as one more model of `extract_answers`: the
+    reference's n-gram majority vote (`extractors.ensemble.majority_vote`)
+    over the ``members``' answers on the same page, with the page's
+    ``plain`` render as the token universe.  The vote threshold is
+    ``int(len(members) * vote_fraction)``."""
+
+    name: str
+    members: tuple[str, ...]
+    weights: dict[str, int] | None = None
+    vote_fraction: float = 0.66
+
+
+def _model_name(model: str | Vote) -> str:
+    return model.name if isinstance(model, Vote) else model
+
+
+def _error_message(e: Exception) -> str:
+    return f"{type(e).__name__}: {e}"
+
+
+class _Page:
+    """One page inside the kernel and the answers computed on it so far,
+    so each model runs at most once per page whether its answer is
+    emitted or only voted on.  An HTML page holds its decoded markup and
+    its tree (or the message of the exception decoding or parsing it
+    raised); any other page holds the one answer every model gives it
+    (`_other_answer`)."""
+
+    __slots__ = ("html", "root", "error", "other", "answers")
+
+    def __init__(self, blob: bytes | None, content_kind: str,
+                 needs_tree: bool):
+        self.html = self.root = self.error = self.other = None
+        self.answers: dict[str, tuple[str | None, int, str | None]] = {}
+        if content_kind != "html":
+            self.other = _other_answer(content_kind, blob)
+            return
+        try:
+            self.html = decode_html(blob)
+            if needs_tree:
+                self.root = parse_html(self.html)
+        except Exception as e:  # noqa: BLE001 — per-page isolation
+            self.error = _error_message(e)
+
+
+def _answer(page: _Page, model: str | Vote
+            ) -> tuple[str | None, int, str | None]:
+    """(plaintext, block_count, error) of one model on one page,
+    memoized on the page."""
+    name = _model_name(model)
+    done = page.answers.get(name)
+    if done is None:
+        try:
+            done = _compute(page, model)
+        except Exception as e:  # noqa: BLE001 — per-model isolation
+            done = None, 0, _error_message(e)
+        page.answers[name] = done
+    return done
+
+
+def _compute(page: _Page, model: str | Vote
+             ) -> tuple[str | None, int, str | None]:
+    if page.other is not None:
+        return page.other
+    if isinstance(model, Vote):
+        full_text, _, error = _answer(page, "plain")
+        if error is not None:
+            return None, 0, error
+        text = majority_vote(
+            full_text,
+            # a failed member votes with an empty answer
+            {m: normalize_answer(_answer(page, m)[0] or "")
+             for m in model.members},
+            weights=model.weights,
+            vote_threshold=int(len(model.members) * model.vote_fraction),
+        )
+        return text, 0, None
+    tree_fn = TREE_EXTRACTORS.get(model)
+    src = page.root if tree_fn is not None else page.html
+    if src is None:  # the page failed to decode or parse: one message
+        return None, 0, page.error
+    if model == "main_content":
+        text, spans = main_content_with_blocks_from_tree(src)
+        return text, len(spans), None
+    text = (tree_fn(src) if tree_fn is not None
+            else EXTRACTORS[model](src)) or ""
+    return text, (text.count("\n") + 1 if text else 0), None
+
+
+def _other_answer(content_kind: str, blob: bytes | None
+                  ) -> tuple[str | None, int, str | None]:
+    """The one answer of a non-HTML page, shared by every model: a PDF
+    keeps its LINE structure (`pdf_structured_text`) as the HTML
+    extractors keep paragraph newlines; ``text`` passes through the same
+    byte decoder (gzip/BOM/charset) unparsed; ``binary`` is a counted
+    skip (null plaintext, no error)."""
+    if content_kind == "binary":
+        return None, 0, None
+    raw = blob if blob is not None else b""
+    try:
+        if content_kind == "pdf":
+            from ..extractors.pdf_text import pdf_structured_text
+
+            text = pdf_structured_text(raw)
+        else:
+            text = decode_html(raw)
+    except Exception as e:  # noqa: BLE001 — per-page isolation
+        return None, 0, _error_message(e)
+    return text, (text.count("\n") + 1 if text else 0), None
+
+
+def _run_extractors(models: list[str | Vote], snapshot_id: int,
+                    out_schema: T.StructType):
+    """The one per-page extraction kernel, a raw-Arrow ``mapInArrow``
+    over ``(url, html, content_kind)`` batches (it skips the pandas
+    DataFrame layer, measured ~15% faster than a pandas kernel).  Each
+    page is decoded and parsed once and each model runs on it at most
+    once; ``content_kind`` (see `content_kind`) routes it: ``html`` runs
+    the models, ``pdf``, ``text`` and ``binary`` give every model the
+    page's one `_other_answer`.  Emits ``out_schema`` (a
+    `_combined_schema`) batches: one
+    ``kind=0`` answer row per (page, model), its lineage columns null,
+    then, at the end of the partition, one ``kind=1`` lineage row per
+    model (north_rule)."""
+    specs: dict[str, str | Vote] = {}
+    for model in models:
+        specs.setdefault(_model_name(model), model)
+    members = set()
+    for model in specs.values():
+        members.update((*model.members, "plain")
+                       if isinstance(model, Vote) else (model,))
+    for member in members:  # fail at plan-build time, not inside tasks
+        get_extractor(member)
+    names = list(specs)
+    specs_list = list(specs.values())
+    needs_tree = any(m in TREE_EXTRACTORS for m in members)
 
     def run(batches):
         import pyarrow as pa
@@ -127,46 +264,40 @@ def _run_extractors(models: list[str], snapshot_id: int):
 
         _freeze_worker_heap()
 
-        schema = to_arrow_schema(_COMBINED_SCHEMA)
-        lineage_types = schema.types[1 + len(ANSWERS_SCHEMA.fields):]
+        schema = to_arrow_schema(out_schema)
+        lineage_types = schema.types[-len(_LINEAGE_COLUMNS):]
         partition_id = TaskContext.get().partitionId()
-        needs_tree = any(m in TREE_EXTRACTORS for m in names)
+        k = len(names)
         docs_in = bytes_in = 0
-        docs_out = [0] * len(names)
-        errors = [0] * len(names)
-        block_sums = [0] * len(names)
-        wall_ns = [0] * len(names)
+        docs_out = [0] * k
+        errors = [0] * k
+        block_sums = [0] * k
+        wall_ns = [0] * k
         for batch in batches:
             urls = batch.column("url").to_pylist()
             blobs = batch.column("html").to_pylist()
-            out_url: list[str] = []
+            kinds = batch.column("content_kind").to_pylist()
+            out_url: list[str | None] = []
             out_model: list[str] = []
-            out_text: list[str] = []
+            out_kind: list[str] = []
+            out_text: list[str | None] = []
             out_blocks: list[int] = []
-            out_error: list[bool] = []
-            for url, blob in zip(urls, blobs):
+            out_error: list[str | None] = []
+            for url, blob, content_kind in zip(urls, blobs, kinds):
                 bytes_in += len(blob) if blob is not None else 0
-                html = decode_html(blob)
-                try:
-                    root = parse_html(html) if needs_tree else None
-                except Exception:
-                    root = None
-                for i, model in enumerate(names):
+                page = _Page(blob, content_kind, needs_tree)
+                for i, model in enumerate(specs_list):
                     started = time.perf_counter_ns()
-                    try:
-                        text, blocks = _extract_one(model, html, root)
-                        error = False
-                    except Exception:
-                        text = ""
-                        blocks = 0
-                        error = True
-                        errors[i] += 1
+                    text, blocks, error = _answer(page, model)
                     wall_ns[i] += time.perf_counter_ns() - started
+                    if error is not None:
+                        errors[i] += 1
                     if text:
                         docs_out[i] += 1
                     block_sums[i] += blocks
                     out_url.append(url)
-                    out_model.append(model)
+                    out_model.append(names[i])
+                    out_kind.append(content_kind)
                     out_text.append(text)
                     out_blocks.append(blocks)
                     out_error.append(error)
@@ -177,22 +308,23 @@ def _run_extractors(models: list[str], snapshot_id: int):
                     pa.repeat(pa.scalar(0, pa.int32()), n),
                     pa.array(out_url, type=pa.string()),
                     pa.array(out_model, type=pa.string()),
+                    pa.array(out_kind, type=pa.string()),
                     pa.array(out_text, type=pa.string()),
                     pa.array(out_blocks, type=pa.int32()),
-                    pa.array(out_error, type=pa.bool_()),
+                    pa.array(out_error, type=pa.string()),
                 ]
                 + [pa.nulls(n, t) for t in lineage_types],
                 schema=schema,
             )
-        k = len(names)
         yield pa.RecordBatch.from_pydict(
             {
                 "kind": [1] * k,
                 "url": [""] * k,
                 "model": names,
-                "plaintext": [""] * k,
+                "content_kind": [""] * k,
+                "plaintext": [None] * k,
                 "block_count": block_sums,
-                "error": [False] * k,
+                "error": [None] * k,
                 "snapshot_id": [snapshot_id] * k,
                 "partition_id": [partition_id] * k,
                 "extractor_version": [EXTRACTOR_VERSION] * k,
@@ -208,18 +340,33 @@ def _run_extractors(models: list[str], snapshot_id: int):
     return run
 
 
+def _extract_combined(pages: DataFrame, models: list[str | Vote],
+                      snapshot_id: int, kinds: Column) -> DataFrame:
+    """``pages`` through `_run_extractors`, each page routed by the
+    ``kinds`` column: the combined answer + lineage stream."""
+    schema = _combined_schema(pages.schema["url"].nullable)
+    return pages.select(
+        "url", "html", kinds.alias("content_kind")
+    ).mapInArrow(_run_extractors(models, snapshot_id, schema), schema=schema)
+
+
 def extract_answers(
     pages: DataFrame,
-    models: list[str] | None = None,
+    models: list[str | Vote] | None = None,
     snapshot_id: int = 0,
     with_lineage: bool = False,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """pages -> answers table (url, model, plaintext, block_count, error).
 
-    Decodes each page once and runs every requested extractor on it
-    inside one raw-Arrow kernel (`_run_extractors`), which always emits
+    Decodes each page once and runs every requested model on it inside
+    the one raw-Arrow kernel (`_run_extractors`), which always emits
     answer rows plus per-partition lineage rows in one stream; both
     modes run that same kernel and split its output with a filter.
+    Every page is read as HTML (a ``%PDF-`` in its first KB does not
+    route it; that is `extract_mixed`'s job).  A `Vote` among
+    ``models`` is an ensemble over the same page's answers.  A failed
+    (page, model) reads ``plaintext=''``, ``error=True``.
+
     Without lineage the answers are the ``kind=0`` rows, nothing is
     persisted.  With ``with_lineage=True`` returns ``(answers,
     lineage)``; both sides are filters over the combined frame, which is
@@ -230,14 +377,16 @@ def extract_answers(
     collected; callers wanting explicit control can ``unpersist`` via
     either frame's lineage.
     """
-    models = models or list(EXTRACTORS)
-    combined = pages.select("url", "html").mapInArrow(
-        _run_extractors(models, snapshot_id), schema=_COMBINED_SCHEMA
+    combined = _extract_combined(
+        pages, models or list(EXTRACTORS), snapshot_id, F.lit("html")
     )
     if with_lineage:
         combined = combined.persist()
     answers = combined.filter(F.col("kind") == 0).select(
-        *ANSWERS_SCHEMA.fieldNames()
+        "url", "model",
+        F.coalesce("plaintext", F.lit("")).alias("plaintext"),
+        "block_count",
+        F.col("error").isNotNull().alias("error"),
     )
     if not with_lineage:
         return answers
@@ -297,55 +446,13 @@ def ensemble_extract(
     """Fused extract+vote: when the ensemble inputs are this engine's own
     extractors (not preloaded third-party answers — that is the S11 /
     ``ensemble_answers`` case), the collect_list + join plan collapses
-    into ONE Arrow pass per page: decode once, run every member extractor
-    and the full-text render, vote — zero shuffles, embarrassingly
-    parallel.  Output is equal to ``ensemble_answers`` over
-    ``extract_answers(pages, input_models)`` (pinned by pytest and the
-    driver oracle)."""
-    vote_threshold = int(len(input_models) * vote_fraction)
-    for model in input_models:  # fail at plan-build time, not inside tasks
-        EXTRACTORS[model]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..extractors.baseline import plain_from_tree
-
-        for pdf in batches:
-            texts = []
-            for blob in pdf["html"]:
-                try:
-                    html = decode_html(blob)
-                    root = parse_html(html)
-                    full_text = plain_from_tree(root)
-                    answers = {}
-                    for model in input_models:
-                        try:
-                            # the "plain" member IS the full-text render
-                            # just computed (same pure fn, same tree) —
-                            # don't walk the tree twice (r9)
-                            text = (
-                                full_text if model == "plain"
-                                else _extract_one(model, html, root)[0]
-                            )
-                            answers[model] = normalize_answer(text)
-                        except Exception:
-                            answers[model] = ""
-                    texts.append(
-                        majority_vote(
-                            full_text, answers,
-                            weights=weights, vote_threshold=vote_threshold,
-                        )
-                    )
-                except Exception:
-                    texts.append("")
-            yield pd.DataFrame({"url": pdf["url"], "plaintext": texts})
-
-    out_schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("plaintext", T.StringType(), False),
-        ]
-    )
-    return pages.select("url", "html").mapInPandas(run, schema=out_schema)
+    into the extraction kernel's one pass: the vote is one more model
+    (`Vote`) over the answers the kernel already holds for the page —
+    zero shuffles, embarrassingly parallel.  Output is equal to
+    ``ensemble_answers`` over ``extract_answers(pages, input_models)``
+    (pinned by pytest and the driver oracle)."""
+    vote = Vote("ensemble", tuple(input_models), weights, vote_fraction)
+    return extract_answers(pages, [vote]).select("url", "plaintext")
 
 
 def ensemble_answers(
@@ -560,77 +667,49 @@ _BINARY_CTYPE_PREFIXES = (
 )
 
 
+def content_kind(html: Column, content_type: Column) -> Column:
+    """The routing of a crawled page, the only place it is decided:
+    ``pdf`` when the HTTP content type names ``application/pdf`` or the
+    ``%PDF-`` magic sits anywhere in the first 1024 bytes (the PDF spec
+    allows that much junk before the header; `PdfDocument.from_bytes`
+    trims the same prefix), so mislabeled payloads still route; ``text``
+    for ``text/plain``; ``binary`` for `_BINARY_CTYPE_PREFIXES`;
+    ``html`` otherwise (a null content type included)."""
+    ct = F.lower(F.coalesce(content_type, F.lit("")))
+    # a null html makes the sniff null, which F.when reads as false
+    magic = F.contains(F.substring(html, 1, 1024), F.lit(bytearray(b"%PDF-")))
+    binary = F.lit(False)
+    for prefix in _BINARY_CTYPE_PREFIXES:
+        binary = binary | ct.startswith(prefix)
+    return (
+        F.when(ct.contains("application/pdf") | magic, "pdf")
+        .when(ct.startswith("text/plain"), "text")
+        .when(binary, "binary")
+        .otherwise("html")
+    )
+
+
 def extract_mixed(pages: DataFrame,
                   html_model: str = "main_content") -> DataFrame:
-    """Mixed-corpus dispatcher (r7): route each page to the right
-    parser — HTML through the extraction kernel's pure path, PDF
-    through the from-scratch PDF text/layout parser, ``text/plain``
-    straight through the byte decoder (kind="text"), and explicit
-    binary types (image/audio/video/...) to a counted skip
-    (kind="binary", plaintext null, error null) — in ONE mapInPandas
-    pass, emitting (url, kind, plaintext, error).
-
-    A real crawl (e.g. straight off ``sources/warc.read_warc``) is not
-    all HTML; the router prefers the HTTP ``content_type`` column when
-    present and falls back to the %PDF- magic so mislabeled payloads
-    still route correctly.  The magic is sniffed anywhere in the first
-    1024 bytes (the PDF spec allows that much junk before the header;
-    `PdfDocument.from_bytes` trims the same prefix).  PDF text keeps
-    its LINE structure (`pdf_structured_text`) just as the HTML
-    extractors keep paragraph newlines — downstream quality/repetition
-    stats are paragraph-sensitive.  Single-pass matters at scale: a
-    filter-split formulation re-evaluates the upstream lineage (the
-    whole WARC ingest kernel) once per branch — 2x container work;
-    here the scan and any upstream Python stage run exactly once and
-    the plan stays shuffle-free."""
-    from ..extractors.pdf_text import pdf_structured_text
-
-    if html_model not in EXTRACTORS:
-        raise ValueError(f"unknown extractor {html_model!r}")
-    needs_tree = html_model in TREE_EXTRACTORS
-    has_ctype = "content_type" in pages.columns
-    cols = ["url", "html"] + (["content_type"] if has_ctype else [])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _freeze_worker_heap()
-        for pdf in batches:
-            out = {k: [] for k in ("url", "kind", "plaintext", "error")}
-            ctypes = (pdf["content_type"] if has_ctype
-                      else [None] * len(pdf))
-            for url, blob, ctype in zip(pdf["url"], pdf["html"], ctypes):
-                raw = bytes(blob) if blob is not None else b""
-                ct = ctype.lower() if isinstance(ctype, str) else ""
-                if "application/pdf" in ct or b"%PDF-" in raw[:1024]:
-                    kind = "pdf"
-                elif ct.startswith("text/plain"):
-                    kind = "text"
-                elif ct.startswith(_BINARY_CTYPE_PREFIXES):
-                    kind = "binary"
-                else:
-                    kind = "html"
-                out["url"].append(url)
-                out["kind"].append(kind)
-                try:
-                    if kind == "pdf":
-                        text = pdf_structured_text(raw)
-                    elif kind == "text":
-                        # same byte decoder as the HTML path (gzip/BOM/
-                        # charset), no parsing — plain text passes
-                        # through verbatim
-                        text = decode_html(raw)
-                    elif kind == "binary":
-                        text = None
-                    else:
-                        # the exact kernel path of extract_answers, so
-                        # mixed html text is byte-identical to it
-                        html = decode_html(raw)
-                        root = parse_html(html) if needs_tree else None
-                        text, _ = _extract_one(html_model, html, root)
-                    out["plaintext"].append(text)
-                    out["error"].append(None)
-                except Exception as e:  # noqa: BLE001 — per-row isolation
-                    out["plaintext"].append(None)
-                    out["error"].append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(out)
-
-    return pages.select(*cols).mapInPandas(run, schema=MIXED_SCHEMA)
+    """Mixed-corpus dispatcher (r7): (url, kind, plaintext, error) for a
+    crawl that is not all HTML (e.g. straight off
+    ``sources/warc.read_warc``).  Each page is routed by `content_kind`
+    (without a ``content_type`` column only the magic sniff routes)
+    through the one extraction kernel: ``html`` through ``html_model``,
+    ``pdf`` through the from-scratch PDF parser with LINE structure kept
+    (downstream quality/repetition stats are paragraph-sensitive),
+    ``text`` straight through the byte decoder, ``binary`` to a counted
+    skip (plaintext and error null).  A failed page reads plaintext null
+    and error ``"<Exception>: <message>"``.  Single-pass matters at
+    scale: a filter-split formulation re-evaluates the upstream lineage
+    (the whole WARC ingest kernel) once per branch; here the scan and
+    any upstream Python stage run exactly once and the plan stays
+    shuffle-free."""
+    ctype = (F.col("content_type") if "content_type" in pages.columns
+             else F.lit(None).cast("string"))
+    combined = _extract_combined(
+        pages, [html_model], 0, content_kind(F.col("html"), ctype)
+    )
+    return combined.filter(F.col("kind") == 0).select(
+        "url", F.col("content_kind").alias("kind"), "plaintext", "error"
+    )
