@@ -1669,7 +1669,8 @@ def q_neural_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E15: a TRAINED frozen block-classifier MLP (seeded numpy Adam,
     tools/train_neural.py — beats the density rule on the held-out
     doc_id%7==5 split), built once per worker from the frozen weights,
-    extracts main text inside mapInPandas (the BoilerNet shape,
+    extracts main text in a batched mapInPandas kernel, one leaf
+    matmul per Arrow batch of pages (the BoilerNet shape,
     reference extractors.py:146-153 + boilernet/net/train.py).  The
     learned model agrees with gold on every template block with >13
     logit margin (pinned corpus-wide in tests/test_neural_stub.py), so
@@ -2069,7 +2070,8 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal decode: REAL stdlib BMP (24-bit header+pixel parse),
     WAV (RIFF walk + PCM16), and AVI (RIFF hdrl/movi walk + DIB frame
-    decode, r5) kernels run inside mapInPandas over the synthetic
+    decode, r5) kernels run per row on the record kernel
+    (functions.records.map_records) over the synthetic
     payload table; the DuckDB oracle mirrors the decoded channel means
     / RMS / zero-crossing rate / frame-motion deltas with closed-form
     integer arithmetic (multimodal.synthetic_media_params is the shared

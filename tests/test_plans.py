@@ -474,3 +474,57 @@ def test_extraction_plans_run_one_arrow_kernel(spark):
             df._jdf.queryExecution(), "formatted").split("\n\n")[0]
         assert tree.count("MapInArrow") == 1, tree
         assert "MapInPandas" not in tree, tree
+
+
+def test_record_kernels_plan_arrow_not_pandas(spark, sf_dir, tmp_path):
+    """Every per-record Python map runs on the one record kernel
+    (`functions.records.map_records`): one MapInArrow per kernel and no
+    MapInPandas anywhere in the plan."""
+    import os
+
+    from web_content_extraction_benchmark_spark.extractors.pdf_text import (
+        extract_pdf,
+    )
+    from web_content_extraction_benchmark_spark.operators.lm import lm_score
+    from web_content_extraction_benchmark_spark.operators.multimodal import (
+        extract_media_features,
+    )
+    from web_content_extraction_benchmark_spark.plans.pipeline import (
+        ensemble_answers,
+    )
+    from web_content_extraction_benchmark_spark.sources import warc as W
+    from web_content_extraction_benchmark_spark.sources.raw_datasets import (
+        convert_dataset,
+    )
+
+    W.write_warc_gz(str(tmp_path / "a.warc.gz"), [])
+    raw = os.path.join(os.path.dirname(__file__), "fixtures", "raw")
+    answers = spark.createDataFrame(
+        [("u", "plain", "x y", 0, False)],
+        "url string, model string, plaintext string, block_count int, "
+        "error boolean",
+    )
+    plans = {
+        "read_warc": W.read_warc(spark, str(tmp_path)),
+        "read_wet": W.read_wet(spark, str(tmp_path)),
+        "extract_pdf": extract_pdf(spark.createDataFrame(
+            [("s", b"%PDF-")], "source string, content binary")),
+        "synthesize_pages": synthesize_pages(spark, sf_dir),
+        "extract_media_features": extract_media_features(
+            spark.createDataFrame(
+                [(1, "image", None)],
+                "media_id long, kind string, payload binary")),
+        "lm_score": lm_score(spark.createDataFrame(
+            [(1, "a b")], "doc_id long, text string")),
+        "ensemble_answers": ensemble_answers(answers, ["plain"]),
+    }
+    kernels = dict.fromkeys(plans, 1)
+    # one kernel per side of the page/truth join
+    plans["convert_dataset"] = convert_dataset(
+        spark, "cleaneval", os.path.join(raw, "cleaneval"))
+    kernels["convert_dataset"] = 2
+    for name, df in plans.items():
+        tree = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted").split("\n\n")[0]
+        assert tree.count("MapInArrow") == kernels[name], (name, tree)
+        assert "MapInPandas" not in tree, (name, tree)

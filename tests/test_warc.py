@@ -84,6 +84,34 @@ def test_dechunk_and_malformed_framing():
         W.parse_http_response(b"not http at all\r\n\r\nbody")
 
 
+@pytest.mark.parametrize("payload", [
+    b"HTTP/1.1 abc OK\r\nContent-Length: 2\r\n\r\nhi",
+    b"HTTP/1.1 200 OK\r\nContent-Length: zz\r\n\r\nhi",
+])
+def test_http_framing_faults_raise_warc_error(payload):
+    """A non-numeric status code or Content-Length is invalid HTTP
+    framing: a classified WarcError, not a bare int() ValueError."""
+    with pytest.raises(W.WarcError):
+        W.parse_http_response(payload)
+
+
+@pytest.mark.parametrize("date,want", [
+    ("2023-01-01T00:00:00Z", datetime(2023, 1, 1)),
+    ("2023-01-01T00:00:00.1Z", datetime(2023, 1, 1, 0, 0, 0, 100000)),
+    ("2023-01-01T00:00:00.123456Z", datetime(2023, 1, 1, 0, 0, 0, 123456)),
+    # Spark timestamps hold microseconds: digits past the sixth drop
+    ("2023-01-01T00:00:00.123456789Z", datetime(2023, 1, 1, 0, 0, 0, 123456)),
+    ("2023-01-01T00:00:00.Z", None),
+    ("2023-01-01T00:00:00.1234567890Z", None),
+    ("2023-01-01T00:00:00.12a4Z", None),
+    ("2023-01-01T00:00:00.123", None),
+    ("not a date", None),
+])
+def test_warc_date_fractional_seconds(date, want):
+    """WARC/1.1 allows 1-9 fractional second digits in WARC-Date."""
+    assert W._warc_ts({"warc-date": date}) == want
+
+
 def test_truncated_and_corrupt_input():
     rec = W._warc_record([("WARC-Type", "response")], b"x" * 100)
     with pytest.raises(W.WarcError):
@@ -346,8 +374,8 @@ def test_mixed_crawl_routes_html_and_pdf(spark, tmp_path):
     # no Exchange, no Union re-running the container walk per branch
     assert "Exchange" not in plan and "Union" not in plan
     tree = plan.split("\n\n")[0]  # the operator tree section
-    assert tree.count("MapInPandas") == 1  # the ingest kernel
-    assert tree.count("MapInArrow") == 1  # the extraction kernel
+    assert tree.count("MapInPandas") == 0
+    assert tree.count("MapInArrow") == 2  # the ingest + extraction kernels
     rows = {r["url"]: r for r in out.collect()}
     assert len(rows) == 8
     for url, (kind, text) in want.items():

@@ -49,8 +49,9 @@ Like every extractor in this repo (see ``extractors/baseline.py``),
 ``pdf_plaintext`` is a pure ``bytes -> str`` function used both as the
 single-threaded oracle in tests and inside the Arrow-batched Spark
 kernel (`extract_pdf`), so byte identity between the two sides holds
-by construction.  Scale shape: per-row pure function inside
-``mapInPandas`` — no shuffle, no driver state, linear in input bytes.
+by construction.  Scale shape: a per-row pure function on the record
+kernel (`functions.records.map_records`) — no shuffle, no driver state,
+linear in input bytes.
 """
 
 from __future__ import annotations
@@ -58,11 +59,11 @@ from __future__ import annotations
 import re
 import zlib
 from dataclasses import dataclass, field
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..functions.records import _error_message, map_records
 
 # TJ kerning threshold (thousandths of an em): adjustments at or below
 # this emit an inter-word space.  Typical space widths are ~250-300;
@@ -1422,45 +1423,22 @@ PDF_EXTRACT_SCHEMA = T.StructType(
 )
 
 
-def _pdf_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for source, payload in zip(pdf["source"], pdf["content"]):
-            try:
-                n_pages, blocks = pdf_parse(bytes(payload))
-                words = [w for b in blocks for ln in b.lines
-                         for w in ln.split()]
-                rows.append(
-                    {
-                        "source": source,
-                        "plaintext": " ".join(words),
-                        "n_pages": n_pages,
-                        "n_columns": max(
-                            (b.column for b in blocks), default=-1) + 1,
-                        "n_blocks": len(blocks),
-                        "n_lines": sum(len(b.lines) for b in blocks),
-                        "error": None,
-                    }
-                )
-            except Exception as e:  # noqa: BLE001 — per-row isolation:
-                # a malformed payload (PdfError, zlib.error, recursion
-                # bombs, codec errors) becomes an error ROW; one bad
-                # document must not kill a corpus-scale task
-                rows.append(
-                    {
-                        "source": source, "plaintext": None,
-                        "n_pages": None, "n_columns": None,
-                        "n_blocks": None, "n_lines": None,
-                        "error": f"{type(e).__name__}: {e}",
-                    }
-                )
-        yield pd.DataFrame(rows, columns=[f.name for f in
-                                          PDF_EXTRACT_SCHEMA.fields])
+def _pdf_rows(source: str, payload: bytes | None) -> list[tuple]:
+    try:
+        n_pages, blocks = pdf_parse(bytes(payload))
+    except Exception as e:  # noqa: BLE001 — per-row isolation: a
+        # malformed payload (PdfError, zlib.error, recursion bombs, codec
+        # errors) becomes an error ROW; one bad document must not kill a
+        # corpus-scale task
+        return [(source, None, None, None, None, None, _error_message(e))]
+    words = [w for b in blocks for ln in b.lines for w in ln.split()]
+    return [(source, " ".join(words), n_pages,
+             max((b.column for b in blocks), default=-1) + 1,
+             len(blocks), sum(len(b.lines) for b in blocks), None)]
 
 
 def extract_pdf(df: DataFrame) -> DataFrame:
     """(source, content:binary) -> text + layout stats.  Arrow-batched
     per-row kernel: no shuffle, scales with input splits."""
-    return df.select("source", "content").mapInPandas(
-        _pdf_rows, schema=PDF_EXTRACT_SCHEMA
-    )
+    return map_records(df.select("source", "content"), _pdf_rows,
+                       PDF_EXTRACT_SCHEMA)

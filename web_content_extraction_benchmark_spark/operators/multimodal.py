@@ -24,13 +24,13 @@ integer-arithmetic formulas)."""
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.records import map_records
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -306,33 +306,21 @@ def media_feature_vector(payload: bytes | None, kind: str) -> list[float]:
 
 
 def extract_media_features(media: DataFrame) -> DataFrame:
-    """mapInPandas over Arrow batches: payload binary -> feature vector.
+    """Payload binary -> feature vector, one media row at a time on the
+    record kernel (`functions.records.map_records`).
 
-    The payload column is isolated to this one stage; batch ROW COUNT is
-    governed by the session's Arrow batch size
+    The payload column is isolated to this one stage; input batch ROW
+    COUNT is governed by the session's Arrow batch size
     (``spark.sql.execution.arrow.maxRecordsPerBatch``, settable through
     ``get_spark(extra_conf=...)``) — size it to ~256 MB / p99_payload
     for MB-scale media.  All three kinds decode for real (BMP / PCM16 WAV /
     uncompressed-DIB AVI)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": [
-                        len(p) if p is not None else 0 for p in pdf["payload"]
-                    ],
-                    "features": [
-                        media_feature_vector(p, k)
-                        for p, k in zip(pdf["payload"], pdf["kind"])
-                    ],
-                }
-            )
+    def features(media_id, kind: str, payload: bytes | None) -> list[tuple]:
+        return [(media_id, kind, len(payload) if payload is not None else 0,
+                 media_feature_vector(payload, kind))]
 
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        run, schema=FEATURES_SCHEMA
-    )
+    return map_records(media.select("media_id", "kind", "payload"),
+                       features, FEATURES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

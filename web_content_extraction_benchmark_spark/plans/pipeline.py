@@ -11,9 +11,11 @@ Replaces the reference's (model x dataset) spawn-Pool fan-out
 One page loop: `_run_extractors` is the only per-page extraction kernel.
 `extract_answers`, `ensemble_extract` (a `Vote` over the answers the
 kernel already holds for a page) and `extract_mixed` (each page routed
-by `content_kind`, the one place routing is decided) are plans over it;
-the only other Python loop here is `ensemble_answers`' vote over
-preloaded answer maps.
+by `content_kind`, the one place routing is decided) are plans over it.
+The kernel keeps its own Arrow loop rather than the package's record
+kernel (`functions.records.map_records`) because it emits per-partition
+lineage rows and times each model; `ensemble_answers`' vote over
+preloaded answer maps is a per-page function on `map_records`.
 
 Scale notes (100 TB / 1000 executors):
 - one decode per page feeds *all* extractors (the reference re-reads and
@@ -28,11 +30,9 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-import gc
 import time
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -43,19 +43,8 @@ from ..encoding import decode_html
 from ..extractors import EXTRACTORS, TREE_EXTRACTORS, get_extractor
 from ..extractors.density import main_content_with_blocks_from_tree
 from ..extractors.ensemble import majority_vote, normalize_answer
+from ..functions.records import _error_message, _freeze_worker_heap, map_records
 from ..functions.udfs import rouge_lsum_udf, token_levenshtein_udf
-
-
-def _freeze_worker_heap() -> None:
-    """Take the Python worker's import heap out of the cyclic collector's
-    view, once per worker process.  A kernel's per-page garbage is freed
-    by reference counting (the DOM is acyclic), so every full collection
-    would only rescan the long-lived objects the worker imported (tens of
-    thousands); ``gc.freeze`` moves them to the permanent generation.
-    The collector stays enabled for whatever cycles a later task makes."""
-    if gc.get_freeze_count() == 0:
-        gc.collect()
-        gc.freeze()
 
 
 ANSWERS_SCHEMA = T.StructType(
@@ -134,10 +123,6 @@ class Vote(NamedTuple):
 
 def _model_name(model: str | Vote) -> str:
     return model.name if isinstance(model, Vote) else model
-
-
-def _error_message(e: Exception) -> str:
-    return f"{type(e).__name__}: {e}"
 
 
 class _Page:
@@ -466,8 +451,8 @@ def ensemble_answers(
 ) -> DataFrame:
     """Majority-vote ensemble as a grouped plan: per-page answer map via
     ``map_from_entries(collect_list(...))`` (replaces the reference's
-    in-memory global answer cache, ensemble.py:24-37), voted inside one
-    Arrow batch pass.
+    in-memory global answer cache, ensemble.py:24-37), voted page by page
+    in the record kernel (`map_records`).
 
     The vote needs the page's full plain-text render as its token
     universe; it is taken from the ``full_text_model`` row of the SAME
@@ -523,27 +508,22 @@ def ensemble_answers(
             answer_maps, "url", "left"
         )
 
-    def vote(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = []
-            for amap in pdf["answers"]:
-                try:
-                    amap = amap or {}
-                    full_text = amap.get(full_text_model) or ""
-                    normalized = {
-                        m: normalize_answer(amap.get(m) or "")
-                        for m in input_models
-                        if m in amap
-                    }
-                    texts.append(
-                        majority_vote(
-                            full_text, normalized,
-                            weights=weights, vote_threshold=vote_threshold,
-                        )
-                    )
-                except Exception:
-                    texts.append("")
-            yield pd.DataFrame({"url": pdf["url"], "plaintext": texts})
+    def vote(url: str, amap) -> list[tuple[str, str]]:
+        try:
+            answers = dict(amap or ())  # an Arrow map: (key, value) pairs
+            full_text = answers.get(full_text_model) or ""
+            normalized = {
+                m: normalize_answer(answers.get(m) or "")
+                for m in input_models
+                if m in answers
+            }
+            text = majority_vote(
+                full_text, normalized,
+                weights=weights, vote_threshold=vote_threshold,
+            )
+        except Exception:
+            text = ""
+        return [(url, text)]
 
     out_schema = T.StructType(
         [
@@ -551,7 +531,7 @@ def ensemble_answers(
             T.StructField("plaintext", T.StringType(), False),
         ]
     )
-    voted = answer_maps.mapInPandas(vote, schema=out_schema)
+    voted = map_records(answer_maps, vote, out_schema)
     return voted.select(
         "url",
         F.lit(model_name).alias("model"),

@@ -25,12 +25,13 @@ from __future__ import annotations
 import gzip
 import hashlib
 import os
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.records import map_records
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -304,41 +305,23 @@ def encode_page_html(doc_id: int, html: str) -> bytes:
     return raw
 
 
-def _synthesize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        doc_ids = pdf["doc_id"].to_numpy()
-        sources = pdf["source"].to_numpy()
-        texts = pdf["text"].to_numpy()
-        langs = pdf["lang"].to_numpy()
-        rows = {
-            "url": [],
-            "warc_ts": [],
-            "html": [],
-            "text": [],
-            "lang": [],
-            "doc_id": [],
-            "dataset": [],
-            "gold": [],
-        }
-        for doc_id, source, text, lang in zip(doc_ids, sources, texts, langs):
-            doc_id = int(doc_id)
-            rows["url"].append(url_for(doc_id, source))
-            # seconds bounded to keep replicate-offset ids (copy * 10^7,
-            # up to ~2*10^10 at the 10M-page stress level) inside the
-            # pandas ns-timestamp range; identity for every base doc_id,
-            # so the SQL mirrors never see the modulo.
-            rows["warc_ts"].append(
-                EPOCH_2023 + pd.Timedelta(seconds=doc_id % 4_000_000_000)
-            )
-            rows["html"].append(
-                encode_page_html(doc_id, build_page_html(doc_id, source, text))
-            )
-            rows["text"].append(None if doc_id % 13 == 0 else text)
-            rows["lang"].append(lang)
-            rows["doc_id"].append(doc_id)
-            rows["dataset"].append(source)
-            rows["gold"].append(gold_main_text(doc_id, source, text))
-        yield pd.DataFrame(rows)
+def _page_row(doc_id: int, source: str, text: str | None,
+              lang: str | None) -> list[tuple]:
+    """One `PAGES_SCHEMA` row of a fixture document."""
+    return [(
+        url_for(doc_id, source),
+        # seconds bounded to keep replicate-offset ids (copy * 10^7, up
+        # to ~2*10^10 at the 10M-page stress level) inside the pandas
+        # ns-timestamp range; identity for every base doc_id, so the SQL
+        # mirrors never see the modulo.
+        EPOCH_2023 + pd.Timedelta(seconds=doc_id % 4_000_000_000),
+        encode_page_html(doc_id, build_page_html(doc_id, source, text)),
+        None if doc_id % 13 == 0 else text,
+        lang,
+        doc_id,
+        source,
+        gold_main_text(doc_id, source, text),
+    )]
 
 
 def synthesize_pages(
@@ -366,9 +349,8 @@ def synthesize_pages(
         ).drop("copy")
     if partitions:
         docs = docs.repartition(partitions)
-    return docs.select("doc_id", "source", "text", "lang").mapInPandas(
-        _synthesize_batches, schema=PAGES_SCHEMA
-    )
+    return map_records(docs.select("doc_id", "source", "text", "lang"),
+                       _page_row, PAGES_SCHEMA)
 
 
 def truth_table(pages: DataFrame) -> DataFrame:

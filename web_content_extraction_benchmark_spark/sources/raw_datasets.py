@@ -37,9 +37,8 @@ import os
 import re
 from dataclasses import dataclass
 from functools import partial
-from typing import Callable, Iterable, Iterator
+from typing import Callable, Iterable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -52,6 +51,7 @@ from ..dom import (
     parse_html,
 )
 from ..encoding import decode_html, maybe_gunzip
+from ..functions.records import map_records
 
 # CleanEval <text ...> wrapper strip (reference dataset_readers.py:146).
 _TEXT_TAG_RE = re.compile(r"(?:^<text [^>]+>\s*|\s*</text>$)", flags=re.MULTILINE)
@@ -306,37 +306,21 @@ def _scan(spark: SparkSession, root: str, side: Side) -> DataFrame:
     return df.withColumn("source", F.concat_ws("_", prefix, "source"))
 
 
-def _pages_kernel(fmt: str,
-                  batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _pages_kernel(fmt: str, source: str, raw: bytes) -> list[tuple]:
     spec = FORMATS[fmt]
-    with_id = "page_id" in spec.extra
-    for pdf in batches:
-        raws = pdf["content"]
-        if with_id:
-            # the reference's hash quirk (dataset_readers.py:245-248): the
-            # id is the sha256 of the DECOMPRESSED bytes, not of the .gz
-            # on disk, so ids stay stable across recompression.  Only
-            # here: decode_html gunzips too, so other formats must not.
-            raws = [maybe_gunzip(bytes(raw)) for raw in raws]
-        out = {
-            "source": pdf["source"],
-            "html": [spec.page(decode_html(raw)) for raw in raws],
-        }
-        if with_id:
-            out["page_id"] = [hashlib.sha256(raw).hexdigest() for raw in raws]
-        yield pd.DataFrame(out)
+    if "page_id" not in spec.extra:
+        return [(source, spec.page(decode_html(raw)))]
+    # the reference's hash quirk (dataset_readers.py:245-248): the id is
+    # the sha256 of the DECOMPRESSED bytes, not of the .gz on disk, so
+    # ids stay stable across recompression.  Only here: decode_html
+    # gunzips too, so other formats must not.
+    raw = maybe_gunzip(bytes(raw))
+    return [(source, spec.page(decode_html(raw)),
+             hashlib.sha256(raw).hexdigest())]
 
 
-def _truths_kernel(fmt: str,
-                   batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    rows_of = FORMATS[fmt].truth_rows
-    for pdf in batches:
-        rows = [
-            row
-            for key, raw in zip(pdf["source"], pdf["content"])
-            for row in rows_of(key, decode_html(raw))
-        ]
-        yield pd.DataFrame(rows, columns=_TRUTH_SCHEMA.names)
+def _truths_kernel(fmt: str, source: str, raw: bytes) -> Iterable[tuple]:
+    return FORMATS[fmt].truth_rows(source, decode_html(raw))
 
 
 def convert_dataset(spark: SparkSession, fmt: str, root: str) -> DataFrame:
@@ -346,11 +330,13 @@ def convert_dataset(spark: SparkSession, fmt: str, root: str) -> DataFrame:
     reference's truth-driven extract whitelist)."""
     spec = FORMATS[fmt]
     schema = _PAGE_ID_SCHEMA if "page_id" in spec.extra else _PAGE_SCHEMA
-    pages = _scan(spark, root, spec.pages).mapInPandas(
-        partial(_pages_kernel, fmt), schema=schema
+    pages = map_records(
+        _scan(spark, root, spec.pages).select("source", "content"),
+        partial(_pages_kernel, fmt), schema,
     )
-    truths = _scan(spark, root, spec.truths).mapInPandas(
-        partial(_truths_kernel, fmt), schema=_TRUTH_SCHEMA
+    truths = map_records(
+        _scan(spark, root, spec.truths).select("source", "content"),
+        partial(_truths_kernel, fmt), _TRUTH_SCHEMA,
     )
     keep = ("source", "html", "plaintext", *spec.extra)
     return pages.join(F.broadcast(truths), "source").select(
@@ -365,7 +351,7 @@ def convert_pdf(spark: SparkSession, root_dir: str) -> DataFrame:
     only); this is the "PDF/layout parse" leg of the pipeline mandate.
     The whole parse — xref, FlateDecode, content-stream text operators,
     column/line layout reconstruction — is the from-scratch
-    ``extractors/pdf_text`` kernel run per file inside mapInPandas;
+    ``extractors/pdf_text`` kernel run per file on the record kernel;
     the source key is the file stem, as for every other raw format."""
     from ..extractors.pdf_text import extract_pdf
 

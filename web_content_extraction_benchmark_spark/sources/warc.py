@@ -17,11 +17,14 @@ Reader shape at 100 TB: WARC files are ~1 GB and gzip is not
 block-splittable, so the unit of parallelism is the FILE (100 TB ≈
 10^5 files ≫ executor count).  `read_warc` scans PATHS ONLY (the
 ``binaryFile`` source with the ``content`` column pruned away) and
-the kernel ``open()``s each file inside ``mapInPandas``, feeding the
-member walk in bounded chunks — executor memory really is O(chunk +
-largest record), never O(file): the raw ~1 GB blob neither sits in
-the JVM nor crosses Arrow into Python, and Spark's 2 GB binary-column
-cap does not apply.  No shuffle anywhere: scan -> per-file map.
+the per-file function ``open()``s each file inside the record kernel
+(`functions.records.map_records`), feeding the member walk in bounded
+chunks — executor memory really is O(chunk + largest record), never
+O(file): the raw ~1 GB blob neither sits in the JVM nor crosses Arrow
+into Python, and Spark's 2 GB binary-column cap does not apply.  No shuffle anywhere: scan -> per-file map.
+The two writers, `write_wet` and `write_warc`, keep their own
+``mapInPandas`` loops: each writes one file per partition and emits one
+manifest row for it, which is not a per-record map.
 
 Byte-lockstep with the synthetic pages table: `synthesize_warc_tree`
 wraps exactly the bytes `sources/pages.py` puts in the ``html``
@@ -34,11 +37,14 @@ from __future__ import annotations
 import gzip
 import zlib
 from datetime import datetime, timezone
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..functions.records import map_records
 
 CRLF = b"\r\n"
 _WS_BYTES = frozenset(b" \t\r\n")
@@ -432,22 +438,42 @@ def parse_http_response(payload: bytes) -> tuple[int, dict[str, str], bytes]:
     parts = status_line.split(None, 2)
     if len(parts) < 2 or not parts[0].startswith(b"HTTP/"):
         raise WarcError(f"bad status line {status_line[:30]!r}")
-    status = int(parts[1])
+    try:
+        status = int(parts[1])
+    except ValueError as e:
+        raise WarcError(f"bad status code {parts[1][:30]!r}") from e
     headers = _parse_headers(header_block)
     body = payload[head_end + 4:]
     if "chunked" in headers.get("transfer-encoding", "").lower():
         body = _dechunk(body)
     elif "content-length" in headers:
-        body = body[:int(headers["content-length"])]
+        try:
+            length = int(headers["content-length"])
+        except ValueError as e:
+            raise WarcError(
+                f"bad http Content-Length {headers['content-length'][:30]!r}"
+            ) from e
+        body = body[:length]
     return status, headers, body
 
 
-def _warc_ts(headers: dict[str, str]):
+def _warc_ts(headers: dict[str, str]) -> datetime | None:
+    """``WARC-Date`` as a naive UTC datetime; None when absent or
+    malformed.  WARC/1.1 allows 1-9 fractional second digits; Spark
+    timestamps hold microseconds, so digits past the sixth are dropped."""
     v = headers.get("warc-date")
     if not v:
         return None
+    whole, dot, frac = v.partition(".")
     try:
-        return datetime.strptime(v, "%Y-%m-%dT%H:%M:%SZ")
+        if not dot:
+            return datetime.strptime(v, "%Y-%m-%dT%H:%M:%SZ")
+        digits = frac[:-1]
+        if not (frac.endswith("Z") and len(digits) <= 9
+                and digits.isdigit()):
+            return None
+        return datetime.strptime(f"{whole}.{digits[:6]}",
+                                 "%Y-%m-%dT%H:%M:%S.%f")
     except ValueError:
         return None
 
@@ -457,69 +483,48 @@ def _warc_ts(headers: dict[str, str]):
 # ---------------------------------------------------------------------------
 
 
-def _make_warc_batches(errors: str = "strict"):
-    def _warc_batches(batches: Iterator[pd.DataFrame],
-                      batch_rows: int = 256) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WARC_PAGES_SCHEMA.fields]
-        rows: list[dict] = []
-        for pdf in batches:
-            for path in pdf["path"]:
-                if ".inprogress-" in path:
-                    continue  # a crashed sink attempt's temp file —
-                    # never committed, must not be ingested as data
-                try:
-                    records = iter_warc_records_chunks(
-                        _file_chunks(_local_path(path)))
-                    for headers, payload in records:
-                        # skip non-response record types a real crawl
-                        # carries: warcinfo, request, and the CC dedup
-                        # types revisit / metadata / resource (a
-                        # revisit payload is headers-only — parsing it
-                        # as a response would mis-frame)
-                        if headers.get("warc-type") != "response":
-                            continue
-                        status, http_headers, body = \
-                            parse_http_response(payload)
-                        rows.append({
-                            "url": headers.get("warc-target-uri"),
-                            "warc_ts": _warc_ts(headers),
-                            "html": body,
-                            "http_status": status,
-                            "content_type":
-                                http_headers.get("content-type"),
-                            "redirect_to":
-                                http_headers.get("location"),
-                            "warc_file": path,
-                            "digest_ok": _check_digest(headers, body),
-                        })
-                        if len(rows) >= batch_rows:
-                            yield pd.DataFrame(rows, columns=cols)
-                            rows = []
-                except Exception:
-                    # errors="skip": records already drained from this
-                    # file are kept; the rest of the file is dropped —
-                    # one damaged file in a 10^5-file crawl must not
-                    # kill the job
-                    if errors != "skip":
-                        raise
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _warc_batches
+def _records(path: str, warc_type: str) -> Iterator[tuple[dict, bytes]]:
+    """(warc headers, payload) of each ``warc_type`` record in the file
+    at ``path``.  Other record types a real crawl carries (warcinfo,
+    request, and the CC dedup types revisit / metadata / resource, whose
+    payloads would mis-frame as responses) are skipped, and so is a
+    crashed sink attempt's ``.inprogress-`` temp file: never committed,
+    it must not be ingested as data."""
+    if ".inprogress-" in path:
+        return
+    for headers, payload in iter_warc_records_chunks(
+            _file_chunks(_local_path(path))):
+        if headers.get("warc-type") == warc_type:
+            yield headers, payload
 
 
-_warc_batches = _make_warc_batches("strict")  # default kernel
+def _warc_pages(path: str, errors: str = "strict") -> Iterator[tuple]:
+    """`WARC_PAGES_SCHEMA` rows of one WARC file's responses."""
+    try:
+        for headers, payload in _records(path, "response"):
+            status, http_headers, body = parse_http_response(payload)
+            yield (headers.get("warc-target-uri"), _warc_ts(headers), body,
+                   status, http_headers.get("content-type"),
+                   http_headers.get("location"), path,
+                   _check_digest(headers, body))
+    except Exception:
+        # errors="skip": records already yielded from this file are
+        # kept; the rest of the file is dropped — one damaged file in a
+        # 10^5-file crawl must not kill the job
+        if errors != "skip":
+            raise
 
 
 def read_warc(spark: SparkSession, path: str,
               glob: str = "*.warc*", errors: str = "strict") -> DataFrame:
-    """``.warc`` / ``.warc.gz`` directory -> (url, warc_ts, html,
-    http_status, content_type, warc_file).  One file = one task (gzip
-    is not block-splittable; Common Crawl parallelism comes from file
-    count); rows stream out in bounded Arrow batches.
+    """``.warc`` / ``.warc.gz`` directory -> `WARC_PAGES_SCHEMA` rows
+    (url, warc_ts, html, http_status, content_type, redirect_to,
+    warc_file, digest_ok).  One file = one task (gzip is not
+    block-splittable; Common Crawl parallelism comes from file count);
+    rows stream out of the record kernel in bounded Arrow batches.
 
     The scan carries PATHS ONLY (the ``binaryFile`` source with
-    ``content`` pruned); the kernel streams each file through
+    ``content`` pruned); `_warc_pages` streams each file through
     ``open()`` in 1 MB chunks, so per-task memory is O(chunk + largest
     record) — a real ~1 GB compressed crawl file never materializes in
     the JVM, never crosses Arrow, and is not subject to the 2 GB
@@ -539,8 +544,8 @@ def read_warc(spark: SparkSession, path: str,
     files = spark.read.format("binaryFile") \
         .option("pathGlobFilter", glob).load(path) \
         .select("path")
-    return files.mapInPandas(_make_warc_batches(errors),
-                             schema=WARC_PAGES_SCHEMA)
+    return map_records(files, partial(_warc_pages, errors=errors),
+                       WARC_PAGES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -617,35 +622,19 @@ def read_wet(spark: SparkSession, path: str,
              glob: str = "*.warc.wet*") -> DataFrame:
     """WET-style directory -> (url, warc_ts, plaintext)."""
 
-    def rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: list[dict] = []
-        for pdf in batches:
-            for fpath in pdf["path"]:
-                if ".inprogress-" in fpath:
-                    continue  # uncommitted sink temp file
-                records = iter_warc_records_chunks(
-                    _file_chunks(_local_path(fpath)))
-                for headers, payload in records:
-                    if headers.get("warc-type") != "conversion":
-                        continue
-                    out.append({
-                        "url": headers.get("warc-target-uri"),
-                        "warc_ts": _warc_ts(headers),
-                        "plaintext": payload.decode("utf-8"),
-                    })
-                    if len(out) >= 256:
-                        yield pd.DataFrame(out)
-                        out = []
-        if out:
-            yield pd.DataFrame(out)
+    def texts(fpath: str) -> Iterator[tuple]:
+        for headers, payload in _records(fpath, "conversion"):
+            yield (headers.get("warc-target-uri"), _warc_ts(headers),
+                   payload.decode("utf-8"))
 
     schema = T.StructType([
         T.StructField("url", T.StringType(), True),
         T.StructField("warc_ts", T.TimestampType(), True),
         T.StructField("plaintext", T.StringType(), True),
     ])
-    return spark.read.format("binaryFile").option("pathGlobFilter", glob) \
-        .load(path).select("path").mapInPandas(rows, schema=schema)
+    files = spark.read.format("binaryFile").option("pathGlobFilter", glob) \
+        .load(path).select("path")
+    return map_records(files, texts, schema)
 
 
 def write_warc(df: DataFrame, out_dir: str,
@@ -877,7 +866,7 @@ def read_warc_stream(spark: SparkSession, path: str,
         .load(path)
         .select("path")
     )
-    return files.mapInPandas(_warc_batches, schema=WARC_PAGES_SCHEMA)
+    return map_records(files, _warc_pages, WARC_PAGES_SCHEMA)
 
 
 def synthesize_mixed_warc_tree(sf_dir: str, out_dir: str,
