@@ -476,6 +476,39 @@ def test_extraction_plans_run_one_arrow_kernel(spark):
         assert "MapInPandas" not in tree, tree
 
 
+def _python_map_sites(method: str) -> set[tuple[str, str]]:
+    """(module path, top-level function) of every ``.<method>`` use in
+    the package's source."""
+    import ast
+    import pathlib
+
+    import web_content_extraction_benchmark_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    sites = set()
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Attribute) and node.attr == method:
+                    sites.add((path.relative_to(root).as_posix(),
+                               getattr(top, "name", "<module>")))
+    return sites
+
+
+def test_one_kernel_invariant_in_source():
+    """Every per-record Python map goes through `map_records`; the only
+    pandas loops left are the two per-partition file writers and the
+    neural extractor's whole-batch matmul."""
+    assert _python_map_sites("mapInArrow") == {
+        ("functions/records.py", "map_records")}
+    assert _python_map_sites("mapInPandas") == {
+        ("sources/warc.py", "write_wet"),
+        ("sources/warc.py", "write_warc"),
+        ("extractors/neural.py", "neural_extract_answers"),
+    }
+
+
 def test_record_kernels_plan_arrow_not_pandas(spark, sf_dir, tmp_path):
     """Every per-record Python map runs on the one record kernel
     (`functions.records.map_records`): one MapInArrow per kernel and no

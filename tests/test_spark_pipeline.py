@@ -113,6 +113,33 @@ def test_lineage_sidecar_accounts_every_page(spark, pages):
     assert all(r.bytes_in > 0 for r in lineage_rows)
 
 
+def test_lineage_accounts_each_partition(spark, pages):
+    """Lineage is one row per (partition, model) that saw a page: with
+    more partitions than pages some are empty and emit no row, and each
+    row's docs_in and bytes_in are its partition's page count and html
+    bytes."""
+    n_pages = pages.count()
+    spread = repartition_salted(pages, 4 * n_pages)
+    _, lineage = extract_answers(spread, ["main_content", "plain"],
+                                 with_lineage=True)
+    rows = lineage.collect()
+    assert all(r.docs_in > 0 for r in rows)
+    keys = [(r.partition_id, r.model) for r in rows]
+    assert len(keys) == len(set(keys))
+    want = {
+        r.pid: (r.docs, r.bytes)
+        for r in spread.groupBy(F.spark_partition_id().alias("pid")).agg(
+            F.count("*").alias("docs"),
+            F.sum(F.length("html")).alias("bytes"),
+        ).collect()
+    }
+    assert len(want) < 4 * n_pages  # some partitions are empty
+    for model in ("main_content", "plain"):
+        got = {r.partition_id: (r.docs_in, r.bytes_in)
+               for r in rows if r.model == model}
+        assert got == want
+
+
 def test_scoring_perfect_extraction_scores_one(spark, pages):
     answers = extract_answers(pages, ["main_content"])
     scores = score_answers(answers, truth_table(pages))

@@ -95,6 +95,53 @@ def test_http_framing_faults_raise_warc_error(payload):
         W.parse_http_response(payload)
 
 
+@pytest.mark.parametrize("length", ["-3", "1_0", "+2", " 2x", "\u00b2"])
+def test_http_content_length_must_be_decimal_digits(length):
+    """int() alone reads "-3" (a phantom body: ``body[:-3]``), "1_0"
+    and "+2"; only ASCII decimal digits frame a body."""
+    payload = (b"HTTP/1.1 200 OK\r\nContent-Length: "
+               + length.encode("latin-1") + b"\r\n\r\nhello")
+    with pytest.raises(W.WarcError):
+        W.parse_http_response(payload)
+
+
+@pytest.mark.parametrize("size", [b"+3", b"0x3", b"-0", b"1_0", b""])
+def test_chunk_size_must_be_hex_digits(size):
+    with pytest.raises(W.WarcError):
+        W._dechunk(size + b"\r\nhel\r\n0\r\n\r\n")
+
+
+def _raw_record(uri: str, length: str, payload: bytes) -> bytes:
+    return (b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "
+            + uri.encode() + b"\r\nContent-Length: " + length.encode()
+            + b"\r\n\r\n" + payload + b"\r\n\r\n")
+
+
+@pytest.mark.parametrize("length", ["-50", "+5", "5_0", ""])
+def test_warc_content_length_must_be_decimal_digits(length):
+    """A signed or garbled WARC Content-Length is a framing fault: a
+    "-50" record used to be yielded with an empty payload before the
+    next record failed to frame."""
+    rec = _raw_record("u", length, b"x" * 50)
+    yielded = []
+    with pytest.raises(W.WarcError):
+        for record in W.iter_warc_records(rec + rec):
+            yielded.append(record)
+    assert yielded == []
+
+
+def test_read_warc_skip_keeps_no_phantom_record(spark, tmp_path):
+    """errors='skip' keeps the records before a negative Content-Length
+    and none at or after it (the empty payload it used to slice failed
+    HTTP parsing, so no phantom page ever reached this frame)."""
+    http = W.build_http_response(b"<html>ok</html>")
+    good = _raw_record("https://a.example/1", str(len(http)), http)
+    bad = _raw_record("https://a.example/2", "-50", http)
+    (tmp_path / "f.warc").write_bytes(good + bad + good)
+    got = W.read_warc(spark, str(tmp_path), errors="skip").collect()
+    assert [r["url"] for r in got] == ["https://a.example/1"]
+
+
 @pytest.mark.parametrize("date,want", [
     ("2023-01-01T00:00:00Z", datetime(2023, 1, 1)),
     ("2023-01-01T00:00:00.1Z", datetime(2023, 1, 1, 0, 0, 0, 100000)),

@@ -1,8 +1,10 @@
-"""Volume stress: fused synthesize+extract at 1M-10M pages in ONE pass
-(no intermediate materialization), recording the zero-error /
-bounded-memory / deterministic-bytes contract plus a TASK-SKEW profile
-(max / median / p90 per-partition kernel wall-ms from the lineage
-sidecar rows — the straggler evidence a 100 TB run lives or dies by).
+"""Volume stress: fused synthesize+extract at 1M-10M pages in ONE
+extraction pass (`extract_answers(..., with_lineage=True)` persists the
+kernel's rows once), recording the zero-error / bounded-memory /
+deterministic-bytes contract plus a TASK-SKEW profile (max / median /
+p90 per-partition kernel wall-ms from the lineage rows — the straggler
+evidence a 100 TB run lives or dies by).  ``partitions`` is the number
+of lineage rows: partitions that saw a page (one model).
 
 Usage:
     python tools/volume_stress.py [n_pages] [sf_dir] [partitions]
@@ -25,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from web_content_extraction_benchmark_spark.plans.pipeline import (
-    _extract_combined,
+    extract_answers,
 )
 from web_content_extraction_benchmark_spark.session import get_spark
 from web_content_extraction_benchmark_spark.sources.pages import (
@@ -53,28 +55,28 @@ def main() -> None:
 
     pages = synthesize_pages(spark, sf_dir, replicate=replicate,
                              partitions=partitions)
-    # One fused pass: the kernel emits answer rows (kind=0) AND one
-    # lineage row per (partition, model) (kind=1) in the same stream; a
-    # single two-row aggregate consumes both, so nothing is ever
-    # materialized and the skew profile costs no extra pass.
-    combined = _extract_combined(pages, ["main_content"], 0, F.lit("html"))
+    # One extraction pass: the kernel's rows are persisted, so the
+    # answer aggregate runs it and the lineage aggregate (one row per
+    # partition and model) reads the same rows back; the skew profile
+    # costs no second pass over the pages.
+    answers, lineage = extract_answers(pages, ["main_content"],
+                                       with_lineage=True)
     loadavg_at_start = float(open("/proc/loadavg").read().split()[0])
     started = time.perf_counter()
-    rows = {
-        r["kind"]: r
-        for r in combined.groupBy("kind").agg(
-            F.count("*").alias("rows"),
-            F.sum(F.length("plaintext")).alias("chars"),
-            F.count("error").alias("errors"),
-            F.max("wall_ms").alias("wall_ms_max"),
-            F.expr("median(wall_ms)").alias("wall_ms_median"),
-            F.expr("percentile(wall_ms, 0.9)").alias("wall_ms_p90"),
-            F.sum("docs_in").alias("docs_in"),
-        ).collect()
-    }
+    answers = answers.agg(
+        F.count("*").alias("rows"),
+        F.sum(F.length("plaintext")).alias("chars"),
+        F.count_if("error").alias("errors"),
+    ).collect()[0]
+    lineage = lineage.agg(
+        F.count("*").alias("rows"),
+        F.max("wall_ms").alias("wall_ms_max"),
+        F.expr("median(wall_ms)").alias("wall_ms_median"),
+        F.expr("percentile(wall_ms, 0.9)").alias("wall_ms_p90"),
+        F.sum("docs_in").alias("docs_in"),
+    ).collect()[0]
     wall = time.perf_counter() - started
 
-    answers, lineage = rows[0], rows[1]
     assert answers["rows"] == n_docs * replicate, (
         answers["rows"], n_docs * replicate
     )

@@ -7,11 +7,12 @@ the function's output tuples go straight into Arrow arrays, with no
 pandas frame on either side of the crossing.  Batching, output chunking
 and the worker heap freeze live here once.
 
-Kernels that need more than one row at a time keep their own loops:
-the extraction kernel (`plans.pipeline._run_extractors`, per-partition
-lineage rows and per-model timing), the neural extractor (one matmul
-over a whole Arrow batch) and the WARC/WET writers (one file and one
-manifest row per partition).
+The extraction kernel (`plans.pipeline._page_kernel`) is one such
+function; per-partition counts are a groupBy over a kernel's rows, not
+rows the loop adds.  Kernels that need more than one row at a time keep
+their own loops: the neural extractor (one matmul over a whole Arrow
+batch) and the WARC/WET writers (one file and one manifest row per
+partition).
 """
 
 from __future__ import annotations

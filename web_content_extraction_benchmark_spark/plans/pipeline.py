@@ -3,19 +3,19 @@
 Replaces the reference's (model x dataset) spawn-Pool fan-out
 (/root/reference/src/extraction_benchmark/extract.py:139-157) with:
 
-    pages --salted repartition--> mapInArrow(decode once, run all
-    extractors per batch; answer rows + per-partition lineage rows)
-    --> answers (+ lineage sidecar) --> join truth --> score UDFs
-    --> groupBy aggregations
+    pages --salted repartition--> map_records(decode once, run all
+    extractors per page; one row per (page, model)) --> answers
+    (+ lineage: a groupBy over the same rows) --> join truth
+    --> score UDFs --> groupBy aggregations
 
-One page loop: `_run_extractors` is the only per-page extraction kernel.
+One page loop: the extraction kernel (`_page_kernel`) is a per-page
+function on the package's record kernel (`functions.records.map_records`).
 `extract_answers`, `ensemble_extract` (a `Vote` over the answers the
 kernel already holds for a page) and `extract_mixed` (each page routed
 by `content_kind`, the one place routing is decided) are plans over it.
-The kernel keeps its own Arrow loop rather than the package's record
-kernel (`functions.records.map_records`) because it emits per-partition
-lineage rows and times each model; `ensemble_answers`' vote over
-preloaded answer maps is a per-page function on `map_records`.
+Per-partition lineage is a Catalyst aggregate over the kernel's rows,
+keyed by ``spark_partition_id()``; `ensemble_answers`' vote over
+preloaded answer maps is another per-page function on `map_records`.
 
 Scale notes (100 TB / 1000 executors):
 - one decode per page feeds *all* extractors (the reference re-reads and
@@ -43,60 +43,8 @@ from ..encoding import decode_html
 from ..extractors import EXTRACTORS, TREE_EXTRACTORS, get_extractor
 from ..extractors.density import main_content_with_blocks_from_tree
 from ..extractors.ensemble import majority_vote, normalize_answer
-from ..functions.records import _error_message, _freeze_worker_heap, map_records
+from ..functions.records import _error_message, map_records
 from ..functions.udfs import rouge_lsum_udf, token_levenshtein_udf
-
-
-ANSWERS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("model", T.StringType(), False),
-        T.StructField("plaintext", T.StringType(), False),
-        T.StructField("block_count", T.IntegerType(), False),
-        T.StructField("error", T.BooleanType(), False),
-    ]
-)
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("snapshot_id", T.LongType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("model", T.StringType(), False),
-        T.StructField("extractor_version", T.StringType(), False),
-        T.StructField("docs_in", T.LongType(), False),
-        T.StructField("docs_out", T.LongType(), False),
-        T.StructField("errors", T.LongType(), False),
-        T.StructField("block_count", T.LongType(), False),
-        T.StructField("bytes_in", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-    ]
-)
-
-
-# the lineage columns of the kernel's output, null on answer rows
-_LINEAGE_COLUMNS = [
-    T.StructField(f.name, f.dataType, True) for f in LINEAGE_SCHEMA.fields
-    if f.name not in {"model", "block_count"}
-]
-
-
-def _combined_schema(url_nullable: bool) -> T.StructType:
-    """The extraction kernel's output: ``kind`` 0 rows are answers (one
-    per page and model; ``error`` is the failure's
-    ``"<Exception>: <message>"`` and then ``plaintext`` is null), ``kind``
-    1 rows are per-partition lineage, one per model."""
-    return T.StructType(
-        [
-            T.StructField("kind", T.IntegerType(), False),
-            T.StructField("url", T.StringType(), url_nullable),
-            T.StructField("model", T.StringType(), False),
-            T.StructField("content_kind", T.StringType(), False),
-            T.StructField("plaintext", T.StringType(), True),
-            T.StructField("block_count", T.IntegerType(), False),
-            T.StructField("error", T.StringType(), True),
-        ]
-        + _LINEAGE_COLUMNS
-    )
 
 
 def repartition_salted(pages: DataFrame, num_partitions: int,
@@ -216,19 +164,15 @@ def _other_answer(content_kind: str, blob: bytes | None
     return text, (text.count("\n") + 1 if text else 0), None
 
 
-def _run_extractors(models: list[str | Vote], snapshot_id: int,
-                    out_schema: T.StructType):
-    """The one per-page extraction kernel, a raw-Arrow ``mapInArrow``
-    over ``(url, html, content_kind)`` batches (it skips the pandas
-    DataFrame layer, measured ~15% faster than a pandas kernel).  Each
-    page is decoded and parsed once and each model runs on it at most
-    once; ``content_kind`` (see `content_kind`) routes it: ``html`` runs
-    the models, ``pdf``, ``text`` and ``binary`` give every model the
-    page's one `_other_answer`.  Emits ``out_schema`` (a
-    `_combined_schema`) batches: one
-    ``kind=0`` answer row per (page, model), its lineage columns null,
-    then, at the end of the partition, one ``kind=1`` lineage row per
-    model (north_rule)."""
+def _page_kernel(models: list[str | Vote]):
+    """The one per-page extraction kernel: ``extract(url, blob,
+    content_kind)``, run on `map_records` over ``(url, html,
+    content_kind)`` rows.  Each page is decoded and parsed once and each
+    model runs on it at most once; ``content_kind`` (see `content_kind`)
+    routes it: ``html`` runs the models, ``pdf``, ``text`` and ``binary``
+    give every model the page's one `_other_answer`.  Yields one
+    `_extract_pages` row per model: the answer, the page's byte count and
+    that model's wall time on the page, which lineage sums."""
     specs: dict[str, str | Vote] = {}
     for model in models:
         specs.setdefault(_model_name(model), model)
@@ -238,101 +182,44 @@ def _run_extractors(models: list[str | Vote], snapshot_id: int,
                        if isinstance(model, Vote) else (model,))
     for member in members:  # fail at plan-build time, not inside tasks
         get_extractor(member)
-    names = list(specs)
-    specs_list = list(specs.values())
+    named = list(specs.items())
     needs_tree = any(m in TREE_EXTRACTORS for m in members)
 
-    def run(batches):
-        import pyarrow as pa
-        from pyspark import TaskContext
-        from pyspark.sql.pandas.types import to_arrow_schema
+    def extract(url, blob, content_kind):
+        bytes_in = len(blob) if blob is not None else 0
+        page = _Page(blob, content_kind, needs_tree)
+        for name, model in named:
+            started = time.perf_counter_ns()
+            text, blocks, error = _answer(page, model)
+            yield (url, name, content_kind, text, blocks, error, bytes_in,
+                   time.perf_counter_ns() - started)
 
-        _freeze_worker_heap()
-
-        schema = to_arrow_schema(out_schema)
-        lineage_types = schema.types[-len(_LINEAGE_COLUMNS):]
-        partition_id = TaskContext.get().partitionId()
-        k = len(names)
-        docs_in = bytes_in = 0
-        docs_out = [0] * k
-        errors = [0] * k
-        block_sums = [0] * k
-        wall_ns = [0] * k
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            blobs = batch.column("html").to_pylist()
-            kinds = batch.column("content_kind").to_pylist()
-            out_url: list[str | None] = []
-            out_model: list[str] = []
-            out_kind: list[str] = []
-            out_text: list[str | None] = []
-            out_blocks: list[int] = []
-            out_error: list[str | None] = []
-            for url, blob, content_kind in zip(urls, blobs, kinds):
-                bytes_in += len(blob) if blob is not None else 0
-                page = _Page(blob, content_kind, needs_tree)
-                for i, model in enumerate(specs_list):
-                    started = time.perf_counter_ns()
-                    text, blocks, error = _answer(page, model)
-                    wall_ns[i] += time.perf_counter_ns() - started
-                    if error is not None:
-                        errors[i] += 1
-                    if text:
-                        docs_out[i] += 1
-                    block_sums[i] += blocks
-                    out_url.append(url)
-                    out_model.append(names[i])
-                    out_kind.append(content_kind)
-                    out_text.append(text)
-                    out_blocks.append(blocks)
-                    out_error.append(error)
-            docs_in += len(urls)
-            n = len(out_url)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.repeat(pa.scalar(0, pa.int32()), n),
-                    pa.array(out_url, type=pa.string()),
-                    pa.array(out_model, type=pa.string()),
-                    pa.array(out_kind, type=pa.string()),
-                    pa.array(out_text, type=pa.string()),
-                    pa.array(out_blocks, type=pa.int32()),
-                    pa.array(out_error, type=pa.string()),
-                ]
-                + [pa.nulls(n, t) for t in lineage_types],
-                schema=schema,
-            )
-        yield pa.RecordBatch.from_pydict(
-            {
-                "kind": [1] * k,
-                "url": [""] * k,
-                "model": names,
-                "content_kind": [""] * k,
-                "plaintext": [None] * k,
-                "block_count": block_sums,
-                "error": [None] * k,
-                "snapshot_id": [snapshot_id] * k,
-                "partition_id": [partition_id] * k,
-                "extractor_version": [EXTRACTOR_VERSION] * k,
-                "docs_in": [docs_in] * k,
-                "docs_out": docs_out,
-                "errors": errors,
-                "bytes_in": [bytes_in] * k,
-                "wall_ms": [ns // 1_000_000 for ns in wall_ns],
-            },
-            schema=schema,
-        )
-
-    return run
+    return extract
 
 
-def _extract_combined(pages: DataFrame, models: list[str | Vote],
-                      snapshot_id: int, kinds: Column) -> DataFrame:
-    """``pages`` through `_run_extractors`, each page routed by the
-    ``kinds`` column: the combined answer + lineage stream."""
-    schema = _combined_schema(pages.schema["url"].nullable)
-    return pages.select(
-        "url", "html", kinds.alias("content_kind")
-    ).mapInArrow(_run_extractors(models, snapshot_id, schema), schema=schema)
+def _extract_pages(pages: DataFrame, models: list[str | Vote],
+                   kinds: Column) -> DataFrame:
+    """``pages`` through `_page_kernel`, each page routed by the
+    ``kinds`` column: one row per (page, model).  ``error`` is the
+    failure's ``"<Exception>: <message>"`` and then ``plaintext`` is
+    null; ``url`` nullability follows the input."""
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType(),
+                          pages.schema["url"].nullable),
+            T.StructField("model", T.StringType(), False),
+            T.StructField("content_kind", T.StringType(), False),
+            T.StructField("plaintext", T.StringType(), True),
+            T.StructField("block_count", T.IntegerType(), False),
+            T.StructField("error", T.StringType(), True),
+            T.StructField("bytes_in", T.LongType(), False),
+            T.StructField("wall_ns", T.LongType(), False),
+        ]
+    )
+    return map_records(
+        pages.select("url", "html", kinds.alias("content_kind")),
+        _page_kernel(models), schema,
+    )
 
 
 def extract_answers(
@@ -344,30 +231,29 @@ def extract_answers(
     """pages -> answers table (url, model, plaintext, block_count, error).
 
     Decodes each page once and runs every requested model on it inside
-    the one raw-Arrow kernel (`_run_extractors`), which always emits
-    answer rows plus per-partition lineage rows in one stream; both
-    modes run that same kernel and split its output with a filter.
-    Every page is read as HTML (a ``%PDF-`` in its first KB does not
-    route it; that is `extract_mixed`'s job).  A `Vote` among
-    ``models`` is an ensemble over the same page's answers.  A failed
-    (page, model) reads ``plaintext=''``, ``error=True``.
+    the one extraction kernel (`_page_kernel`).  Every page is read as
+    HTML (a ``%PDF-`` in its first KB does not route it; that is
+    `extract_mixed`'s job).  A `Vote` among ``models`` is an ensemble
+    over the same page's answers.  A failed (page, model) reads
+    ``plaintext=''``, ``error=True``.
 
-    Without lineage the answers are the ``kind=0`` rows, nothing is
-    persisted.  With ``with_lineage=True`` returns ``(answers,
-    lineage)``; both sides are filters over the combined frame, which is
-    PERSISTED here so consuming answers and then lineage runs the
-    expensive extraction kernel ONCE (and the lineage wall-time stats
-    describe the same execution the answers came from).  The cache is
+    With ``with_lineage=True`` returns ``(answers, lineage)``.  The
+    kernel's rows, tagged with ``spark_partition_id()`` right above the
+    kernel, are PERSISTED so consuming answers and then lineage runs the
+    expensive kernel ONCE (and the lineage wall times describe the same
+    execution the answers came from).  Lineage is a groupBy over those
+    rows, one row per (partition, model) that saw a page: ``snapshot_id,
+    partition_id, model, extractor_version, docs_in, docs_out, errors,
+    block_count, bytes_in, wall_ms`` (north_rule).  The cache is
     released by Spark's context cleaner once both frames are garbage
     collected; callers wanting explicit control can ``unpersist`` via
     either frame's lineage.
     """
-    combined = _extract_combined(
-        pages, models or list(EXTRACTORS), snapshot_id, F.lit("html")
-    )
+    rows = _extract_pages(pages, models or list(EXTRACTORS), F.lit("html"))
     if with_lineage:
-        combined = combined.persist()
-    answers = combined.filter(F.col("kind") == 0).select(
+        rows = rows.withColumn("partition_id", F.spark_partition_id()) \
+            .persist()
+    answers = rows.select(
         "url", "model",
         F.coalesce("plaintext", F.lit("")).alias("plaintext"),
         "block_count",
@@ -375,11 +261,19 @@ def extract_answers(
     )
     if not with_lineage:
         return answers
-    lineage = combined.filter(F.col("kind") == 1).select(
-        "snapshot_id", "partition_id", "model",
-        "extractor_version", "docs_in", "docs_out", "errors",
-        F.col("block_count").cast("long").alias("block_count"),
-        "bytes_in", "wall_ms",
+    lineage = rows.groupBy("partition_id", "model").agg(
+        F.count("*").alias("docs_in"),
+        F.count_if(F.col("plaintext") != "").alias("docs_out"),
+        F.count("error").alias("errors"),
+        F.sum("block_count").alias("block_count"),
+        F.sum("bytes_in").alias("bytes_in"),
+        F.expr("sum(wall_ns) div 1000000").alias("wall_ms"),
+    ).select(
+        F.lit(snapshot_id).cast("long").alias("snapshot_id"),
+        "partition_id", "model",
+        F.lit(EXTRACTOR_VERSION).alias("extractor_version"),
+        "docs_in", "docs_out", "errors", "block_count", "bytes_in",
+        "wall_ms",
     )
     return answers, lineage
 
@@ -687,9 +581,6 @@ def extract_mixed(pages: DataFrame,
     shuffle-free."""
     ctype = (F.col("content_type") if "content_type" in pages.columns
              else F.lit(None).cast("string"))
-    combined = _extract_combined(
-        pages, [html_model], 0, content_kind(F.col("html"), ctype)
-    )
-    return combined.filter(F.col("kind") == 0).select(
-        "url", F.col("content_kind").alias("kind"), "plaintext", "error"
-    )
+    return _extract_pages(
+        pages, [html_model], content_kind(F.col("html"), ctype)
+    ).select("url", F.col("content_kind").alias("kind"), "plaintext", "error")

@@ -252,6 +252,15 @@ def _parse_headers(block: bytes) -> dict[str, str]:
     return headers
 
 
+def _decimal_length(value: str, what: str) -> int:
+    """A Content-Length value: ASCII decimal digits only.  ``int()``
+    alone also takes a sign, underscores and non-ASCII digits, and a
+    negative length would slice a phantom body."""
+    if not (value.isascii() and value.isdigit()):
+        raise WarcError(f"{what} {value[:30]!r}")
+    return int(value)
+
+
 def _take_record(buf: bytes, pos: int) -> tuple[dict, bytes, int] | None:
     """Parse one WARC record at ``pos``; returns (headers, payload,
     next_pos) or None if ``buf`` holds no complete record yet."""
@@ -263,10 +272,8 @@ def _take_record(buf: bytes, pos: int) -> tuple[dict, bytes, int] | None:
         raise WarcError(
             f"record at {pos} does not start with WARC/: {head[:20]!r}")
     headers = _parse_headers(buf[pos + head.find(b"\r\n") + 2:head_end])
-    try:
-        length = int(headers["content-length"])
-    except (KeyError, ValueError) as e:
-        raise WarcError(f"record at {pos}: bad Content-Length") from e
+    length = _decimal_length(headers.get("content-length", ""),
+                             f"record at {pos}: bad Content-Length")
     body_start = head_end + 4
     next_pos = body_start + length + 4  # payload + CRLF CRLF
     if len(buf) < next_pos:
@@ -408,6 +415,9 @@ def iter_warc_records(raw: bytes) -> Iterator[tuple[dict, bytes]]:
         view[i:i + (1 << 20)] for i in range(0, len(raw), 1 << 20))
 
 
+_HEX_DIGITS = b"0123456789abcdefABCDEF"
+
+
 def _dechunk(body: bytes) -> bytes:
     out = bytearray()
     pos = 0
@@ -416,10 +426,10 @@ def _dechunk(body: bytes) -> bytes:
         if eol == -1:
             raise WarcError("truncated chunked body")
         size_tok = body[pos:eol].split(b";")[0].strip()
-        try:
-            size = int(size_tok, 16)
-        except ValueError as e:
-            raise WarcError(f"bad chunk size {size_tok!r}") from e
+        # hex digits only: int(_, 16) also takes a sign, "0x" and "_"
+        if not size_tok or size_tok.strip(_HEX_DIGITS):
+            raise WarcError(f"bad chunk size {size_tok[:30]!r}")
+        size = int(size_tok, 16)
         if size == 0:
             return bytes(out)
         start = eol + 2
@@ -447,13 +457,8 @@ def parse_http_response(payload: bytes) -> tuple[int, dict[str, str], bytes]:
     if "chunked" in headers.get("transfer-encoding", "").lower():
         body = _dechunk(body)
     elif "content-length" in headers:
-        try:
-            length = int(headers["content-length"])
-        except ValueError as e:
-            raise WarcError(
-                f"bad http Content-Length {headers['content-length'][:30]!r}"
-            ) from e
-        body = body[:length]
+        body = body[:_decimal_length(headers["content-length"],
+                                     "bad http Content-Length")]
     return status, headers, body
 
 
