@@ -20,13 +20,18 @@ from web_content_extraction_benchmark_spark.extractors.density import (
     NEGATIVE_CLASS_RE,
     POSITIVE_CLASS_RE,
     Block,
+    classify,
+    main_content_with_blocks_from_tree,
     segment_blocks,
 )
 from web_content_extraction_benchmark_spark.sources.pages import (
     build_page_html,
     encode_page_html,
 )
-from web_content_extraction_benchmark_spark.textutils import ws_tokens
+from web_content_extraction_benchmark_spark.textutils import (
+    squeeze_ws,
+    ws_tokens,
+)
 
 
 def _parents(root):
@@ -185,6 +190,39 @@ def test_segment_blocks_matches_bottom_up_oracle_on_fixture_pages(sf_dir):
     assert n_blocks > len(docs)  # the corpus really has blocks to compare
 
 
+def oracle_main_content(root):
+    """``main_content`` rebuilt from the blocks: the classified blocks'
+    squeezed text, newline-joined, with char-offset spans."""
+    kept = [(b.tag, squeeze_ws(b.raw_text))
+            for b in segment_blocks(root) if classify(b)]
+    spans, offset = [], 0
+    for tag, text in kept:
+        spans.append((offset, offset + len(text), tag, text))
+        offset += len(text) + 1
+    return "\n".join(text for _, text in kept), spans
+
+
+@pytest.mark.parametrize("name", sorted(EDGE_PAGES))
+def test_main_content_matches_block_oracle_on_edge_pages(name):
+    root = parse_html(EDGE_PAGES[name])
+    assert main_content_with_blocks_from_tree(root) == \
+        oracle_main_content(root)
+
+
+def test_main_content_matches_block_oracle_on_fixture_pages(sf_dir):
+    docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
+    n_spans = 0
+    for row in docs.itertuples():
+        doc_id = int(row.doc_id)
+        html = decode_html(encode_page_html(
+            doc_id, build_page_html(doc_id, row.source, row.text)))
+        root = parse_html(html)
+        text, spans = main_content_with_blocks_from_tree(root)
+        assert (text, spans) == oracle_main_content(root), doc_id
+        n_spans += len(spans)
+    assert n_spans > len(docs)
+
+
 def test_edge_pages_exercise_the_context():
     """The edge pages reach every branch of the carried context."""
     blocks = [b for html in EDGE_PAGES.values()
@@ -204,3 +242,7 @@ def test_nesting_bomb_still_raises_recursion_error():
         segment_blocks(root)
     with pytest.raises(RecursionError):
         oracle_segment_blocks(root)
+    with pytest.raises(RecursionError):
+        main_content_with_blocks_from_tree(root)
+    with pytest.raises(RecursionError):
+        oracle_main_content(root)

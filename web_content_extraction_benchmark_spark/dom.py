@@ -177,25 +177,33 @@ class _TreeBuilder(HTMLParser):
 
 
 # ---------------------------------------------------------------------------
-# Fast path: single-regex tokenizer.  ~3x the stdlib HTMLParser on typical
-# pages (the parse dominates extraction cost).  Produces the same tree as
+# Fast path: one regex over the whole page, about 2.3x the stdlib
+# HTMLParser (540 vs 1260 us/page on perfbench's extract_main seed-1
+# pages, CPython 3.11; the parse is most of the extraction cost).  Each match
+# is one token, and its capturing groups say what the token is: an end-tag
+# name (group 1), a start-tag name and the attribute text after it (groups
+# 2 and 3), a text run (group 4) or a stray '<' (group 5); comments, CDATA,
+# doctype and PIs capture nothing and are dropped.  The loop dispatches on
+# ``m.lastindex``, so no token is matched twice.  Produces the same tree as
 # _TreeBuilder for well-formed and mildly-dirty markup; equivalence is
-# pinned by tests/test_dom.py::test_fast_parser_equivalence and the golden
-# extraction files.  Any parse exception falls back to the stdlib path.
+# pinned by tests/test_fast_parser.py, tests/test_tokenizer_oracle.py and
+# the golden extraction files.  Any parse exception falls back to the
+# stdlib path.
 # ---------------------------------------------------------------------------
 
 _TOKEN_RE = re.compile(
     r"<!--.*?(?:-->|$)"                       # comments
     r"|<!\[CDATA\[.*?(?:\]\]>|$)"             # CDATA sections
     r"|<[!?][^>]*>"                            # doctype / PI
-    r"|</[a-zA-Z][^>]*>"                       # end tags
-    r"|<[a-zA-Z](?:[^>\"']|\"[^\"]*\"|'[^']*')*>"  # start tags (quoted > safe)
-    r"|[^<]+"                                  # text runs
-    r"|<",                                     # stray '<' -> text
+    r"|</([a-zA-Z][a-zA-Z0-9:-]*)[^>]*>"       # end tags: 1 = name
+    r"|<([a-zA-Z][a-zA-Z0-9:-]*)"              # start tags: 2 = name,
+    r"((?:[^>\"']|\"[^\"]*\"|'[^']*')*)>"        # 3 = attrs (quoted > safe)
+    r"|([^<]+)"                                # text runs: 4
+    r"|(<)",                                   # stray '<' -> text: 5
     re.DOTALL,
 )
+_END_TAG, _TEXT_RUN = 1, 4  # m.lastindex of an end tag; >= 4 is text
 
-_TAG_NAME_RE = re.compile(r"</?([a-zA-Z][a-zA-Z0-9:-]*)")
 _ATTR_RE = re.compile(
     r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)"
     r"(?:\s*=\s*(\"[^\"]*\"|'[^']*'|[^\s>]*))?"
@@ -231,13 +239,13 @@ def _parse_attrs(raw: str) -> dict:
 def parse_html_fast(html: str) -> Node:
     root = Node("#document")
     open_stack = [root]
+    children = root.children  # the open element's children
     pos = 0
     length = len(html)
-    # locally-bound method lookups + bare m.group() (the no-arg form
-    # skips the index dispatch — the CLAUDE.md PDF-lexer finding, r9):
-    # measured 57 -> 44 us/page on the bench corpus, tree-equivalent.
-    tag_match = _TAG_NAME_RE.match
     finditer = _TOKEN_RE.finditer
+    # Nodes are built by ``__new__`` plus slot stores, which skips
+    # ``__init__``'s defaults; each still gets its own attrs and children.
+    new = Node.__new__
 
     # finditer scans the token stream in one C-level pass (the regex is
     # total, so consecutive matches are gap-free); only a rawtext skip
@@ -245,50 +253,51 @@ def parse_html_fast(html: str) -> Node:
     while pos < length:
         jumped = False
         for match in finditer(html, pos):
-            token = match.group()
-            pos = match.end()
-            first = token[0]
-            if first != "<" or len(token) == 1:
-                # text run (or stray '<')
-                text = unescape(token) if "&" in token else token
-                open_stack[-1].children.append(Node(None, text=text))
-                continue
-            second = token[1]
-            if second in "!?":
+            kind = match.lastindex
+            if kind is None:
                 continue  # comment / doctype / PI / CDATA: dropped
-            if second == "/":
-                name_match = tag_match(token)
-                if not name_match:
-                    continue
-                tag = name_match.group(1).lower()
+            if kind >= _TEXT_RUN:
+                text = match[kind]
+                node = new(Node)
+                node.tag = None
+                node.attrs = {}
+                node.children = []
+                node.text = unescape(text) if "&" in text else text
+                children.append(node)
+                continue
+            if kind == _END_TAG:
+                tag = match[1].lower()
                 if tag in VOID_ELEMENTS:
                     continue
                 for i in range(len(open_stack) - 1, 0, -1):
                     if open_stack[i].tag == tag:
                         del open_stack[i:]
+                        children = open_stack[-1].children
                         break
                 continue
-            name_match = tag_match(token)
-            if not name_match:
-                continue
-            tag = name_match.group(1).lower()
-            rest = token[name_match.end():-1]
+            tag = match[2].lower()
+            rest = match[3]
             self_closing = rest.endswith("/")
             if self_closing:
                 rest = rest[:-1]
-            node = Node(tag)
-            if rest and not rest.isspace():
-                node.attrs = _parse_attrs(rest)
+            node = new(Node)
+            node.tag = tag
+            node.attrs = (_parse_attrs(rest) if rest and not rest.isspace()
+                          else {})
+            node.children = []
+            node.text = ""
             closers = _IMPLICIT_CLOSE.get(tag)
             if closers:
                 while len(open_stack) > 1 and open_stack[-1].tag in closers:
                     open_stack.pop()
-            open_stack[-1].children.append(node)
+                children = open_stack[-1].children
+            children.append(node)
             if tag in VOID_ELEMENTS or self_closing:
                 continue
             if tag in _RAWTEXT:
                 # literal content until the matching close tag (stdlib
                 # CDATA-mode equivalent regex, see _RAWTEXT_CLOSE)
+                pos = match.end()
                 m = _RAWTEXT_CLOSE[tag].search(html, pos)
                 if m is None:
                     # unterminated rawtext: stdlib drops buffered content
@@ -301,6 +310,7 @@ def parse_html_fast(html: str) -> Node:
                 jumped = True
                 break
             open_stack.append(node)
+            children = node.children
         if not jumped:
             break
     return root

@@ -28,6 +28,9 @@ from pyspark.sql import types as T
 BATCH_ROWS = 256
 
 
+_heap_frozen = False
+
+
 def _freeze_worker_heap() -> None:
     """Take the Python worker's import heap out of the cyclic collector's
     view, once per worker process.  A kernel's per-record garbage is
@@ -35,8 +38,12 @@ def _freeze_worker_heap() -> None:
     collection would only rescan the long-lived objects the worker
     imported (tens of thousands); ``gc.freeze`` moves them to the
     permanent generation.  The collector stays enabled for whatever
-    cycles a later task makes."""
-    if gc.get_freeze_count() == 0:
+    cycles a later task makes.  The once-check is a module flag:
+    ``gc.get_freeze_count()`` walks the whole permanent generation, which
+    cost milliseconds on every task of a reused worker."""
+    global _heap_frozen
+    if not _heap_frozen:
+        _heap_frozen = True
         gc.collect()
         gc.freeze()
 
